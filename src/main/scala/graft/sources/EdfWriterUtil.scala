@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.{ByteBuffer, ByteOrder}
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
@@ -20,8 +18,8 @@ object EdfWriterUtil {
   def blockBytes(width: Int, height: Int, dataType: String,
                  littleEndian: Boolean, frame: Array[Double],
                  imageIdx: Int): Array[Byte] = {
-    val bpp = EdfSchema.bytesPerPixel(dataType)
-    val size = width.toLong * height * bpp
+    val pixel = EdfSchema.pixelType(dataType)
+    val size = width.toLong * height * pixel.bytes
     require(frame.length == width * height,
       s"frame length ${frame.length} != ${width}x$height")
     require(size <= Int.MaxValue,
@@ -42,20 +40,7 @@ object EdfWriterUtil {
     if (pad != EdfSchema.HeaderChunk) body.append(" " * pad)
     body.append(tail)
     val header = body.toString.getBytes("ISO-8859-1")
-    val fb = ByteBuffer.allocate(size.toInt)
-      .order(if (littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
-    dataType match {
-      case "UnsignedByte" => frame.foreach(v => fb.put((v.toLong & 0xFF).toByte))
-      case "SignedByte" => frame.foreach(v => fb.put(v.toByte))
-      case "UnsignedShort" => frame.foreach(v => fb.putShort((v.toLong & 0xFFFF).toShort))
-      case "SignedShort" => frame.foreach(v => fb.putShort(v.toShort))
-      case "UnsignedInteger" | "UnsignedLong" => frame.foreach(v => fb.putInt((v.toLong & 0xFFFFFFFFL).toInt))
-      case "SignedInteger" | "SignedLong" => frame.foreach(v => fb.putInt(v.toInt))
-      case "FloatValue" | "Float" => frame.foreach(v => fb.putFloat(v.toFloat))
-      case "DoubleValue" => frame.foreach(v => fb.putDouble(v))
-      case d => throw new IllegalArgumentException(s"unsupported EDF DataType '$d'")
-    }
-    header ++ fb.array()
+    header ++ pixel.encode(frame, littleEndian)
   }
 
   /** Write one block per frame. `dataType` uses the EDF names

@@ -21,7 +21,8 @@ object SpeWriterUtil {
     */
   def write(path: String, conf: Configuration, width: Int, height: Int,
             datatype: Int, expSec: Double, frames: Seq[Array[Double]]): Unit = {
-    val h = SpeSchema.SpeHeader(width, height, datatype, frames.size, expSec)
+    val pixel = SpeSchema.PixelTypes.getOrElse(datatype,
+      throw new IllegalArgumentException(s"unsupported SPE datatype $datatype"))
     frames.foreach(f => require(f.length == width * height,
       s"frame length ${f.length} != ${width}x$height"))
     val header = ByteBuffer.allocate(SpeSchema.HeaderBytes).order(ByteOrder.LITTLE_ENDIAN)
@@ -35,21 +36,7 @@ object SpeWriterUtil {
     val out = fs.create(p, true)
     try {
       out.write(header.array())
-      val fb = ByteBuffer.allocate(h.frameBytes.toInt).order(ByteOrder.LITTLE_ENDIAN)
-      frames.foreach { f =>
-        fb.clear()
-        datatype match {
-          case 0 => f.foreach(v => fb.putFloat(v.toFloat))
-          case 1 => f.foreach(v => fb.putInt(v.toInt))
-          case 2 => f.foreach(v => fb.putShort(v.toShort))
-          case 3 => f.foreach(v => fb.putShort((v.toLong & 0xFFFF).toShort))
-          case 5 => f.foreach(v => fb.putDouble(v))
-          case 6 => f.foreach(v => fb.put((v.toLong & 0xFF).toByte))
-          case 8 => f.foreach(v => fb.putInt((v.toLong & 0xFFFFFFFFL).toInt))
-          case d => throw new IllegalArgumentException(s"unsupported SPE datatype $d")
-        }
-        out.write(fb.array())
-      }
+      frames.foreach(f => out.write(pixel.encode(f, littleEndian = true)))
     } finally out.close()
   }
 }

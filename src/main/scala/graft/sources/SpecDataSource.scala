@@ -13,6 +13,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
@@ -384,92 +385,28 @@ object SpecIndex {
     } finally in.close()
   }
 
-  /** Index with sidecar caching: a valid `<file>.specidx` (matching
-    * length+mtime+content fingerprint) short-circuits the scan pass;
-    * otherwise the file is indexed and the stale sidecar is
-    * (best-effort) overwritten in place — that rewrite IS the cache
-    * eviction: one sidecar per spec file, replaced atomically whenever
-    * any validity check fails, so sidecars never accumulate. A sidecar
-    * orphaned by deleting its spec file is inert (nothing reads it).
-    */
-  def indexWithCache(meta: SpecFileMeta, conf: Configuration, cache: Boolean): SpecFileIndex = {
-    if (!cache) return indexFile(meta, conf)
-    readSidecar(meta, conf).getOrElse {
-      val idx = indexFile(meta, conf)
-      scala.util.Try(writeSidecar(meta, idx, conf)) // read-only dirs are fine
-      idx
-    }
-  }
-
-  private def sidecarPath(meta: SpecFileMeta) = new Path(meta.path + SidecarSuffix)
-
-  /** CRC32 of the file's first and last 4 KiB. (length, mtime) alone
-    * can validate a stale sidecar: a file rewritten to the same length
-    * within the filesystem's mtime granularity (1 s on ext4/HDFS) is
-    * indistinguishable by metadata. 8 KiB of content is cheap next to
-    * the full-scan pass the sidecar avoids, and any header edit, scan
-    * renumber, or tail append moves one of the two windows.
-    */
-  def fingerprint(meta: SpecFileMeta, conf: Configuration): Long = {
-    val p = new Path(meta.path)
-    val fs = p.getFileSystem(conf)
-    val crc = new java.util.zip.CRC32
-    val in = fs.open(p)
-    try {
-      val head = new Array[Byte](math.min(4096L, meta.len).toInt)
-      in.readFully(0L, head)
-      crc.update(head)
-      if (meta.len > 4096) {
-        val tailStart = math.max(4096L, meta.len - 4096)
-        val tail = new Array[Byte]((meta.len - tailStart).toInt)
-        in.readFully(tailStart, tail)
-        crc.update(tail)
-      }
-      crc.getValue
-    } finally in.close()
-  }
-
-  /** Sidecar wire format (one record per line, tab-separated):
-    *   specidx\tv3\t<len>\t<mtime>\t<crc of first+last 4KiB>
+  /** Index with the `<file>.specidx` sidecar cache (see
+    * [[IndexSidecar]]): a valid sidecar short-circuits the scan pass.
+    * Records, tab-separated:
     *   O\tname1\tname2...
     *   S\t<scanNo>\t<startByte>\t<endByte>\t<nPoints>
     * Older sidecars (v1 without fingerprint, v2 without per-scan
-    * point counts) fail the version check and are reindexed +
-    * rewritten as v3 — the in-place rewrite is the migration.
+    * point counts, v3 without the record count) fail the version check
+    * and are reindexed + rewritten as v4 — the in-place rewrite is the
+    * migration.
     */
-  def readSidecar(meta: SpecFileMeta, conf: Configuration): Option[SpecFileIndex] =
-    scala.util.Try {
-      val p = sidecarPath(meta)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) return None
-      val in = fs.open(p)
-      val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-      val lines = text.linesIterator.toArray
-      val head = lines.head.split('\t')
-      if (head.length != 5 || head(0) != "specidx" || head(1) != "v3" ||
-          head(2).toLong != meta.len || head(3).toLong != meta.mtime ||
-          head(4).toLong != fingerprint(meta, conf)) return None
-      val motors = lines.collectFirst { case l if l.startsWith("O\t") => l.split('\t').drop(1) }
-        .getOrElse(Array.empty[String])
-      val recs = lines.collect { case l if l.startsWith("S\t") =>
-        val t = l.split('\t'); ((t(1).toLong, t(2).toLong, t(3).toLong), t(4).toLong)
-      }.toSeq
-      Some(SpecFileIndex(meta.path, motors, recs.map(_._1), recs.map(_._2)))
-    }.toOption.flatten
-
-  def writeSidecar(meta: SpecFileMeta, idx: SpecFileIndex, conf: Configuration): Unit = {
-    val p = sidecarPath(meta)
-    val fs = p.getFileSystem(conf)
-    val out = fs.create(p, true)
-    try {
-      val sb = new StringBuilder
-      sb.append(s"specidx\tv3\t${meta.len}\t${meta.mtime}\t${fingerprint(meta, conf)}\n")
-      if (idx.motorNames.nonEmpty) sb.append("O\t").append(idx.motorNames.mkString("\t")).append('\n')
-      idx.scans.zip(idx.points).foreach { case ((no, s, e), np) =>
-        sb.append(s"S\t$no\t$s\t$e\t$np\n") }
-      out.write(sb.toString.getBytes(StandardCharsets.UTF_8))
-    } finally out.close()
-  }
+  def indexWithCache(meta: SpecFileMeta, conf: Configuration, cache: Boolean): SpecFileIndex =
+    IndexSidecar.cached(meta, conf, cache, SidecarSuffix, "v4")(indexFile(meta, conf))(
+      idx => (if (idx.motorNames.isEmpty) Nil else Seq(("O" +: idx.motorNames).mkString("\t"))) ++
+        idx.scans.zip(idx.points).map { case ((no, s, e), np) => s"S\t$no\t$s\t$e\t$np" },
+      lines => {
+        val motors = lines.collectFirst { case l if l.startsWith("O\t") => l.split('\t').drop(1) }
+          .getOrElse(Array.empty[String])
+        val recs = lines.collect { case l if l.startsWith("S\t") =>
+          val t = l.split('\t'); ((t(1).toLong, t(2).toLong, t(3).toLong), t(4).toLong)
+        }
+        SpecFileIndex(meta.path, motors, recs.map(_._1), recs.map(_._2))
+      })
 }
 
 final case class SpecInputPartition(path: String, scanNo: Long,
@@ -564,17 +501,11 @@ class SpecScanBuilder(paths: Seq[String], keepLast: Boolean = false,
     * one task per file, collecting only the offset tables (metadata,
     * not data) — the driver never streams file bytes. */
   private def computeIndexes(): Seq[SpecFileIndex] = {
-    val spark = SparkSession.active
-    val hconf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    val files = SpecSchema.expand(paths, hconf.value)
+    val conf = SparkSession.active.sessionState.newHadoopConf()
+    val files = SpecSchema.expand(paths, conf)
       .filter(f => fileEq.forall(_.contains(f.path)))
-    val cache = indexCache
-    if (files.size <= SpecIndex.ParallelThreshold)
-      files.map(SpecIndex.indexWithCache(_, hconf.value, cache))
-    else
-      spark.sparkContext.parallelize(files, files.size)
-        .map(SpecIndex.indexWithCache(_, hconf.value, cache))
-        .collect().toSeq.sortBy(_.path)
+    val cache = indexCache // the task closure must not capture this builder
+    FrameStack.perFile(files, conf, SpecIndex.ParallelThreshold)(SpecIndex.indexWithCache(_, _, cache))
   }
 
   /** One ((scanNo, start, end), nPoints) per scan block the read
@@ -588,7 +519,7 @@ class SpecScanBuilder(paths: Seq[String], keepLast: Boolean = false,
     base.filter { case ((no, _, _), _) => scanWanted(no) }
   }
 
-  // Pushed aggregate tags — the SPE/EDF/TIFF parity surface (#442):
+  // Pushed aggregate tags — the SPE/EDF/TIFF parity surface:
   // ungrouped COUNT(*) / MIN / MAX(scan) answer from the index pass
   // alone (sidecar-cached — no data bytes stream). Partial semantics;
   // Spark final-merges. Spark only attempts aggregate pushdown when
@@ -596,24 +527,15 @@ class SpecScanBuilder(paths: Seq[String], keepLast: Boolean = false,
   // every filter residual, so the agg path serves the unfiltered
   // corpus-audit queries ("how many points / which scan range").
   private var aggTags: Option[Seq[String]] = None
-  import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
   override def pushAggregation(agg: Aggregation): Boolean = {
-    if (agg.groupByExpressions.nonEmpty) return false
-    val tags = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => Some("count")
-      case m: Min if m.column.describe() == "scan" => Some("min_scan")
-      case m: Max if m.column.describe() == "scan" => Some("max_scan")
-      case _ => None
-    }
-    if (tags.exists(_.isEmpty)) return false
-    aggTags = Some(tags.map(_.get))
-    true
+    aggTags = IndexAggScan.tags(agg, "scan")
+    aggTags.isDefined
   }
 
   override def build(): Scan = aggTags match {
-    case Some(tags) => new SpecAggScan(tags,
+    case Some(tags) => new IndexAggScan(tags,
       () => computeIndexes().flatMap(idx =>
-        wantedOf(idx).map { case ((no, _, _), np) => (no, np) }))
+        wantedOf(idx).map { case ((no, _, _), np) => (no, no, np) }))
     case None => rowScan()
   }
 
@@ -635,41 +557,6 @@ class SpecScanBuilder(paths: Seq[String], keepLast: Boolean = false,
         new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
         required.fieldNames, emitLast)
   }
-}
-
-final case class SpecAggPartition(values: Array[Any]) extends InputPartition
-
-/** Index-only aggregate scan: one partial row computed entirely from
-  * the (sidecar-cached) scan index — COUNT(*) sums the per-scan point
-  * counts, MIN/MAX(scan) read the scan numbers; no data bytes are
-  * ever streamed. Mirrors the SPE/TIFF agg-scan contract.
-  */
-class SpecAggScan(tags: Seq[String], planned: () => Seq[(Long, Long)])
-    extends Scan with Batch {
-  override def readSchema(): StructType =
-    StructType(tags.map(t => StructField(s"agg_$t", LongType, nullable = t != "count")))
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] = {
-    val scans = planned() // one (scanNo, nPoints) per wanted scan block
-    val values: Array[Any] = tags.map {
-      case "count" => scans.map(_._2).sum
-      case "min_scan" => if (scans.isEmpty) null else scans.map(_._1).min
-      case "max_scan" => if (scans.isEmpty) null else scans.map(_._1).max
-    }.toArray
-    Array(SpecAggPartition(values))
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new PartitionReader[InternalRow] {
-          private var emitted = false
-          private val row = InternalRow.fromSeq(
-            p.asInstanceOf[SpecAggPartition].values.toSeq)
-          override def next(): Boolean = { val r = !emitted; emitted = true; r }
-          override def get(): InternalRow = row
-          override def close(): Unit = ()
-        }
-    }
 }
 
 /** Per-file committed byte positions — the stream's offset. */

@@ -1,21 +1,13 @@
 package graft.sources
 
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.ByteBuffer
 import java.util
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
+import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 reader for TIFF detector images — the third
   * detector-container source next to SPE and EDF, covering the most
@@ -31,56 +23,52 @@ import org.apache.spark.unsafe.types.UTF8String
   * multi-page (a chained-IFD stack = a frame series) or one frame per
   * file (a directory read composes the series).
   *
-  * Cluster model mirrors SPE/EDF: planning walks ONLY the 8-byte
-  * header and the IFD chain — bounded positional reads of tag
-  * tables, never pixel data; a frame descriptor carries its strip
-  * offsets/byte counts so readers seek straight to their own strips.
-  * Partitions cover contiguous frame runs capped at
-  * `maxPartitionBytes`; `frame` equality/range/IN filters prune
-  * partitions before any data byte is read, and a `pixels`-pruned
-  * projection never opens the data section at all.
+  * Planning, pushdown, partitioning and tails are the frame-stack
+  * core's ([[FrameScanBuilder]], [[FrameMicroBatchStream]]); the
+  * header pass walks ONLY the 8-byte header and the IFD chain —
+  * bounded positional reads of tag tables, never pixel data — and a
+  * frame descriptor carries its strip offsets/byte counts so readers
+  * seek straight to their own strips.
   *
   * Schema (one row per frame/page):
   *   file string, frame long, width int, height int, n_frames long,
-  *   datatype string (uint8/uint16/int16/uint32/int32/float32/float64),
-  *   byte_order string ("II"|"MM"), pixels array<double> (row-major).
+  *   datatype string (uint8/int8/uint16/int16/uint32/int32/float32/
+  *   float64), byte_order string ("II"|"MM"), pixels array<double>
+  *   (row-major).
   */
-class TiffDataSource extends TableProvider with DataSourceRegister {
+class TiffDataSource extends FrameStackSource {
   override def shortName(): String = "tiff"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = TiffSchema.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table = {
-    val paths = Option(properties.get("paths"))
-      .map(p => SpecSchema.parseJsonPaths(p))
-      .orElse(Option(properties.get("path")).map(Seq(_)))
-      .getOrElse(throw new IllegalArgumentException("tiff reader needs a path"))
-    new TiffTable(paths, Option(properties.get("maxPartitionBytes"))
-      .map(_.toLong).getOrElse(SpeSchema.DefaultMaxPartitionBytes))
-  }
+  override protected def format(options: util.Map[String, String]): StackFormat = TiffSchema
 }
 
-object TiffSchema {
-  val schema: StructType = StructType(Seq(
-    StructField("file", StringType),
-    StructField("frame", LongType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("n_frames", LongType),
+object TiffSchema extends StackFormat {
+  override val extraColumns: Seq[StructField] = Seq(
     StructField("datatype", StringType),
-    StructField("byte_order", StringType),
-    StructField("pixels", ArrayType(DoubleType))))
+    StructField("byte_order", StringType))
+
+  /** (SampleFormat, BitsPerSample) pairs with a pixel type; anything
+    * else — 64-bit integers, 16-bit floats — is rejected by the walk. */
+  val PixelTypes: Map[(Int, Int), PixelType] = Map(
+    (1, 8) -> PixelType.U8, (2, 8) -> PixelType.I8,
+    (1, 16) -> PixelType.U16, (2, 16) -> PixelType.I16,
+    (1, 32) -> PixelType.U32, (2, 32) -> PixelType.I32,
+    (3, 32) -> PixelType.F32, (3, 64) -> PixelType.F64)
 
   /** One page's decode plan: everything a reader needs to fetch and
     * interpret its strips without reopening the IFD chain. */
-  final case class TiffFrame(width: Int, height: Int, bits: Int,
-                             sampleFormat: Int, littleEndian: Boolean,
-                             stripOffsets: Seq[Long], stripByteCounts: Seq[Long]) {
-    def dataBytes: Long = stripByteCounts.sum
-    def datatypeName: String = (sampleFormat, bits) match {
-      case (3, 32) => "float32"
-      case (3, 64) => "float64"
-      case (2, b) => s"int$b"
-      case (_, b) => s"uint$b"
+  final case class TiffFrame(width: Int, height: Int, pixel: PixelType, littleEndian: Boolean,
+                             stripOffsets: Seq[Long], stripByteCounts: Seq[Long]) extends StackFrame {
+    override def dataBytes: Long = stripByteCounts.sum
+    override def read(in: FSDataInputStream, buf: Array[Byte]): Unit = {
+      var at = 0
+      stripOffsets.zip(stripByteCounts).foreach { case (off, cnt) =>
+        in.readFully(off, buf, at, cnt.toInt)
+        at += cnt.toInt
+      }
+    }
+    override def extra(column: String): Any = column match {
+      case "datatype" => pixel.name
+      case "byte_order" => if (littleEndian) "II" else "MM"
     }
   }
 
@@ -102,23 +90,11 @@ object TiffSchema {
     case t => throw new IllegalArgumentException(s"unsupported TIFF field type $t")
   }
 
-  /** [[walk]] tolerating a LIVE file: a truncated or inconsistent
-    * IFD/strip (a page mid-write) STOPS the walk and returns the
-    * complete pages so far, instead of throwing. A TIFF appender
-    * patches the previous last IFD's next-pointer when it adds a
-    * page, so — unlike the EDF block tail — there is no resume
-    * position to cache: the tail re-walks the chain (headers only)
-    * whenever the file length changes.
-    */
-  def walkLenient(path: String, conf: Configuration): Seq[TiffFrame] =
-    try walk(path, conf, lenient = true)
-    catch { case _: Throwable => Seq.empty }
-
   /** Walk the header + IFD chain with bounded positional reads; pixel
     * data is never touched. Returns one descriptor per page, in chain
     * order (= frame order). With `lenient`, a malformed/truncated
     * page stops the walk (returning complete pages) instead of
-    * throwing — the live-tail contract of [[walkLenient]].
+    * throwing — the live-tail contract of [[tail]].
     */
   def walk(path: String, conf: Configuration, lenient: Boolean = false): Seq[TiffFrame] = {
     val p = new Path(path)
@@ -134,7 +110,7 @@ object TiffSchema {
         case ('M', 'M') => false
         case _ => throw new IllegalArgumentException(s"$path: not a TIFF (bad byte-order mark)")
       }
-      val order = if (little) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
+      val order = PixelType.order(little)
       val hb = ByteBuffer.wrap(head).order(order)
       require((hb.getShort(2) & 0xFFFF) == 42, s"$path: not a TIFF (magic != 42)")
       var ifdOff = hb.getInt(4).toLong & 0xFFFFFFFFL
@@ -196,27 +172,26 @@ object TiffSchema {
         val fmt = one(TagSampleFormat, 1L).toInt
         require(comp == 1, s"$path: compressed TIFF (Compression=$comp) unsupported")
         require(spp == 1, s"$path: SamplesPerPixel=$spp unsupported (grayscale only)")
-        require(Set(8, 16, 32, 64).contains(bits), s"$path: BitsPerSample=$bits unsupported")
-        require(fmt >= 1 && fmt <= 3, s"$path: SampleFormat=$fmt unsupported")
-        require(fmt != 3 || bits >= 32, s"$path: float TIFF must be 32/64-bit")
+        val pixel = PixelTypes.getOrElse((fmt, bits),
+          throw err(path, s"SampleFormat=$fmt with BitsPerSample=$bits unsupported"))
         val offs = tagVals(TagStripOffsets).getOrElse(throw err(path, "missing StripOffsets"))
         val cnts = tagVals(TagStripByteCounts)
           .getOrElse(throw err(path, "missing StripByteCounts"))
         require(offs.size == cnts.size, s"$path: StripOffsets/StripByteCounts mismatch")
-        val expect = w.toLong * h * (bits / 8)
+        val expect = w.toLong * h * pixel.bytes
         require(cnts.sum == expect,
-          s"$path: strip bytes ${cnts.sum} != ${w}x$h x${bits / 8}")
+          s"$path: strip bytes ${cnts.sum} != ${w}x$h x${pixel.bytes}")
         require(expect <= Int.MaxValue,
           s"$path: TIFF page is $expect bytes (> 2 GiB unsupported)")
         offs.zip(cnts).foreach { case (o, c) =>
           require(o + c <= len, s"$path: strip [$o, ${o + c}) beyond EOF $len")
         }
-        frames += TiffFrame(w, h, bits, fmt, little, offs, cnts)
+        frames += TiffFrame(w, h, pixel, little, offs, cnts)
         ifdOff = bodyBuf.getInt(n * 12).toLong & 0xFFFFFFFFL
       } catch {
         // live tail: a page mid-write (or trailing garbage) ends the
         // walk at the last complete page
-        case e: Throwable => if (lenient) halt = true else throw e
+        case NonFatal(e) => if (lenient) halt = true else throw e
       }
       frames.toSeq
     } finally in.close()
@@ -224,353 +199,20 @@ object TiffSchema {
 
   private def err(path: String, msg: String) =
     new IllegalArgumentException(s"$path: $msg")
-}
 
-final case class TiffInputPartition(path: String, frameStart: Long, nFrames: Long,
-                                    frames: Seq[TiffSchema.TiffFrame]) extends InputPartition
+  override def index(meta: SpecFileMeta, conf: Configuration): FrameStack =
+    ListedStack(walk(meta.path, conf).toVector)
 
-class TiffTable(paths: Seq[String], maxPartBytes: Long) extends Table with SupportsRead {
-  override def name(): String = s"tiff(${paths.mkString(",")})"
-  override def schema(): StructType = TiffSchema.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new TiffScanBuilder(paths, maxPartBytes)
-}
-
-class TiffScanBuilder(paths: Seq[String], maxPartBytes: Long)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns
-    with SupportsPushDownAggregates {
-  private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = TiffSchema.schema
-  private var frameEq: Option[Set[Long]] = None
-  private var frameLo: Long = Long.MinValue
-  private var frameHi: Long = Long.MaxValue
-  // pushed aggregate tags: "count" | "min_frame" | "max_frame"
-  private var aggTags: Option[Seq[String]] = None
-
-  /** COUNT(*) / MIN(frame) / MAX(frame) with no grouping are answered
-    * from the PLANNING index alone — the header walk that happens
-    * anyway — so a whole-dataset frame census never opens a data
-    * section and emits ONE row instead of one per frame. Partial
-    * semantics: Spark still merges (sum/min/max), so multi-scan
-    * unions stay correct.
+  /** A TIFF appender writes the new page's strips + IFD, then PATCHES
+    * the previous last IFD's next-pointer, so (unlike the EDF block
+    * tail) there is no append-only resume position: each walk re-walks
+    * the whole IFD chain leniently — headers only; a page mid-write
+    * (dangling next-pointer, truncated IFD, strip beyond EOF) ends the
+    * walk at the last complete page and is retried on the next length
+    * change. Streamed rows report the batch's end offset (pages
+    * discovered so far) as `n_frames`, like the EDF tail.
     */
-  import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
-  private def tagOf(e: org.apache.spark.sql.connector.expressions.aggregate.AggregateFunc)
-      : Option[String] = e match {
-    case _: CountStar => Some("count")
-    case m: Min if m.column.describe() == "frame" => Some("min_frame")
-    case m: Max if m.column.describe() == "frame" => Some("max_frame")
-    case _ => None
-  }
-  override def pushAggregation(agg: Aggregation): Boolean = {
-    if (agg.groupByExpressions.nonEmpty) return false
-    val tags = agg.aggregateExpressions.toSeq.map(tagOf)
-    if (tags.exists(_.isEmpty)) return false
-    aggTags = Some(tags.map(_.get))
-    true
-  }
-
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // integral literals only; anything else stays residual (the EDF
-    // planning-robustness contract)
-    def asLOpt(v: Any): Option[Long] = v match {
-      case l: Long => Some(l); case i: Int => Some(i.toLong)
-      case s: Short => Some(s.toLong); case b: Byte => Some(b.toLong)
-      case _ => None
-    }
-    def asL(v: Any): Long = asLOpt(v).get
-    val (accepted, rest) = filters.partition {
-      case EqualTo("frame", v) => asLOpt(v).isDefined
-      case In("frame", vs) => vs != null && vs.forall(asLOpt(_).isDefined)
-      case GreaterThan("frame", v) => asLOpt(v).isDefined
-      case GreaterThanOrEqual("frame", v) => asLOpt(v).isDefined
-      case LessThan("frame", v) => asLOpt(v).isDefined
-      case LessThanOrEqual("frame", v) => asLOpt(v).isDefined
-      // frame is non-null by construction: accepting the inferred
-      // IsNotNull keeps it out of the residual (a residual blocks
-      // aggregate pushdown and costs a per-row filter for nothing)
-      case IsNotNull("frame") => true
-      case _ => false
-    }
-    def narrow(s: Set[Long]): Unit =
-      frameEq = Some(frameEq.map(_.intersect(s)).getOrElse(s))
-    accepted.foreach {
-      case EqualTo("frame", v) => narrow(Set(asL(v)))
-      case In("frame", vs) => narrow(vs.map(asL).toSet)
-      case GreaterThan("frame", v) => frameLo = math.max(frameLo, asL(v) + 1)
-      case GreaterThanOrEqual("frame", v) => frameLo = math.max(frameLo, asL(v))
-      case LessThan("frame", v) => frameHi = math.min(frameHi, asL(v) - 1)
-      case LessThanOrEqual("frame", v) => frameHi = math.min(frameHi, asL(v))
-      case _ => ()
-    }
-    pushed = accepted
-    rest
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  /** Header walk + frame-filter, shared by the row scan and the
-    * aggregate fast path: (path, total frames, wanted (frame, idx)). */
-  private def plannedFrames(): Seq[(String, Long, Seq[(TiffSchema.TiffFrame, Int)])] = {
-    val session = SparkSession.active
-    val conf = session.sessionState.newHadoopConf()
-    val files = SpecSchema.expand(paths, conf)
-      .filterNot(_.path.endsWith(SpecIndex.SidecarSuffix))
-    // same driver-vs-job split as the SPE/EDF header passes
-    val walks: Map[String, Seq[TiffSchema.TiffFrame]] =
-      if (files.size <= SpeSchema.ParallelHeaderThreshold)
-        files.map(m => m.path -> TiffSchema.walk(m.path, conf)).toMap
-      else {
-        val sconf = new SerializableHadoopConf(conf)
-        session.sparkContext
-          .parallelize(files.map(_.path), files.size)
-          .map(p => p -> TiffSchema.walk(p, sconf.value))
-          .collect().toMap
-      }
-    files.map { meta =>
-      val all = walks(meta.path)
-      val wanted = all.zipWithIndex.filter { case (_, f) =>
-        f >= frameLo && f <= frameHi && frameEq.forall(_.contains(f.toLong))
-      }
-      (meta.path, all.size.toLong, wanted)
-    }
-  }
-
-  override def build(): Scan = aggTags match {
-    case Some(tags) => new TiffAggScan(tags, () => plannedFrames())
-    case None => new Scan with Batch {
-    override def readSchema(): StructType = required
-    override def toBatch: Batch = this
-
-    override def planInputPartitions(): Array[InputPartition] = {
-      plannedFrames().flatMap { case (path, n, wanted) =>
-        // contiguous runs capped by data bytes per partition
-        val parts = mutable.ArrayBuffer[TiffInputPartition]()
-        var runStart = -1L
-        var prevIdx = -2
-        val run = mutable.ArrayBuffer[TiffSchema.TiffFrame]()
-        var runBytes = 0L
-        def flush(): Unit = if (run.nonEmpty) {
-          parts += TiffInputPartition(path, runStart, n, run.toSeq)
-          run.clear(); runBytes = 0L; runStart = -1L
-        }
-        wanted.foreach { case (fr, idx) =>
-          val contiguous = idx == prevIdx + 1
-          if ((!contiguous && run.nonEmpty) || runBytes + fr.dataBytes > maxPartBytes) flush()
-          if (run.isEmpty) runStart = idx.toLong
-          run += fr; runBytes += fr.dataBytes; prevIdx = idx
-        }
-        flush()
-        parts
-      }.toArray
-    }
-
-    override def createReaderFactory(): PartitionReaderFactory =
-      new TiffReaderFactory(new SerializableHadoopConf(
-        SparkSession.active.sessionState.newHadoopConf()), required.fieldNames)
-
-    override def toMicroBatchStream(checkpointLocation: String):
-        org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-      new TiffMicroBatchStream(paths,
-        new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
-        required.fieldNames, maxPartBytes)
-    }
-  }
+  override def tail(path: String, conf: Configuration, prev: FrameStack): FrameStack =
+    ListedStack(walk(path, conf, lenient = true).toVector)
 }
 
-/** Structured-Streaming source over LIVE TIFF stacks — watch an
-  * acquisition appending pages. A TIFF appender writes the new page's
-  * strips + IFD, then PATCHES the previous last IFD's next-pointer,
-  * so (unlike the EDF block tail) there is no append-only resume
-  * position: whenever a file's length changes the tail re-walks its
-  * IFD chain leniently — headers only, a page mid-write (dangling
-  * next-pointer, truncated IFD, strip beyond EOF) ends the walk at
-  * the last complete page and is retried next trigger. The per-file
-  * offset is that complete-page count; an unchanged file length skips
-  * the walk entirely, so an idle stream costs one listStatus per
-  * trigger. `n_frames` in streamed rows = the batch's END offset
-  * (pages discovered so far — the EDF tail's replay-deterministic
-  * contract); only a batch re-read of the finished file reports the
-  * final total. New files under the path are picked up automatically;
-  * partitions and readers are the batch ones.
-  */
-class TiffMicroBatchStream(paths: Seq[String], conf: SerializableHadoopConf,
-                           columns: Array[String], maxPartBytes: Long)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  // path -> (complete-page descriptors at last walk, file length then)
-  private val cache = mutable.Map[String, (Vector[TiffSchema.TiffFrame], Long)]()
-
-  private def refresh(path: String, len: Long): Vector[TiffSchema.TiffFrame] = {
-    cache.get(path) match {
-      case Some((have, lastLen)) if lastLen == len => have
-      case _ =>
-        val all = TiffSchema.walkLenient(path, conf.value).toVector
-        cache(path) = (all, len)
-        all
-    }
-  }
-
-  override def initialOffset(): Offset = SpecStreamOffset(Map.empty)
-  override def deserializeOffset(json: String): Offset = SpecStreamOffset.fromJson(json)
-
-  override def latestOffset(): Offset = {
-    val files = SpecSchema.expand(paths, conf.value)
-      .filterNot(_.path.endsWith(SpecIndex.SidecarSuffix))
-    SpecStreamOffset(files.map(m => m.path -> refresh(m.path, m.len).size.toLong).toMap)
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[SpecStreamOffset].files
-    val e = end.asInstanceOf[SpecStreamOffset].files
-    e.toSeq.sortBy(_._1).flatMap { case (path, to) =>
-      val from = s.getOrElse(path, 0L)
-      if (to <= from) Seq.empty
-      else {
-        // normally latestOffset just refreshed; after a checkpoint
-        // restart the cache is cold and the walk reruns here
-        val cached = cache.get(path).map(_._1).getOrElse(Vector.empty)
-        val all =
-          if (cached.size >= to) cached
-          else {
-            val p = new Path(path)
-            refresh(path, p.getFileSystem(conf.value).getFileStatus(p).getLen)
-          }
-        val wanted = all.slice(from.toInt, to.toInt)
-        val parts = mutable.ArrayBuffer[TiffInputPartition]()
-        var runStart = from
-        val run = mutable.ArrayBuffer[TiffSchema.TiffFrame]()
-        var runBytes = 0L
-        def flush(nextStart: Long): Unit = if (run.nonEmpty) {
-          parts += TiffInputPartition(path, runStart, to, run.toSeq)
-          run.clear(); runBytes = 0L; runStart = nextStart
-        }
-        wanted.zipWithIndex.foreach { case (fr, i) =>
-          if (runBytes + fr.dataBytes > maxPartBytes) flush(from + i)
-          run += fr; runBytes += fr.dataBytes
-        }
-        flush(-1L)
-        parts
-      }
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new TiffReaderFactory(conf, columns)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-/** Aggregate-pushdown fast path: one row of planning-index partial
-  * aggregates, zero data-section IO. Values pre-reduced at planning;
-  * Spark's final merge (sum/min/max over one row) is a no-op
-  * arithmetic-wise but keeps union/multi-scan plans correct.
-  */
-final case class TiffAggPartition(values: Array[Any]) extends InputPartition
-
-class TiffAggScan(tags: Seq[String],
-                  planned: () => Seq[(String, Long, Seq[(TiffSchema.TiffFrame, Int)])])
-    extends Scan with Batch {
-  override def readSchema(): StructType =
-    StructType(tags.map(t => StructField(s"agg_$t", LongType, nullable = t != "count")))
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] = {
-    val frames = planned().flatMap(_._3.map(_._2.toLong))
-    val values: Array[Any] = tags.map {
-      case "count" => frames.size.toLong
-      case "min_frame" => if (frames.isEmpty) null else frames.min
-      case "max_frame" => if (frames.isEmpty) null else frames.max
-    }.toArray
-    Array(TiffAggPartition(values))
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new PartitionReader[InternalRow] {
-          private var emitted = false
-          private val row = InternalRow.fromSeq(
-            p.asInstanceOf[TiffAggPartition].values.toSeq)
-          override def next(): Boolean = { val r = !emitted; emitted = true; r }
-          override def get(): InternalRow = row
-          override def close(): Unit = ()
-        }
-    }
-}
-
-class TiffReaderFactory(conf: SerializableHadoopConf,
-                        columns: Array[String]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new TiffPartitionReader(partition.asInstanceOf[TiffInputPartition], conf.value, columns)
-}
-
-/** Reads one partition's pages: seek to each strip, bounded reads,
-  * strips concatenated in order. With `pixels` pruned the file is
-  * never opened — rows come from the planned descriptors alone.
-  */
-class TiffPartitionReader(part: TiffInputPartition, conf: Configuration,
-                          columns: Array[String]) extends PartitionReader[InternalRow] {
-  private val needPixels = columns.contains("pixels")
-  private val fileUtf8 = UTF8String.fromString(part.path)
-  private var i = -1
-  private val in = if (needPixels) {
-    val p = new Path(part.path)
-    p.getFileSystem(conf).open(p)
-  } else null
-  private var pixels: GenericArrayData = null
-
-  override def next(): Boolean = {
-    i += 1
-    val more = i < part.frames.size
-    if (more && needPixels) pixels = decode(part.frames(i))
-    more
-  }
-
-  private def decode(fr: TiffSchema.TiffFrame): GenericArrayData = {
-    val buf = new Array[Byte](fr.dataBytes.toInt)
-    var at = 0
-    fr.stripOffsets.zip(fr.stripByteCounts).foreach { case (off, cnt) =>
-      in.readFully(off, buf, at, cnt.toInt)
-      at += cnt.toInt
-    }
-    val bb = ByteBuffer.wrap(buf)
-      .order(if (fr.littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
-    val n = fr.width * fr.height
-    val out = new Array[Double](n)
-    (fr.sampleFormat, fr.bits) match {
-      case (3, 32) => val tb = bb.asFloatBuffer; var j = 0; while (j < n) { out(j) = tb.get(j).toDouble; j += 1 }
-      case (3, 64) => val tb = bb.asDoubleBuffer; var j = 0; while (j < n) { out(j) = tb.get(j); j += 1 }
-      case (2, 8) => var j = 0; while (j < n) { out(j) = buf(j).toDouble; j += 1 }
-      case (2, 16) => val tb = bb.asShortBuffer; var j = 0; while (j < n) { out(j) = tb.get(j).toDouble; j += 1 }
-      case (2, 32) => val tb = bb.asIntBuffer; var j = 0; while (j < n) { out(j) = tb.get(j).toDouble; j += 1 }
-      case (_, 8) => var j = 0; while (j < n) { out(j) = (buf(j) & 0xFF).toDouble; j += 1 }
-      case (_, 16) => val tb = bb.asShortBuffer; var j = 0; while (j < n) { out(j) = (tb.get(j) & 0xFFFF).toDouble; j += 1 }
-      case (_, 32) => val tb = bb.asIntBuffer; var j = 0; while (j < n) { out(j) = (tb.get(j).toLong & 0xFFFFFFFFL).toDouble; j += 1 }
-      case (f, b) => throw new IllegalArgumentException(
-        s"${part.path}: unsupported TIFF sample (format $f, $b bits)")
-    }
-    new GenericArrayData(out)
-  }
-
-  override def get(): InternalRow = {
-    val fr = part.frames(i)
-    val vals: Array[Any] = columns.map {
-      case "file" => fileUtf8
-      case "frame" => part.frameStart + i
-      case "width" => fr.width
-      case "height" => fr.height
-      case "n_frames" => part.nFrames
-      case "datatype" => UTF8String.fromString(fr.datatypeName)
-      case "byte_order" => UTF8String.fromString(if (fr.littleEndian) "II" else "MM")
-      case "pixels" => pixels
-    }
-    InternalRow.fromSeq(vals.toSeq)
-  }
-
-  override def close(): Unit = if (in != null) in.close()
-}

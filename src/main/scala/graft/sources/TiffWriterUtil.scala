@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.ByteBuffer
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -22,14 +22,11 @@ object TiffWriterUtil {
   def write(path: String, conf: Configuration, width: Int, height: Int,
             datatype: String, littleEndian: Boolean,
             frames: Seq[Array[Double]], rowsPerStrip: Int = 0): Unit = {
-    val (bits, fmt) = datatype match {
-      case "uint8" => (8, 1); case "uint16" => (16, 1); case "uint32" => (32, 1)
-      case "int8" => (8, 2); case "int16" => (16, 2); case "int32" => (32, 2)
-      case "float32" => (32, 3); case "float64" => (64, 3)
-      case d => throw new IllegalArgumentException(s"unsupported TIFF datatype '$d'")
-    }
-    val order = if (littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
-    val bpp = bits / 8
+    val ((fmt, _), pixel) = TiffSchema.PixelTypes.find(_._2.name == datatype)
+      .getOrElse(throw new IllegalArgumentException(s"unsupported TIFF datatype '$datatype'"))
+    val order = PixelType.order(littleEndian)
+    val bpp = pixel.bytes
+    val bits = bpp * 8
     val pageBytes = width.toLong * height * bpp
     require(pageBytes <= Int.MaxValue, s"TIFF page would be $pageBytes bytes")
     frames.foreach(f => require(f.length == width * height,
@@ -51,21 +48,6 @@ object TiffWriterUtil {
     val perIfd = ifdBytes + outOfLine
     val dataStart = 8L
     val ifdStart = dataStart + pageBytes * frames.size
-
-    def pageData(f: Array[Double]): Array[Byte] = {
-      val bb = ByteBuffer.allocate(pageBytes.toInt).order(order)
-      (bits, fmt) match {
-        case (8, 1) => f.foreach(v => bb.put((v.toLong & 0xFF).toByte))
-        case (8, 2) => f.foreach(v => bb.put(v.toByte))
-        case (16, 1) => f.foreach(v => bb.putShort((v.toLong & 0xFFFF).toShort))
-        case (16, 2) => f.foreach(v => bb.putShort(v.toShort))
-        case (32, 1) => f.foreach(v => bb.putInt((v.toLong & 0xFFFFFFFFL).toInt))
-        case (32, 2) => f.foreach(v => bb.putInt(v.toInt))
-        case (32, 3) => f.foreach(v => bb.putFloat(v.toFloat))
-        case (64, 3) => f.foreach(v => bb.putDouble(v))
-      }
-      bb.array()
-    }
 
     def ifd(page: Int): Array[Byte] = {
       val bb = ByteBuffer.allocate(perIfd).order(order)
@@ -110,7 +92,7 @@ object TiffWriterUtil {
       head.putShort(42)
       head.putInt(ifdStart.toInt)
       out.write(head.array())
-      frames.foreach(f => out.write(pageData(f)))
+      frames.foreach(f => out.write(pixel.encode(f, littleEndian)))
       frames.indices.foreach(i => out.write(ifd(i)))
     } finally out.close()
   }

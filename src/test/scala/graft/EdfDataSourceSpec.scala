@@ -166,7 +166,7 @@ class EdfDataSourceSpec extends SparkSpec {
     val side = new java.io.File(f.getAbsolutePath + ".edfidx")
     assert(side.exists(), "sidecar written on first read")
     val v1 = new String(java.nio.file.Files.readAllBytes(side.toPath))
-    assert(v1.startsWith("edfidx\tv1\t") && v1.linesIterator.count(_.startsWith("F\t")) === 2)
+    assert(v1.startsWith("edfidx\tv2\t") && v1.linesIterator.count(_.startsWith("F\t")) === 2)
     // second read validates and reuses it (content unchanged)
     assert(spark.read.format("edf").load(f.getAbsolutePath).count() === 2)
     // grow the file: length changes -> sidecar invalid -> reindex + rewrite
@@ -190,6 +190,26 @@ class EdfDataSourceSpec extends SparkSpec {
     assert(!new java.io.File(f2.getAbsolutePath + ".edfidx").exists())
   }
 
+  test("an .edfidx cut short is stale: every frame is read and the sidecar rewritten") {
+    val f = tmpFile("cut.edf")
+    val frames = (0 until 3).map(k => Array.tabulate(6)(i => (k * 10 + i).toDouble))
+    EdfWriterUtil.write(f.getAbsolutePath, conf, 3, 2, "UnsignedShort", true, frames)
+    val side = new java.io.File(f.getAbsolutePath + ".edfidx")
+    side.delete()
+    assert(spark.read.format("edf").load(f.getAbsolutePath).count() === 3)
+    val full = new String(java.nio.file.Files.readAllBytes(side.toPath), "UTF-8")
+    // a write that died before its last record line: drop that line
+    // (and the checksum file the raw edit would invalidate)
+    java.nio.file.Files.write(side.toPath,
+      full.linesIterator.toSeq.init.map(_ + "\n").mkString.getBytes("UTF-8"))
+    new java.io.File(f.getParentFile, s".${side.getName}.crc").delete()
+    val rows = spark.read.format("edf").load(f.getAbsolutePath).select("frame", "pixels").collect()
+    assert(rows.map(_.getLong(0)).sorted.toSeq === Seq(0L, 1L, 2L))
+    assert(rows.sortBy(_.getLong(0)).map(_.getSeq[Double](1)).toSeq === frames.map(_.toSeq))
+    assert(new String(java.nio.file.Files.readAllBytes(side.toPath), "UTF-8") === full,
+      "sidecar not rewritten")
+  }
+
   test("index walk reads headers only (offsets are exact)") {
     val w = 6; val h = 5
     val frames = (0 until 3).map(fr => Array.tabulate(w * h)(i => (fr * 10 + i).toDouble))
@@ -200,25 +220,6 @@ class EdfDataSourceSpec extends SparkSpec {
     assert(idx(0).dataOffset === 512)
     assert(idx(1).dataOffset === 512 + w * h * 2 + 512)
     assert(idx.forall(fr => fr.width === w && fr.height === h))
-  }
-
-  test("pushFilters: untranslatable values stay in the residual instead of crashing planning") {
-    import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, In}
-    val b = new graft.sources.EdfScanBuilder(Seq("/nonexistent.edf"), 1L << 20)
-    // a null inside In(...) and a non-numeric EqualTo must be LEFT
-    // for Spark to evaluate post-scan — and must not be "accepted"
-    val bad: Array[Filter] = Array(
-      In("frame", Array[Any](java.lang.Long.valueOf(1L), null)),
-      EqualTo("frame", "not-a-number"))
-    val residual = b.pushFilters(bad)
-    assert(residual.toSeq === bad.toSeq)
-    assert(b.pushedFilters().isEmpty)
-    // integral literals of every width are accepted as before
-    val good: Array[Filter] = Array(
-      EqualTo("frame", java.lang.Integer.valueOf(2)),
-      GreaterThan("frame", java.lang.Short.valueOf(0.toShort)))
-    assert(b.pushFilters(good).isEmpty)
-    assert(b.pushedFilters().toSeq === good.toSeq)
   }
 
   test("COUNT(*)/MIN/MAX(frame) push down to the header walk (agg row, no data read)") {

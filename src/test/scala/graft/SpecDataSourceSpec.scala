@@ -359,19 +359,19 @@ class SpecDataSourceSpec extends SparkSpec {
     val sidecar = new java.io.File(dir, "c.spec.specidx")
     assert(sidecar.exists(), "sidecar index not written")
     val content = new String(Files.readAllBytes(sidecar.toPath))
-    assert(content.startsWith(s"specidx\tv3\t${f.length()}\t"))
+    assert(content.startsWith(s"specidx\tv4\t${f.length()}\t"))
     // cached index is used on re-read and yields identical partitions
     val again = spark.read.format("spec").load(f.getPath)
     assert(again.count() == 3 && again.filter(col("scan") === 2).count() == 1)
     // a sidecar with a wrong length (stale) is ignored, not trusted
     Files.write(sidecar.toPath,
-      "specidx\tv3\t999999\t0\t0\nS\t1\t0\t10\t2\n".getBytes("UTF-8"))
+      "specidx\tv4\t999999\t0\t0\t1\nS\t1\t0\t10\t2\n".getBytes("UTF-8"))
     assert(spark.read.format("spec").option("indexCache", "false").load(f.getPath).count() == 3)
     assert(spark.read.format("spec").load(f.getPath).count() == 3)
-    // ... and the read above overwrote it with a fresh valid v3 (GC =
+    // ... and the read above overwrote it with a fresh valid v4 (GC =
     // eviction-by-rewrite, one sidecar per file)
     val healed = new String(Files.readAllBytes(sidecar.toPath))
-    assert(healed.startsWith(s"specidx\tv3\t${f.length()}\t"))
+    assert(healed.startsWith(s"specidx\tv4\t${f.length()}\t"))
     assert(!healed.contains("999999"))
   }
 
@@ -393,6 +393,25 @@ class SpecDataSourceSpec extends SparkSpec {
     val scans = spark.read.format("spec").load(f.getPath)
       .select("scan").distinct().collect().map(_.getLong(0)).toSet
     assert(scans == Set(7L), s"stale sidecar served: $scans")
+  }
+
+  test("a .specidx cut short is stale: every scan is read and the sidecar rewritten") {
+    val dir = Files.createTempDirectory("spectrunc").toFile
+    val f = new java.io.File(dir, "t.spec")
+    Files.write(f.toPath, ("#S 1 a\n#L th  det\n0 1\n1 2\n\n#S 2 b\n#L th  det\n0 3\n" +
+      "\n#S 3 c\n#L th  det\n0 4\n1 5\n").getBytes("UTF-8"))
+    assert(spark.read.format("spec").load(f.getPath).count() == 5)
+    val sidecar = new java.io.File(dir, "t.spec.specidx")
+    val full = new String(Files.readAllBytes(sidecar.toPath), "UTF-8")
+    // a write that died before its last record line: drop that line
+    // (and the checksum file the raw edit would invalidate)
+    Files.write(sidecar.toPath,
+      full.linesIterator.toSeq.init.map(_ + "\n").mkString.getBytes("UTF-8"))
+    new java.io.File(dir, ".t.spec.specidx.crc").delete()
+    val df = spark.read.format("spec").load(f.getPath)
+    assert(df.count() == 5)
+    assert(df.select("scan").distinct().collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
+    assert(new String(Files.readAllBytes(sidecar.toPath), "UTF-8") == full, "sidecar not rewritten")
   }
 
   test("many files index via the distributed job path") {

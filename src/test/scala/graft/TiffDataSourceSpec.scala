@@ -131,6 +131,30 @@ class TiffDataSourceSpec extends SparkSpec {
     assert(e2.getMessage.contains("Compression"))
   }
 
+  test("64-bit integer pages fail at planning with the path in the message") {
+    val f = tmpFile("int64.tiff")
+    TiffWriterUtil.write(f.getAbsolutePath, conf, 2, 2, "float64", true,
+      Seq(Array(1.0, 2.0, 3.0, 4.0)))
+    // patch SampleFormat (tag 339) from 3 (float) to 1 (unsigned):
+    // BitsPerSample stays 64, so the page now claims uint64 samples
+    val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val ifd = bb.getInt(4)
+    val entry = (0 until bb.getShort(ifd)).map(i => ifd + 2 + 12 * i)
+      .find(e => bb.getShort(e) == 339).get
+    assert(bb.getShort(entry + 8) === 3)
+    bb.putShort(entry + 8, 1.toShort)
+    java.nio.file.Files.write(f.toPath, bytes)
+    // the byte surgery invalidates Hadoop's checksum sidecar
+    new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    val e = intercept[Exception](TiffSchema.walk(f.getAbsolutePath, conf))
+    assert(e.getMessage.contains(f.getName))
+    val e2 = intercept[Exception](spark.read.format("tiff").load(f.getAbsolutePath).count())
+    assert(messages(e2).exists(_.contains(f.getName)), messages(e2))
+  }
+
   test("decoded TIFF stack feeds the CCD operators (radial profile)") {
     val w = 12; val h = 10
     val frames = (0 until 2).map(fr => Array.tabulate(w * h)(i => (fr + i % 7).toDouble))
@@ -144,19 +168,6 @@ class TiffDataSourceSpec extends SparkSpec {
     // total mass is conserved through the binning
     val total = rows.map(r => r.getAs[Long]("v_sum")).sum
     assert(total === frames.flatten.map(_.toLong).sum)
-  }
-
-  test("pushFilters: untranslatable values stay residual (planning never crashes)") {
-    import org.apache.spark.sql.sources.{EqualTo, Filter, In}
-    val b = new graft.sources.TiffScanBuilder(Seq("/nonexistent.tiff"), 1L << 20)
-    val bad: Array[Filter] = Array(
-      In("frame", Array[Any](java.lang.Long.valueOf(1L), null)),
-      EqualTo("frame", "x"))
-    assert(b.pushFilters(bad).toSeq === bad.toSeq)
-    assert(b.pushedFilters().isEmpty)
-    val good: Array[Filter] = Array(EqualTo("frame", java.lang.Integer.valueOf(2)))
-    assert(b.pushFilters(good).isEmpty)
-    assert(b.pushedFilters().toSeq === good.toSeq)
   }
 
   test("COUNT(*)/MIN/MAX(frame) push down to the planning index: one agg row, no pixel read") {
