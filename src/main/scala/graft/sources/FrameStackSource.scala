@@ -165,20 +165,8 @@ object FrameStack {
     */
   def split(path: String, stack: FrameStack, runs: Seq[(Int, Int)], nFrames: Long,
             maxBytes: Long): Seq[FramePartition] = runs.flatMap { case (first, last) =>
-    val parts = mutable.ArrayBuffer[FramePartition]()
-    var start = first
-    var bytes = 0L
-    for (i <- first to last) {
-      val b = stack.frameBytes(i)
-      if (i > start && bytes + b > maxBytes) {
-        parts += FramePartition(path, start, nFrames, stack.slice(start, i))
-        start = i
-        bytes = 0L
-      }
-      bytes += b
-    }
-    parts += FramePartition(path, start, nFrames, stack.slice(start, last + 1))
-    parts
+    FileSplits.runs(Array.tabulate(last - first + 1)(i => stack.frameBytes(first + i)), maxBytes)
+      .map { case (a, b) => FramePartition(path, first + a, nFrames, stack.slice(first + a, first + b)) }
   }
 }
 

@@ -7,9 +7,10 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -31,21 +32,27 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Cluster model: all IO goes through Hadoop `FileSystem`, so paths
   * may be `file:`, `hdfs:`, `s3a:`, etc. Each file is indexed ONCE by
-  * **byte offset** — `(scan, startByte, endByte)` per `#S` block —
-  * and each Spark partition covers one (file, scan): its reader
-  * `seek`s straight to its block and reads only those bytes, so total
-  * read work is O(corpus bytes), never O(scans × file bytes). For
-  * more than a handful of files the index pass itself runs as a Spark
-  * job (one task per file — the same pattern as Spark's parallel
-  * partition discovery), so the driver never streams file contents;
-  * it only collects the per-scan offset table. Setting
-  * `.option("indexCache", "true")` persists each file's index to a
-  * `<file>.specidx` sidecar (validated against length+mtime) so
+  * **byte offset** — `(scan, startByte, endByte)` per `#S` block.
+  * Partitions are planned the way Spark plans its own file sources:
+  * each covers a contiguous run of one file's wanted blocks, cut at
+  * Spark's split size for the read (see [[FileSplits.maxSplitBytes]]),
+  * so a small file is one task and a large corpus still spreads
+  * across every core. A reader opens its file once and reads its
+  * blocks in one sequential pass, seeking only over the blocks the
+  * read does not want, so total read work is O(wanted bytes), never
+  * O(scans × file bytes). For more than a handful of files the index
+  * pass itself runs as a Spark job (one task per file — the same
+  * pattern as Spark's parallel partition discovery), so the driver
+  * never streams file contents; it only collects the per-scan offset
+  * table. Each file's index persists to a `<file>.specidx` sidecar
+  * (on by default; `.option("indexCache", "false")` opts out),
+  * validated against length, mtime and a content fingerprint, so
   * re-reads of an unchanged corpus skip the scan pass entirely.
   *
-  * pyspec's "random access by scan number" maps onto partition
-  * PRUNING: equality/IN filters on the `scan` column skip whole
-  * partitions before any byte of their data block is read.
+  * pyspec's "random access by scan number" maps onto block PRUNING:
+  * equality/IN/range filters on `scan` and equality/IN filters on
+  * `file` drop blocks (and files) at planning, before any byte of
+  * their data is read.
   *
   * Schema (one row per data point):
   *   file string, scan long, command string, date string,
@@ -185,59 +192,89 @@ private[sources] class PrefetchInputStream(in: InputStream, chunkSize: Int = 256
   }
 }
 
-/** Reads lines from a (bounded) stream while tracking exact byte
-  * offsets, so `#S` block boundaries can be recorded for later
-  * `seek`. Lines are `\n`-terminated; a trailing `\r` is stripped.
+/** Reads lines from a stream while tracking exact byte offsets, so
+  * `#S` block boundaries can be recorded for later `seek`. Lines are
+  * `\n`-terminated; a trailing `\r` is stripped.
   */
 private[sources] final class OffsetLineReader(in: InputStream) {
   private val buf = new Array[Byte](64 * 1024)
   private var bufLen = 0
   private var bufPos = 0
   private var offset = 0L
-  private val lineBuf = new java.io.ByteArrayOutputStream(256)
+  private var line = new Array[Byte](256)
 
   /** Byte offset of the start of the line most recently returned. */
   var lineStart: Long = 0L
+  /** Offset where the current segment ends: `readLine` returns null
+    * once it is reached and cuts a line that runs past it, so a reader
+    * of back-to-back blocks never carries a line into the next block. */
+  var limit: Long = Long.MaxValue
   /** Byte offset of the next unread byte (= end of stream after EOF). */
   def position: Long = offset
 
-  /** Next line without its terminator, or null at EOF. */
+  /** Next line without its terminator, or null at EOF or `limit`. */
   def readLine(): String = {
-    lineBuf.reset()
     lineStart = offset
-    var sawAny = false
-    var done = false
-    while (!done) {
+    var len = 0
+    var ended = false
+    var eof = false
+    while (!ended && !eof && offset < limit) {
       if (bufPos >= bufLen) {
-        bufLen = in.read(buf)
+        bufLen = math.max(in.read(buf), 0)
         bufPos = 0
-        if (bufLen < 0) {
-          if (!sawAny) return null
-          done = true
-        }
+        eof = bufLen == 0
       } else {
-        val b = buf(bufPos); bufPos += 1; offset += 1
-        sawAny = true
-        if (b == '\n') done = true else lineBuf.write(b.toInt)
+        val room = limit - offset
+        val stop = if (room < bufLen - bufPos) bufPos + room.toInt else bufLen
+        var i = bufPos
+        while (i < stop && buf(i) != '\n') i += 1
+        val n = i - bufPos
+        if (len + n > line.length) line = java.util.Arrays.copyOf(line, math.max(line.length * 2, len + n))
+        System.arraycopy(buf, bufPos, line, len, n)
+        len += n
+        offset += n
+        bufPos = i
+        ended = i < stop
+        if (ended) { // consume the terminator
+          bufPos += 1
+          offset += 1
+        }
       }
     }
-    val bytes = lineBuf.toByteArray
-    val n = if (bytes.nonEmpty && bytes(bytes.length - 1) == '\r') bytes.length - 1
-            else bytes.length
-    new String(bytes, 0, n, StandardCharsets.UTF_8)
+    if (offset == lineStart) null
+    else {
+      val n = if (len > 0 && line(len - 1) == '\r') len - 1 else len
+      new String(line, 0, n, StandardCharsets.UTF_8)
+    }
   }
 }
 
-/** Caps reads at `limit` bytes — wraps a seeked `FSDataInputStream`
-  * so a partition reader can only consume its own scan block.
+/** The bytes of `ranges` (`[start, end)`, in file order) of one open
+  * file, read back to back: a stream reader seeks only where one range
+  * does not start where the previous one ended.
   */
-private[sources] final class BoundedInputStream(in: InputStream, limit: Long) extends InputStream {
-  private var remaining = limit
+private[sources] final class RangesInputStream(in: FSDataInputStream, ranges: IndexedSeq[(Long, Long)])
+    extends InputStream {
+  private var next = 0
+  private var remaining = 0L
+
+  /** Positions `in` on the next nonempty range; false after the last. */
+  private def ready(): Boolean = {
+    while (remaining <= 0 && next < ranges.length) {
+      val (start, end) = ranges(next)
+      next += 1
+      if (end > start && in.getPos != start) in.seek(start)
+      remaining = end - start
+    }
+    remaining > 0
+  }
+
   override def read(): Int =
-    if (remaining <= 0) -1
+    if (!ready()) -1
     else { val b = in.read(); if (b >= 0) remaining -= 1; b }
   override def read(b: Array[Byte], off: Int, len: Int): Int = {
-    if (remaining <= 0) return -1
+    if (len == 0) return 0
+    if (!ready()) return -1
     val n = in.read(b, off, math.min(len.toLong, remaining).toInt)
     if (n > 0) remaining -= n
     n
@@ -409,9 +446,28 @@ object SpecIndex {
       })
 }
 
-final case class SpecInputPartition(path: String, scanNo: Long,
-                                    startByte: Long, endByte: Long,
-                                    motorNames: Array[String]) extends InputPartition
+/** A contiguous run of one file's wanted scan blocks, in file order:
+  * `(scanNo, startByte, endByteExcl)` per block, and the file's `#O`
+  * motor names once. */
+final case class SpecInputPartition(path: String, motorNames: Array[String],
+                                    blocks: Array[(Long, Long, Long)]) extends InputPartition {
+  def bytes: Long = blocks.iterator.map(b => b._3 - b._2).sum
+}
+
+object SpecInputPartition {
+  /** The partitions of a batch read or a micro-batch: each file's
+    * wanted blocks `(path, #O names, blocks)` cut into contiguous runs
+    * at Spark's split size for the total wanted bytes. */
+  def plan(files: Seq[(String, Array[String], Seq[(Long, Long, Long)])]): Array[InputPartition] = {
+    val cap = FileSplits.maxSplitBytes(SparkSession.active,
+      files.iterator.flatMap(_._3).map(b => b._3 - b._2).sum)
+    files.flatMap { case (path, motors, blocks) =>
+      val bs = blocks.toArray
+      FileSplits.runs(bs.map(b => b._3 - b._2), cap)
+        .map { case (a, b) => SpecInputPartition(path, motors, bs.slice(a, b)) }
+    }.toArray
+  }
+}
 
 class SpecTable(paths: Seq[String]) extends Table with SupportsRead with SupportsWrite {
   override def name(): String = s"spec(${paths.mkString(",")})"
@@ -543,11 +599,7 @@ class SpecScanBuilder(paths: Seq[String], keepLast: Boolean = false,
     override def readSchema(): StructType = required
     override def toBatch: Batch = this
     override def planInputPartitions(): Array[InputPartition] =
-      computeIndexes().flatMap { idx =>
-        wantedOf(idx).map { case ((no, s, e), _) =>
-          SpecInputPartition(idx.path, no, s, e, idx.motorNames)
-        }
-      }.toArray
+      SpecInputPartition.plan(computeIndexes().map(idx => (idx.path, idx.motorNames, wantedOf(idx).map(_._1))))
     override def createReaderFactory(): PartitionReaderFactory =
       new SpecReaderFactory(new SerializableHadoopConf(
         SparkSession.active.sessionState.newHadoopConf()), required.fieldNames)
@@ -594,8 +646,9 @@ object SpecStreamOffset {
   * so recovery replans the exact same scans from the checkpoint (the
   * byte range [start, end) re-indexes deterministically); each
   * trigger re-reads only bytes PAST the previous boundary, never the
-  * whole file. Partitions/readers are the batch ones — one partition
-  * per newly completed scan, seek + bounded read.
+  * whole file. Planning and readers are the batch ones: a micro-batch's
+  * newly completed scans of one file are packed into contiguous runs
+  * under Spark's split size, so a batch of a few scans is one task.
   */
 class SpecMicroBatchStream(paths: Seq[String], conf: SerializableHadoopConf,
                            columns: Array[String], emitLast: Boolean)
@@ -643,8 +696,7 @@ class SpecMicroBatchStream(paths: Seq[String], conf: SerializableHadoopConf,
     val fs = p.getFileSystem(conf.value)
     val in = fs.open(p)
     try {
-      in.seek(from)
-      val reader = new OffsetLineReader(new BoundedInputStream(in, to - from))
+      val reader = new OffsetLineReader(new RangesInputStream(in, Vector((from, to))))
       val scans = mutable.ArrayBuffer[(Long, Long, Long)]()
       var curScan = -1L
       var curStart = -1L
@@ -698,12 +750,10 @@ class SpecMicroBatchStream(paths: Seq[String], conf: SerializableHadoopConf,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[SpecStreamOffset].files
     val e = end.asInstanceOf[SpecStreamOffset].files
-    e.toSeq.sortBy(_._1).flatMap { case (path, to) =>
-      val from = s.getOrElse(path, 0L)
-      scansInRange(path, from, to).map { case (no, b0, b1) =>
-        SpecInputPartition(path, no, b0, b1, headerMotors(path))
-      }
-    }.toArray
+    SpecInputPartition.plan(e.toSeq.sortBy(_._1).flatMap { case (path, to) =>
+      val blocks = scansInRange(path, s.getOrElse(path, 0L), to)
+      if (blocks.isEmpty) None else Some((path, headerMotors(path), blocks))
+    })
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -719,34 +769,61 @@ class SpecReaderFactory(conf: SerializableHadoopConf,
     new SpecPartitionReader(partition.asInstanceOf[SpecInputPartition], conf.value, columns)
 }
 
-/** Parses one scan's byte range into data-point rows: opens the file
-  * through Hadoop FS, `seek`s to the block start, and reads exactly
-  * `endByte - startByte` bytes — a K-scan file costs O(file bytes)
-  * across all K partitions combined. Only the pruned `columns` are
+/** Parses one partition's scan blocks into data-point rows: opens the
+  * file once through Hadoop FS and reads the blocks back to back,
+  * seeking only over blocks the read does not want, so a read costs
+  * O(wanted bytes) whatever the file holds. Blocks are parsed one at
+  * a time as rows are pulled. Only the pruned `columns` are
   * materialized per row (header parsing is line-bound either way, but
   * map/array construction per point is skipped for unread fields).
   */
 class SpecPartitionReader(p: SpecInputPartition, conf: Configuration,
                           columns: Array[String] = SpecSchema.schema.fieldNames)
     extends PartitionReader[InternalRow] {
-  private val rows: Iterator[InternalRow] = {
+  require(columns.toSet.subsetOf(SpecSchema.schema.fieldNames.toSet),
+    s"unknown spec columns: ${columns.toSet -- SpecSchema.schema.fieldNames}")
+
+  private val raw = {
     val path = new Path(p.path)
-    val fs = path.getFileSystem(conf)
-    val raw = fs.open(path)
-    var stream: InputStream = null
-    val reader = try {
-      raw.seek(p.startByte)
-      val bounded = new BoundedInputStream(raw, p.endByte - p.startByte)
-      // blocks bigger than one prefetch chunk parse while their later
-      // bytes stream in on the read-ahead thread; smaller blocks gain
+    path.getFileSystem(conf).open(path)
+  }
+  private val stream: InputStream =
+    try {
+      val blocks = new RangesInputStream(raw, p.blocks.toIndexedSeq.map(b => (b._2, b._3)))
+      // runs bigger than one prefetch chunk parse while their later
+      // bytes stream in on the read-ahead thread; smaller runs gain
       // nothing from a second thread
-      stream =
-        if (p.endByte - p.startByte >= SpecPartitionReader.PrefetchMinBytes)
-          new PrefetchInputStream(bounded)
-        else bounded
-      new OffsetLineReader(stream)
+      if (p.bytes >= SpecPartitionReader.PrefetchMinBytes) new PrefetchInputStream(blocks)
+      else blocks
     } catch { case e: Throwable => raw.close(); throw e }
-    SpecIOMetrics.bytesRead.add(p.endByte - p.startByte)
+  // each block's lines end at its own last byte (see next())
+  private val lines = new OffsetLineReader(stream)
+  lines.limit = 0L
+  SpecIOMetrics.bytesRead.add(p.bytes)
+
+  private val fileU = UTF8String.fromString(p.path)
+  private lazy val motorKeys = new SpecPartitionReader.Keys(p.motorNames)
+  private var block = -1
+  private var rows: Iterator[InternalRow] = Iterator.empty
+  private var cur: InternalRow = _
+
+  override def next(): Boolean = {
+    while (!rows.hasNext && block + 1 < p.blocks.length) {
+      block += 1
+      val (scanNo, start, end) = p.blocks(block)
+      lines.limit += end - start
+      rows = parseBlock(scanNo)
+    }
+    if (rows.hasNext) { cur = rows.next(); true } else false
+  }
+  override def get(): InternalRow = cur
+  override def close(): Unit = {
+    scala.util.Try(stream.close())
+    raw.close()
+  }
+
+  /** The rows of the block the line reader is positioned on. */
+  private def parseBlock(scanNo: Long): Iterator[InternalRow] = {
     var command: String = null
     var date: String = null
     var countTime: java.lang.Double = null
@@ -767,77 +844,66 @@ class SpecPartitionReader(p: SpecInputPartition, conf: Configuration,
       line.drop(3).trim.split("\\s+").headOption
         .flatMap(t => scala.util.Try(t.toDouble).toOption)
         .map(Double.box).orNull
-    try {
-      var line = reader.readLine()
-      while (line != null) {
-        // "@A v1 v2 ... \" begins a point's MCA spectrum (pyspec
-        // scan.MCA); lines continue while they end with a backslash,
-        // and the block attaches to the NEXT scalar data row.
-        if (inMcaContinuation) {
-          pendingMca ++= mcaVals(line)
-          inMcaContinuation = line.trim.endsWith("\\")
-        }
-        else if (line.startsWith("@A")) {
-          pendingMca = mutable.ArrayBuffer[Double]()
-          pendingMca ++= mcaVals(line.drop(2))
-          inMcaContinuation = line.trim.endsWith("\\")
-        }
-        else if (line.startsWith("#S ")) command = line.drop(3).trim.dropWhile(_.isDigit).trim
-        else if (line.startsWith("#D ")) date = line.drop(3).trim
-        else if (line.startsWith("#T ")) countTime = headerNum(line)
-        else if (line.startsWith("#M ")) monitor = headerNum(line)
-        else if (line.startsWith("#G"))
-          geom ++= line.dropWhile(_ != ' ').trim.split("\\s+").filter(_.nonEmpty)
-            .flatMap(t => scala.util.Try(t.toDouble).toOption)
-        else if (line.startsWith("#Q "))
-          hkl ++= line.drop(3).trim.split("\\s+").filter(_.nonEmpty)
-            .flatMap(t => scala.util.Try(t.toDouble).toOption)
-        else if (line.startsWith("#P")) {
-          // #P values align positionally with #O names — a malformed
-          // token can't just be dropped (it would shift every later
-          // motor), so it invalidates the whole motors map instead of
-          // failing the partition.
-          val toks = line.dropWhile(_ != ' ').trim.split("\\s+").filter(_.nonEmpty)
-            .map(t => scala.util.Try(t.toDouble).toOption)
-          if (toks.exists(_.isEmpty)) positionsValid = false
-          positions ++= toks.map(_.getOrElse(Double.NaN))
-        }
-        else if (line.startsWith("#L")) labels = SpecSchema.splitLabels(line.drop(2))
-        else if (!line.startsWith("#") && line.trim.nonEmpty) {
-          // tolerate malformed points (truncated writes mid-scan are
-          // common in live spec files) — skip the line, keep the scan
-          val vals = line.trim.split("\\s+")
-            .flatMap(t => scala.util.Try(t.toDouble).toOption)
-          if (vals.nonEmpty) {
-            dataRows += vals
-            mcaRows += (if (pendingMca == null) null else pendingMca.toArray)
-            pendingMca = null
-          }
-        }
-        line = reader.readLine()
+    var line = lines.readLine()
+    while (line != null) {
+      // "@A v1 v2 ... \" begins a point's MCA spectrum (pyspec
+      // scan.MCA); lines continue while they end with a backslash,
+      // and the block attaches to the NEXT scalar data row.
+      if (inMcaContinuation) {
+        pendingMca ++= mcaVals(line)
+        inMcaContinuation = line.trim.endsWith("\\")
       }
-    } finally {
-      if (stream != null) scala.util.Try(stream.close())
-      raw.close()
+      else if (line.startsWith("@A")) {
+        pendingMca = mutable.ArrayBuffer[Double]()
+        pendingMca ++= mcaVals(line.drop(2))
+        inMcaContinuation = line.trim.endsWith("\\")
+      }
+      else if (line.startsWith("#S ")) command = line.drop(3).trim.dropWhile(_.isDigit).trim
+      else if (line.startsWith("#D ")) date = line.drop(3).trim
+      else if (line.startsWith("#T ")) countTime = headerNum(line)
+      else if (line.startsWith("#M ")) monitor = headerNum(line)
+      else if (line.startsWith("#G"))
+        geom ++= line.dropWhile(_ != ' ').trim.split("\\s+").filter(_.nonEmpty)
+          .flatMap(t => scala.util.Try(t.toDouble).toOption)
+      else if (line.startsWith("#Q "))
+        hkl ++= line.drop(3).trim.split("\\s+").filter(_.nonEmpty)
+          .flatMap(t => scala.util.Try(t.toDouble).toOption)
+      else if (line.startsWith("#P")) {
+        // #P values align positionally with #O names — a malformed
+        // token can't just be dropped (it would shift every later
+        // motor), so it invalidates the whole motors map instead of
+        // failing the partition.
+        val toks = line.dropWhile(_ != ' ').trim.split("\\s+").filter(_.nonEmpty)
+          .map(t => scala.util.Try(t.toDouble).toOption)
+        if (toks.exists(_.isEmpty)) positionsValid = false
+        positions ++= toks.map(_.getOrElse(Double.NaN))
+      }
+      else if (line.startsWith("#L")) labels = SpecSchema.splitLabels(line.drop(2))
+      else if (!line.startsWith("#") && line.trim.nonEmpty) {
+        // tolerate malformed points (truncated writes mid-scan are
+        // common in live spec files) — skip the line, keep the scan
+        val vals = line.trim.split("\\s+")
+          .flatMap(t => scala.util.Try(t.toDouble).toOption)
+        if (vals.nonEmpty) {
+          dataRows += vals
+          mcaRows += (if (pendingMca == null) null else pendingMca.toArray)
+          pendingMca = null
+        }
+      }
+      line = lines.readLine()
     }
-    // scan-constant values, built once and only if requested
-    val need = columns.toSet
-    lazy val motorMap =
-      if (positionsValid) mapData(p.motorNames.take(positions.length), positions.toArray)
-      else null
-    lazy val fileU = UTF8String.fromString(p.path)
+    // scan-constant values, built once and only if requested; every
+    // point's `data` map shares the keys of the block's (last) #L
+    lazy val dataKeys = new SpecPartitionReader.Keys(labels)
+    lazy val motorMap = if (positionsValid) motorKeys.map(positions.toArray) else null
     lazy val cmdU = if (command == null) null else UTF8String.fromString(command)
     lazy val dateU = if (date == null) null else UTF8String.fromString(date)
-    lazy val geomArr = if (geom.isEmpty) null
-      else new GenericArrayData(geom.toArray.map(v => v: Any))
-    lazy val hklArr = if (hkl.isEmpty) null
-      else new GenericArrayData(hkl.toArray.map(v => v: Any))
-    require(need.subsetOf(SpecSchema.schema.fieldNames.toSet),
-      s"unknown spec columns: ${need -- SpecSchema.schema.fieldNames}")
+    lazy val geomArr = if (geom.isEmpty) null else UnsafeArrayData.fromPrimitiveArray(geom.toArray)
+    lazy val hklArr = if (hkl.isEmpty) null else UnsafeArrayData.fromPrimitiveArray(hkl.toArray)
     dataRows.iterator.zipWithIndex.map { case (vals, idx) =>
       val values: Array[Any] = columns.map {
         case "file" => fileU
-        case "scan" => p.scanNo
+        case "scan" => scanNo
         case "command" => cmdU
         case "date" => dateU
         case "count_time" => countTime
@@ -846,30 +912,34 @@ class SpecPartitionReader(p: SpecInputPartition, conf: Configuration,
         case "hkl" => hklArr
         case "point" => idx.toLong
         case "motors" => motorMap
-        case "data" => mapData(labels.take(vals.length), vals)
+        case "data" => dataKeys.map(vals)
         case "mca" =>
           val mca = mcaRows(idx)
-          if (mca == null) null else new GenericArrayData(mca.map(v => v: Any))
+          if (mca == null) null else UnsafeArrayData.fromPrimitiveArray(mca)
       }
       InternalRow(values: _*)
     }
   }
-
-  private def mapData(keys: Array[String], values: Array[Double]): ArrayBasedMapData = {
-    val n = math.min(keys.length, values.length)
-    new ArrayBasedMapData(
-      new GenericArrayData(keys.take(n).map(UTF8String.fromString(_)).asInstanceOf[Array[Any]]),
-      new GenericArrayData(values.take(n).map(v => v: Any)))
-  }
-
-  private var cur: InternalRow = _
-  override def next(): Boolean = { if (rows.hasNext) { cur = rows.next(); true } else false }
-  override def get(): InternalRow = cur
-  override def close(): Unit = ()
 }
 
 object SpecPartitionReader {
-  /** Minimum block size for the read-ahead thread (= one prefetch
-    * chunk; below this the whole block is a single read anyway). */
+  /** Minimum partition size for the read-ahead thread (= one prefetch
+    * chunk; below this the whole partition is a single read anyway). */
   val PrefetchMinBytes: Long = 256L * 1024
+
+  /** Map keys converted once and shared by every map built over them
+    * (map data is immutable): a block's `#L` labels, a file's `#O`
+    * motor names. */
+  private final class Keys(names: Array[String]) {
+    private val utf8: Array[Any] = names.map(n => UTF8String.fromString(n): Any)
+    private val all = new GenericArrayData(utf8)
+
+    /** Keys paired positionally with `values`; the shorter one wins. */
+    def map(values: Array[Double]): ArrayBasedMapData = {
+      val n = math.min(utf8.length, values.length)
+      new ArrayBasedMapData(
+        if (n == utf8.length) all else new GenericArrayData(utf8.take(n)),
+        UnsafeArrayData.fromPrimitiveArray(if (n == values.length) values else values.take(n)))
+    }
+  }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import graft.sources.{SerializableHadoopConf, SpecIOMetrics, SpecIndex, SpecInputPartition,
+  SpecMicroBatchStream, SpecSchema}
 
 class SpecDataSourceSpec extends SparkSpec {
 
@@ -46,6 +48,60 @@ class SpecDataSourceSpec extends SparkSpec {
         |""".stripMargin
     Files.write(f.toPath, content.getBytes("UTF-8"))
     f.getPath
+  }
+
+  /** `(file, scan, startByte, endByte)` of every `#S` block under
+    * `path`, from the scan index. */
+  private def blocksOf(path: String): Seq[(String, Long, Long, Long)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    SpecSchema.expand(Seq(path), conf).flatMap { m =>
+      SpecIndex.indexFile(m, conf).scans.map { case (no, s, e) => (m.path, no, s, e) }
+    }
+  }
+
+  /** `body` with session confs set, restored afterwards. */
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** A spec file whose blocks are `(scan number, points)`; each point's
+    * `det` encodes the file tag, block position and point index. */
+  private def specFile(dir: java.io.File, name: String, tag: Int, scans: Seq[(Int, Int)]): String = {
+    val sb = new StringBuilder(s"#F $name\n#O0 Theta  Chi\n")
+    scans.zipWithIndex.foreach { case ((no, n), k) =>
+      sb.append(s"\n#S $no ascan th 0 1 $n 1\n#P0 $k.5 1.25\n#L th  det\n")
+      for (p <- 0 until n) sb.append(s"$p ${det(tag, k, p)}\n")
+    }
+    val f = new java.io.File(dir, name)
+    Files.write(f.toPath, sb.toString.getBytes("UTF-8"))
+    f.getPath
+  }
+  private def det(tag: Int, block: Int, point: Int): Double = tag * 100000 + block * 100 + point
+
+  /** (scan, point, det) of a read, in read order. */
+  private def points(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+    df.select(col("scan"), col("point"), element_at(col("data"), "det")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+
+  /** All columns of a read's rows, in read order. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq
+
+  /** The rows of `read` under the packed plan, checked against the same
+    * read planned one scan block per partition (a 1-byte cap): same
+    * rows, same order. */
+  private def packedEqualsPerScan(read: => org.apache.spark.sql.DataFrame, nBlocks: Int): Seq[String] = {
+    val packed = rowsOf(read)
+    val perScan = withConf("spark.sql.files.maxPartitionBytes" -> "1") {
+      val df = read
+      assert(df.rdd.getNumPartitions == nBlocks)
+      rowsOf(df)
+    }
+    assert(packed == perScan)
+    packed
   }
 
   test("reads scans with schema, motors and data maps") {
@@ -115,15 +171,27 @@ class SpecDataSourceSpec extends SparkSpec {
     mk("b.spec", 1 to 6)
     val df = spark.read.format("spec").load(dir.getPath)
     assert(df.count() == 12)
-    // range predicate prunes partitions, not just rows
+    val blocks = blocksOf(dir.getPath)
+    // bytes the partition readers fetch for a read of `q`
+    def fetched(q: org.apache.spark.sql.DataFrame, rows: Long): Long = {
+      SpecIOMetrics.reset()
+      assert(q.collect().length == rows)
+      SpecIOMetrics.total
+    }
+    def wanted(keep: (String, Long) => Boolean): Long =
+      blocks.collect { case (f, no, s, e) if keep(f, no) => e - s }.sum
+    // range predicate prunes blocks, not just rows: scans 3, 4 of both
+    // files and not one byte more
     val mid = df.filter(col("scan") > 2 && col("scan") <= 4)
-    assert(mid.rdd.getNumPartitions == 4) // scans 3,4 in both files
-    assert(mid.count() == 4)
-    // file equality prunes the other file's partitions entirely
+    assert(fetched(mid, 4) == wanted((_, no) => no == 3 || no == 4))
+    // file equality prunes the other file entirely
     val one = df.select("file").distinct().orderBy("file").collect().head.getString(0)
     val fOnly = df.filter(col("file") === one && col("scan") === 5)
+    assert(fetched(fOnly, 1) == wanted((f, no) => f == one && no == 5))
+    // at the default cap each file's wanted blocks are one partition
+    assert(df.rdd.getNumPartitions == 2)
+    assert(mid.rdd.getNumPartitions == 2)
     assert(fOnly.rdd.getNumPartitions == 1)
-    assert(fOnly.count() == 1)
   }
 
   test("glob paths expand; malformed data lines are skipped") {
@@ -688,5 +756,124 @@ class SpecDataSourceSpec extends SparkSpec {
     // a residual filter falls back to the row scan — same answer
     val filtered = df.filter(col("scan") === 2).count()
     assert(filtered === 3L)
+  }
+
+  test("packed plan: a multi-file corpus reads one partition per file, rows as per scan") {
+    val dir = Files.createTempDirectory("specpack").toFile
+    val layout = Seq(
+      "a.spec" -> Seq((1, 3), (2, 5), (3, 1), (4, 4)),
+      "b.spec" -> Seq((10, 2), (11, 6), (12, 3)),
+      "c.spec" -> Seq((7, 4), (8, 2), (9, 5), (20, 1), (21, 3)))
+    layout.zipWithIndex.foreach { case ((name, scans), tag) => specFile(dir, name, tag, scans) }
+    def read = spark.read.format("spec").load(dir.getPath)
+    assert(read.rdd.getNumPartitions == 3)
+    packedEqualsPerScan(read, 12)
+    val expect = layout.zipWithIndex.flatMap { case ((_, scans), tag) =>
+      scans.zipWithIndex.flatMap { case ((no, n), k) =>
+        (0 until n).map(p => (no.toLong, p.toLong, det(tag, k, p)))
+      }
+    }
+    assert(points(read) == expect)
+    // each block keeps its own #P under the file's #O names
+    val th = read.select(col("scan"), element_at(col("motors"), "Theta")).distinct().collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(th == layout.flatMap(_._2.map(_._1.toLong).zipWithIndex.map { case (no, k) => no -> (k + 0.5) }).toMap)
+  }
+
+  test("packed plan: duplicates=last seeks over the superseded block") {
+    val dir = Files.createTempDirectory("specpackdup").toFile
+    val scans = Seq((1, 3), (2, 4), (3, 2), (2, 5), (4, 3))
+    val path = specFile(dir, "rerun.spec", 1, scans)
+    def read = spark.read.format("spec").option("duplicates", "last").load(path)
+    assert(read.rdd.getNumPartitions == 1)
+    packedEqualsPerScan(read, 4)
+    // blocks 0, 2, 3, 4 in file order: the first run of scan 2 is skipped
+    val kept = Seq(0, 2, 3, 4)
+    assert(points(read) == kept.flatMap { k =>
+      (0 until scans(k)._2).map(p => (scans(k)._1.toLong, p.toLong, det(1, k, p)))
+    })
+    val bs = blocksOf(path)
+    SpecIOMetrics.reset()
+    read.collect()
+    assert(SpecIOMetrics.total == kept.map(k => bs(k)._4 - bs(k)._3).sum)
+  }
+
+  test("packed plan: a scan IN filter with gaps reads its blocks in one partition") {
+    val dir = Files.createTempDirectory("specpackin").toFile
+    val scans = (1 to 8).map(no => (no, 1 + no % 4))
+    val path = specFile(dir, "in.spec", 2, scans)
+    def read = spark.read.format("spec").load(path).filter(col("scan").isin(2, 3, 6, 8))
+    assert(read.rdd.getNumPartitions == 1)
+    packedEqualsPerScan(read, 4)
+    val kept = Seq(1, 2, 5, 7)
+    assert(points(read) == kept.flatMap { k =>
+      (0 until scans(k)._2).map(p => (scans(k)._1.toLong, p.toLong, det(2, k, p)))
+    })
+    val bs = blocksOf(path)
+    SpecIOMetrics.reset()
+    read.collect()
+    assert(SpecIOMetrics.total == kept.map(k => bs(k)._4 - bs(k)._3).sum)
+  }
+
+  test("packed plan: a small maxPartitionBytes cuts a file into contiguous whole-scan runs") {
+    val dir = Files.createTempDirectory("specpackcap").toFile
+    val scans = (1 to 10).map(no => (no, 2 + no % 3))
+    val path = specFile(dir, "cap.spec", 3, scans)
+    val size = blocksOf(path).map(b => b._2 -> (b._4 - b._3)).toMap
+    val cap = (1L to 3L).map(size).sum
+    withConf("spark.sql.files.maxPartitionBytes" -> cap.toString) {
+      def read = spark.read.format("spec").load(path)
+      val byPart = read.select(spark_partition_id(), col("scan")).distinct().collect()
+        .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+        .map(_._2.map(_.getLong(1)).sorted.toSeq)
+      assert(byPart.size == read.rdd.getNumPartitions && byPart.size >= 3)
+      // every scan exactly once, in file order, each partition a contiguous run
+      assert(byPart.flatten == (1L to 10L))
+      assert(byPart.forall(run => run == (run.head to run.last)))
+      // under the cap, and no run could take its successor's first scan
+      assert(byPart.forall(run => run.size == 1 || run.map(size).sum <= cap))
+      assert(byPart.sliding(2).forall { case Seq(a, b) => a.map(size).sum + size(b.head) > cap })
+      assert(points(read) == scans.zipWithIndex.flatMap { case ((no, n), k) =>
+        (0 until n).map(p => (no.toLong, p.toLong, det(3, k, p)))
+      })
+    }
+    packedEqualsPerScan(spark.read.format("spec").load(path), 10)
+  }
+
+  test("packed plan: each partition opens its file once") {
+    spark.conf.set("fs.countfs.impl", classOf[OpenCountingFileSystem].getName)
+    val dir = Files.createTempDirectory("specpackopen").toFile
+    specFile(dir, "a.spec", 4, (1 to 6).map((_, 3)))
+    specFile(dir, "b.spec", 5, (1 to 6).map((_, 3)))
+    val cap = blocksOf(dir.getPath).take(2).map(b => b._4 - b._3).sum
+    def opensPerPartition(): (Long, Int) = {
+      val df = spark.read.format("spec").load("countfs://" + dir.getPath)
+      val n = df.rdd.getNumPartitions
+      OpenCountingFileSystem.taskOpens.reset()
+      assert(df.collect().length == 36)
+      (OpenCountingFileSystem.taskOpens.sum, n)
+    }
+    assert(opensPerPartition() == ((2L, 2)))
+    val (opens, parts) = withConf("spark.sql.files.maxPartitionBytes" -> cap.toString)(opensPerPartition())
+    assert(parts > 2 && parts < 12 && opens == parts)
+  }
+
+  test("streaming: a micro-batch's completed scans of one file plan one partition") {
+    val dir = Files.createTempDirectory("specpackstream").toFile
+    val path = specFile(dir, "live.spec", 6, Seq((1, 2), (2, 3), (3, 4), (4, 2), (5, 3)))
+    // scans 1-4 are complete; 5 may still be acquiring and waits
+    val stream = new SpecMicroBatchStream(Seq(path),
+      new SerializableHadoopConf(spark.sessionState.newHadoopConf()),
+      SpecSchema.schema.fieldNames, emitLast = false)
+    val parts = stream.planInputPartitions(stream.initialOffset(), stream.latestOffset())
+    assert(parts.length == 1)
+    assert(parts.head.asInstanceOf[SpecInputPartition].blocks.map(_._1).toSeq == Seq(1L, 2L, 3L, 4L))
+    val q = spark.readStream.format("spec").load(path)
+      .writeStream.format("memory").queryName("spec_packed").outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      assert(rowsOf(spark.table("spec_packed")) ==
+        rowsOf(spark.read.format("spec").load(path).filter(col("scan") <= 4)))
+    } finally q.stop()
   }
 }
