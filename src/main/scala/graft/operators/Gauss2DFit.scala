@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative per-frame 2-D Gaussian peak fitting — the CCD-frame
@@ -10,19 +10,15 @@ import org.apache.spark.sql.functions._
   *   v(x, y) = bg + h·exp(−((x−µx)²/(2σx²) + (y−µy)²/(2σy²)))
   *
   * — the axis-aligned 6-parameter peak (bg, h, µx, µy, σx, σy), the
-  * standard beam-spot / diffraction-peak model.
-  *
-  * Execution model: `groupByKey(frame).mapGroups` — each frame fits
-  * independently on one executor core with O(pixels-per-frame)
+  * standard beam-spot / diffraction-peak model, refined by the shared
+  * Levenberg–Marquardt core ([[LeastSquares]]). Each frame fits
+  * independently in one `mapGroups` task with O(pixels-per-frame)
   * memory; a million-frame stack parallelizes across all cores with
-  * one shuffle (the documented SURVEY §2 #10 case where declarative
-  * ops cannot express damped Gauss–Newton). Determinism: pixels are
-  * sorted by (x, y, v), the seed is closed-form moments, iteration
-  * and backtracking counts are fixed.
+  * one shuffle. Determinism: finite pixels are sorted by (x, y, v),
+  * the seed is closed-form moments, the iteration budget is fixed.
   */
 object Gauss2DFit {
 
-  final case class Px(g: Long, x: Double, y: Double, v: Double)
   /** esd_* = sqrt(diag((JᵀJ)⁻¹)·rss/(n−6)) at the solution — the
     * covariance error bars; NaN when degenerate. */
   final case class Fit2(g: Long, n: Long, bg: Double, height: Double,
@@ -30,143 +26,45 @@ object Gauss2DFit {
                         rss: Double, r2: Double, converged: Boolean,
                         esd_height: Double, esd_mux: Double, esd_muy: Double)
 
-  /** Moment seed: 2-D "peakguess" — bg = min, h = max−bg, µ/σ from
-    * (v−bg)-weighted first/second moments per axis. */
-  def seed(xs: Array[Double], ys: Array[Double], vs: Array[Double])
-      : (Double, Double, Double, Double, Double, Double) = {
-    val bg = vs.min
-    val h = vs.max - bg
-    var sw = 0.0; var sx = 0.0; var sy = 0.0; var sx2 = 0.0; var sy2 = 0.0
-    var i = 0
-    while (i < vs.length) {
-      val w = vs(i) - bg
-      sw += w; sx += w * xs(i); sy += w * ys(i)
-      sx2 += w * xs(i) * xs(i); sy2 += w * ys(i) * ys(i)
-      i += 1
-    }
-    val mx = if (sw > 0) sx / sw else xs(xs.length / 2)
-    val my = if (sw > 0) sy / sw else ys(ys.length / 2)
-    val vx = if (sw > 0) math.max(sx2 / sw - mx * mx, 1e-12) else 1.0
-    val vy = if (sw > 0) math.max(sy2 / sw - my * my, 1e-12) else 1.0
-    (bg, h, mx, my, math.sqrt(vx), math.sqrt(vy))
-  }
+  /** The 2-D peak as a [[LeastSquares.Model]], params (bg, h, µx, µy, σx, σy). */
+  case object Gaussian2D extends LeastSquares.Model {
+    val nParams = 6
+    def widths: Array[Int] = Array(4, 5)
 
-  private def rss(xs: Array[Double], ys: Array[Double], vs: Array[Double],
-                  p: Array[Double]): Double = {
-    var acc = 0.0; var i = 0
-    while (i < vs.length) {
-      val dx = xs(i) - p(2); val dy = ys(i) - p(3)
-      val e = math.exp(-(dx * dx / (2 * p(4) * p(4)) + dy * dy / (2 * p(5) * p(5))))
-      val r = vs(i) - (p(0) + p(1) * e)
-      acc += r * r; i += 1
-    }
-    acc
-  }
+    def seed(xs: Array[Double], ys: Array[Double], vs: Array[Double]): Array[Double] =
+      LeastSquares.peakGuess(xs, ys, vs)
 
-  private def buildNormal(xs: Array[Double], ys: Array[Double], vs: Array[Double],
-                          p: Array[Double]): (Array[Array[Double]], Array[Double]) = {
-    val jtj = Array.fill(6)(new Array[Double](6))
-    val jtr = new Array[Double](6)
-    var i = 0
-    while (i < vs.length) {
-      val dx = xs(i) - p(2); val dy = ys(i) - p(3)
+    def value(x: Double, y: Double, p: Array[Double]): Double = {
+      val dx = x - p(2); val dy = y - p(3)
+      p(0) + p(1) * math.exp(-(dx * dx / (2 * p(4) * p(4)) + dy * dy / (2 * p(5) * p(5))))
+    }
+
+    def gradient(x: Double, y: Double, p: Array[Double], g: Array[Double]): Double = {
+      val dx = x - p(2); val dy = y - p(3)
       val sx2 = p(4) * p(4); val sy2 = p(5) * p(5)
-      val e = math.exp(-(dx * dx / (2 * sx2) + dy * dy / (2 * sy2)))
+      val e = math.exp(-(dx * dx / (2 * p(4) * p(4)) + dy * dy / (2 * p(5) * p(5))))
       val he = p(1) * e
-      val j = Array(1.0, e, he * dx / sx2, he * dy / sy2,
-        he * dx * dx / (sx2 * p(4)), he * dy * dy / (sy2 * p(5)))
-      val r = vs(i) - (p(0) + he)
-      var a = 0
-      while (a < 6) {
-        jtr(a) += j(a) * r
-        var b = 0
-        while (b < 6) { jtj(a)(b) += j(a) * j(b); b += 1 }
-        a += 1
-      }
-      i += 1
+      g(0) = 1.0; g(1) = e; g(2) = he * dx / sx2; g(3) = he * dy / sy2
+      g(4) = he * dx * dx / (sx2 * p(4)); g(5) = he * dy * dy / (sy2 * p(5))
+      p(0) + he
     }
-    (jtj, jtr)
   }
 
-  private val NoFit = (Double.NaN, Double.NaN, Double.NaN)
-
-  /** Damped Gauss–Newton from the moment seed; same backtracking
-    * discipline as [[GaussFit.fitArrays]]. */
-  def fitArrays(g: Long, xsIn: Array[Double], ysIn: Array[Double],
-                vsIn: Array[Double], maxIter: Int = 30): Fit2 = {
-    if (vsIn.isEmpty)
-      return Fit2(g, 0, Double.NaN, Double.NaN, Double.NaN, Double.NaN,
-        Double.NaN, Double.NaN, Double.NaN, Double.NaN, converged = false,
-        NoFit._1, NoFit._2, NoFit._3)
-    val order = vsIn.indices.sortBy(i => (xsIn(i), ysIn(i), vsIn(i)))
-    val xs = order.map(xsIn).toArray
-    val ys = order.map(ysIn).toArray
-    val vs = order.map(vsIn).toArray
-    val n = vs.length
-    val s0 = seed(xs, ys, vs)
-    val p = Array(s0._1, s0._2, s0._3, s0._4, s0._5, s0._6)
-    if (n < 7 || p(1) <= 0) {
-      val r = rss(xs, ys, vs, p)
-      return Fit2(g, n, p(0), p(1), p(2), p(3), p(4), p(5), r,
-        GaussFit.rSquared(vs, r), converged = false, NoFit._1, NoFit._2, NoFit._3)
-    }
-    var cur = rss(xs, ys, vs, p)
-    var it = 0
-    var converged = false
-    while (it < maxIter && !converged) {
-      val (jtj, jtr) = buildNormal(xs, ys, vs, p)
-      val d = LineshapeFit.solveLinear(jtj.map(_.clone()), jtr.clone())
-      if (d == null) converged = true
-      else {
-        var step = 1.0
-        var accepted = false
-        var t = 0
-        while (t < 8 && !accepted) {
-          val np = Array(p(0) + step * d(0), p(1) + step * d(1),
-            p(2) + step * d(2), p(3) + step * d(3),
-            { val v = p(4) + step * d(4); if (v > 1e-9) v else p(4) / 2 },
-            { val v = p(5) + step * d(5); if (v > 1e-9) v else p(5) / 2 })
-          val nr = rss(xs, ys, vs, np)
-          if (java.lang.Double.isFinite(nr) && nr <= cur) {
-            if (cur - nr < 1e-12 * (1 + cur)) converged = true
-            System.arraycopy(np, 0, p, 0, 6); cur = nr; accepted = true
-          } else { step /= 2; t += 1 }
-        }
-        if (!accepted) converged = true
-      }
-      it += 1
-    }
-    val esd = {
-      val inv = GaussFit.invDiag(buildNormal(xs, ys, vs, p)._1)
-      if (inv == null) Array(Double.NaN, Double.NaN, Double.NaN, Double.NaN,
-        Double.NaN, Double.NaN)
-      else {
-        val s2 = cur / math.max(1, n - 6)
-        inv.map(v => if (v >= 0) math.sqrt(v * s2) else Double.NaN)
-      }
-    }
-    Fit2(g, n, p(0), p(1), p(2), p(3), math.abs(p(4)), math.abs(p(5)),
-      cur, GaussFit.rSquared(vs, cur), converged, esd(1), esd(2), esd(3))
+  def fitArrays(g: Long, xs: Array[Double], ys: Array[Double], vs: Array[Double]): Fit2 = {
+    val s = LeastSquares.fit(Gaussian2D, xs, ys, vs)
+    val p = s.p
+    Fit2(g, s.n, p(0), p(1), p(2), p(3), math.abs(p(4)), math.abs(p(5)),
+      s.rss, s.r2, s.converged, s.esd(1), s.esd(2), s.esd(3))
   }
 
   /** Per-frame fit over a detector-stack DataFrame (id, width,
     * pixels array): pixels explode to (x = col, y = row, v) and each
     * frame fits in one `mapGroups` task. */
   def fitFrames(df: DataFrame, id: Column, width: Column, pixels: Column): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val px: Dataset[Px] = df
-      .select(id.cast("long").as("g"), width.as("w"),
-        posexplode(pixels).as(Seq("i", "v")))
-      .select(col("g"), (col("i") % col("w")).cast("double").as("x"),
-        ((col("i") - pmod(col("i"), col("w"))) / col("w")).cast("double").as("y"),
-        col("v").cast("double").as("v"))
-      .as[Px]
-    px.groupByKey(_.g)
-      .mapGroups { (g, it) =>
-        val arr = it.toArray
-        fitArrays(g, arr.map(_.x), arr.map(_.y), arr.map(_.v))
-      }
-      .toDF()
+    val px = df.select(id.as("g"), width.as("w"), posexplode(pixels).as(Seq("i", "v")))
+    val i = col("i"); val w = col("w")
+    LeastSquares.fitGroups(px, col("g"), i % w, (i - pmod(i, w)) / w, col("v")) {
+      (g, xs, ys, vs) => fitArrays(g, xs, ys, vs)
+    }
   }
 }

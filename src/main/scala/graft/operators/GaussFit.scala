@@ -1,27 +1,24 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Iterative per-group Gaussian peak fitting — the Spark
   * re-expression of pyspec's lineshape fitting (`fit.py` /
   * `fitfuncs.py` gaussian): y = bg + h·exp(-(x-com)²/(2σ²)).
   *
-  * Execution model: `groupByKey(...).mapGroups` — every group fits
-  * independently on one executor core with O(points-per-group)
-  * memory; 100 TB of scans parallelize across all cores with one
-  * shuffle. This is the documented (SURVEY §2 #10) case where
-  * declarative Spark ops genuinely cannot express the semantics
-  * (damped Gauss–Newton refinement), so a typed Dataset operator is
-  * the right tool — never a driver-side loop.
+  * This is [[LineshapeFit.Gaussian]] on the shared Levenberg–Marquardt
+  * core ([[LeastSquares]]), reported in the gaussian's own row layout.
+  * Every group fits independently in one `mapGroups` task with
+  * O(points-per-group) memory; 100 TB of scans parallelize across all
+  * cores with one shuffle, never a driver-side loop.
   *
-  * Determinism: points are sorted by (x, y) before the fit, the
-  * iteration count is fixed, and the seed comes from closed-form
+  * Determinism: finite points are sorted by (x, y) before the fit, the
+  * iteration budget is fixed, and the seed comes from closed-form
   * moments ("peakguess") — identical results on any cluster layout.
   */
 object GaussFit {
 
-  final case class Point(g: Long, x: Double, y: Double)
   /** `esd_*` are the per-parameter estimated standard deviations at
     * the solution — `sqrt(diag((JᵀJ)⁻¹) · rss/(n−4))`, the error bars
     * pyspec `fit.py` reports from the covariance matrix. NaN when the
@@ -33,189 +30,15 @@ object GaussFit {
                        esd_bg: Double, esd_height: Double,
                        esd_com: Double, esd_sigma: Double)
 
-  /** Coefficient of determination 1 − rss/Σ(y−ȳ)²; NaN for a flat
-    * series (no variance to explain). */
-  private[operators] def rSquared(ys: Array[Double], rss: Double): Double = {
-    val mean = ys.sum / ys.length
-    val ssTot = ys.map(y => (y - mean) * (y - mean)).sum
-    if (ssTot <= 0) Double.NaN else 1.0 - rss / ssTot
-  }
-
-  /** Moment-based seed: pyspec "peakguess". */
-  def seed(xs: Array[Double], ys: Array[Double]): (Double, Double, Double, Double) = {
-    val n = xs.length
-    val bg = ys.min
-    val height = ys.max - bg
-    var sw = 0.0; var swx = 0.0; var swx2 = 0.0
-    var i = 0
-    while (i < n) {
-      val w = ys(i) - bg
-      sw += w; swx += w * xs(i); swx2 += w * xs(i) * xs(i)
-      i += 1
-    }
-    val com = if (sw > 0) swx / sw else xs(n / 2)
-    val variance = if (sw > 0) math.max(swx2 / sw - com * com, 1e-12) else 1.0
-    (bg, height, com, math.sqrt(variance))
-  }
-
-  private def rss(xs: Array[Double], ys: Array[Double],
-                  bg: Double, h: Double, c: Double, s: Double): Double = {
-    var acc = 0.0; var i = 0
-    while (i < xs.length) {
-      val e = math.exp(-(xs(i) - c) * (xs(i) - c) / (2 * s * s))
-      val r = ys(i) - (bg + h * e)
-      acc += r * r; i += 1
-    }
-    acc
-  }
-
-  /** Solve a symmetric 4x4 system in place (Gaussian elimination with
-    * partial pivoting); returns null when singular. */
-  private def solve4(a: Array[Array[Double]], b: Array[Double]): Array[Double] = {
-    val n = 4
-    var col = 0
-    while (col < n) {
-      var piv = col
-      var r = col + 1
-      while (r < n) { if (math.abs(a(r)(col)) > math.abs(a(piv)(col))) piv = r; r += 1 }
-      if (math.abs(a(piv)(col)) < 1e-300) return null
-      if (piv != col) { val t = a(piv); a(piv) = a(col); a(col) = t
-        val tb = b(piv); b(piv) = b(col); b(col) = tb }
-      r = col + 1
-      while (r < n) {
-        val f = a(r)(col) / a(col)(col)
-        var k = col
-        while (k < n) { a(r)(k) -= f * a(col)(k); k += 1 }
-        b(r) -= f * b(col)
-        r += 1
-      }
-      col += 1
-    }
-    val x = new Array[Double](n)
-    var i = n - 1
-    while (i >= 0) {
-      var s = b(i)
-      var k = i + 1
-      while (k < n) { s -= a(i)(k) * x(k); k += 1 }
-      x(i) = s / a(i)(i)
-      i -= 1
-    }
-    x
-  }
-
-  /** Normal equations JᵀJ d = Jᵀr for params (bg, h, c, s). */
-  private def buildNormal(xs: Array[Double], ys: Array[Double],
-                          bg: Double, h: Double, c: Double, s: Double)
-      : (Array[Array[Double]], Array[Double]) = {
-    val jtj = Array.fill(4)(new Array[Double](4))
-    val jtr = new Array[Double](4)
-    var i = 0
-    while (i < xs.length) {
-      val dx = xs(i) - c
-      val e = math.exp(-dx * dx / (2 * s * s))
-      val j = Array(1.0, e, h * e * dx / (s * s), h * e * dx * dx / (s * s * s))
-      val r = ys(i) - (bg + h * e)
-      var p = 0
-      while (p < 4) {
-        jtr(p) += j(p) * r
-        var q = 0
-        while (q < 4) { jtj(p)(q) += j(p) * j(q); q += 1 }
-        p += 1
-      }
-      i += 1
-    }
-    (jtj, jtr)
-  }
-
-  /** diag((JᵀJ)⁻¹) via one pivoted solve per basis vector; null when
-    * singular. The input is copied, not destroyed. */
-  private[operators] def invDiag(jtj: Array[Array[Double]]): Array[Double] = {
-    val n = jtj.length
-    val out = new Array[Double](n)
-    var p = 0
-    while (p < n) {
-      val a = Array.tabulate(n)(i => jtj(i).clone())
-      val b = new Array[Double](n); b(p) = 1.0
-      val x = LineshapeFit.solveLinear(a, b)
-      if (x == null) return null
-      out(p) = x(p)
-      p += 1
-    }
-    out
-  }
-
-  private val NoEsd = Array(Double.NaN, Double.NaN, Double.NaN, Double.NaN)
-
-  /** Damped Gauss–Newton refinement from the moment seed. */
-  def fitArrays(g: Long, xsIn: Array[Double], ysIn: Array[Double],
-                maxIter: Int = 25): Fit = {
-    if (xsIn.isEmpty || ysIn.isEmpty)
-      return Fit(g, 0, Double.NaN, Double.NaN, Double.NaN, Double.NaN, Double.NaN,
-        Double.NaN, converged = false, NoEsd(0), NoEsd(1), NoEsd(2), NoEsd(3))
-    val order = xsIn.indices.sortBy(i => (xsIn(i), ysIn(i)))
-    val xs = order.map(xsIn).toArray
-    val ys = order.map(ysIn).toArray
-    val n = xs.length
-    var (bg, h, c, s) = seed(xs, ys)
-    if (n < 5 || h <= 0) {
-      val r = rss(xs, ys, bg, h, c, s)
-      return Fit(g, n, bg, h, c, s, r, rSquared(ys, r),
-        converged = false, NoEsd(0), NoEsd(1), NoEsd(2), NoEsd(3))
-    }
-    var cur = rss(xs, ys, bg, h, c, s)
-    var it = 0
-    var converged = false
-    while (it < maxIter && !converged) {
-      val (jtj, jtr) = buildNormal(xs, ys, bg, h, c, s)
-      val d = solve4(jtj, jtr)
-      if (d == null) { converged = true }
-      else {
-        // Backtracking: halve the step until rss improves (<= 8 tries).
-        var step = 1.0
-        var accepted = false
-        var t = 0
-        while (t < 8 && !accepted) {
-          val nb = bg + step * d(0); val nh = h + step * d(1)
-          val nc = c + step * d(2); val ns0 = s + step * d(3)
-          val ns = if (ns0 > 1e-9) ns0 else s / 2
-          val nr = rss(xs, ys, nb, nh, nc, ns)
-          if (java.lang.Double.isFinite(nr) && nr <= cur) {
-            if (cur - nr < 1e-12 * (1 + cur)) converged = true
-            bg = nb; h = nh; c = nc; s = ns; cur = nr; accepted = true
-          } else { step /= 2; t += 1 }
-        }
-        if (!accepted) converged = true
-      }
-      it += 1
-    }
-    // Parameter esd at the solution: sqrt(diag((JᵀJ)⁻¹) · rss/(n−4)).
-    // The normal matrix is rebuilt at the FINAL parameters (the one
-    // inside the loop belongs to the pre-step point).
-    val esd = {
-      val inv = invDiag(buildNormal(xs, ys, bg, h, c, s)._1)
-      if (inv == null) NoEsd
-      else {
-        val s2 = cur / math.max(1, n - 4)
-        inv.map(v => if (v >= 0) math.sqrt(v * s2) else Double.NaN)
-      }
-    }
-    Fit(g, n, bg, h, c, math.abs(s), cur, rSquared(ys, cur), converged,
-      esd(0), esd(1), esd(2), esd(3))
+  def fitArrays(g: Long, xs: Array[Double], ys: Array[Double]): Fit = {
+    val f = LineshapeFit.fitArrays(LineshapeFit.Gaussian, g, xs, ys)
+    Fit(f.g, f.n, f.bg, f.height, f.center, f.width, f.rss, f.r2, f.converged,
+      f.esd_bg, f.esd_height, f.esd_center, f.esd_width)
   }
 
   /** Per-group fit over a DataFrame with (group, x, y) columns. */
-  def fitGroups(df: DataFrame, group: String, x: String, y: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val pts: Dataset[Point] = df.select(
-      col(group).cast("long").as("g"),
-      col(x).cast("double").as("x"),
-      col(y).cast("double").as("y")).as[Point]
-    pts.groupByKey(_.g)
-      .mapGroups { (g, it) =>
-        val arr = it.toArray
-        fitArrays(g, arr.map(_.x), arr.map(_.y))
-      }
-      .toDF()
-  }
+  def fitGroups(df: DataFrame, group: String, x: String, y: String): DataFrame =
+    LeastSquares.fitGroups(df, col(group), col(x), lit(0.0), col(y)) { (g, xs, _, ys) =>
+      fitArrays(g, xs, ys)
+    }
 }

@@ -1,56 +1,79 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Generalized per-group lineshape fitting — the full pyspec
   * `fit.py`/`fitfuncs.py` surface (gaussian, lorentzian,
-  * pseudo-voigt), not just the gaussian special case.
+  * pseudo-voigt, power), not just the gaussian special case.
   *
-  * Same execution model as [[GaussFit]] (`mapGroups`, sorted points,
-  * fixed iteration budget, deterministic) with a central-difference
-  * numeric jacobian so adding a lineshape means adding ONE model
-  * function — exactly how the reference's fit framework accepts
-  * arbitrary `fitfuncs`.
+  * Each shape is a [[LeastSquares.Model]]: its value and analytic
+  * gradient over the abscissa x (the second coordinate is unused). The
+  * fit itself — Levenberg–Marquardt, sorted finite points, fixed
+  * iteration budget, esd — is the shared core's.
   */
 object LineshapeFit {
 
-  sealed trait Shape extends Serializable {
+  /** params layout: (bg, height, center, width[, frac]) */
+  sealed trait Shape extends LeastSquares.Model {
     def name: String
-    def nParams: Int
-    /** params layout: (bg, height, center, width[, frac]) */
-    def model(x: Double, p: Array[Double]): Double
-    /** Moment seed (peakguess). */
-    def seed(xs: Array[Double], ys: Array[Double]): Array[Double] = {
-      val (bg, h, c, s) = GaussFit.seed(xs, ys)
-      val base = Array(bg, h, c, s)
+    def widths: Array[Int] = Array(3)
+    /** Moment seed ([[LeastSquares.peakGuess]] along x). */
+    def seed(xs: Array[Double], ys: Array[Double], vs: Array[Double]): Array[Double] = {
+      val g = LeastSquares.peakGuess(xs, ys, vs)
+      val base = Array(g(0), g(1), g(2), g(4))
       if (nParams == 5) base :+ 0.5 else base
     }
   }
 
   case object Gaussian extends Shape {
     val name = "gaussian"; val nParams = 4
-    def model(x: Double, p: Array[Double]): Double =
-      p(0) + p(1) * math.exp(-(x - p(2)) * (x - p(2)) / (2 * p(3) * p(3)))
+    def value(x: Double, y: Double, p: Array[Double]): Double = {
+      val dx = x - p(2)
+      p(0) + p(1) * math.exp(-dx * dx / (2 * p(3) * p(3)))
+    }
+    def gradient(x: Double, y: Double, p: Array[Double], g: Array[Double]): Double = {
+      val dx = x - p(2)
+      val s2 = p(3) * p(3)
+      val e = math.exp(-dx * dx / (2 * p(3) * p(3)))
+      g(0) = 1.0; g(1) = e; g(2) = p(1) * e * dx / s2; g(3) = p(1) * e * dx * dx / (s2 * p(3))
+      p(0) + p(1) * e
+    }
   }
 
   case object Lorentzian extends Shape {
     val name = "lorentzian"; val nParams = 4
-    def model(x: Double, p: Array[Double]): Double = {
+    def value(x: Double, y: Double, p: Array[Double]): Double = {
       val t = (x - p(2)) / p(3)
       p(0) + p(1) / (1 + t * t)
+    }
+    def gradient(x: Double, y: Double, p: Array[Double], g: Array[Double]): Double = {
+      val t = (x - p(2)) / p(3)
+      val l = 1 / (1 + t * t)
+      val dt = p(1) * 2 * t * l * l / p(3) // ∂value/∂center; ∂value/∂width = dt·t
+      g(0) = 1.0; g(1) = l; g(2) = dt; g(3) = dt * t
+      p(0) + p(1) * l
     }
   }
 
   /** Linear mix of gaussian and lorentzian with shared width; p(4) is
-    * the lorentzian fraction in [0, 1]. */
+    * the lorentzian fraction, clamped to [0, 1] (no gradient outside). */
   case object PseudoVoigt extends Shape {
     val name = "pseudo_voigt"; val nParams = 5
-    def model(x: Double, p: Array[Double]): Double = {
+    def value(x: Double, y: Double, p: Array[Double]): Double = {
       val t = (x - p(2)) / p(3)
-      val lor = 1.0 / (1 + t * t)
-      val gau = math.exp(-t * t / 2)
       val f = math.min(1.0, math.max(0.0, p(4)))
+      p(0) + p(1) * (f / (1 + t * t) + (1 - f) * math.exp(-t * t / 2))
+    }
+    def gradient(x: Double, y: Double, p: Array[Double], g: Array[Double]): Double = {
+      val t = (x - p(2)) / p(3)
+      val f = math.min(1.0, math.max(0.0, p(4)))
+      val lor = 1 / (1 + t * t)
+      val gau = math.exp(-t * t / 2)
+      // ∂value/∂center; ∂value/∂width = dt·t
+      val dt = p(1) * (f * 2 * t * lor * lor + (1 - f) * t * gau) / p(3)
+      g(0) = 1.0; g(1) = f * lor + (1 - f) * gau; g(2) = dt; g(3) = dt * t
+      g(4) = if (p(4) > 0 && p(4) < 1) p(1) * (lor - gau) else 0.0
       p(0) + p(1) * (f * lor + (1 - f) * gau)
     }
   }
@@ -64,19 +87,26 @@ object LineshapeFit {
     */
   case object Power extends Shape {
     val name = "power"; val nParams = 3
-    def model(x: Double, p: Array[Double]): Double =
+    override def widths: Array[Int] = Array.empty
+    def value(x: Double, y: Double, p: Array[Double]): Double =
       p(0) + p(1) * math.pow(math.max(x, 1e-300), p(2))
-    override def seed(xs: Array[Double], ys: Array[Double]): Array[Double] = {
-      val bg = ys.min
+    def gradient(x: Double, y: Double, p: Array[Double], g: Array[Double]): Double = {
+      val xm = math.max(x, 1e-300)
+      val xp = math.pow(xm, p(2))
+      g(0) = 1.0; g(1) = xp; g(2) = p(1) * xp * math.log(xm)
+      p(0) + p(1) * xp
+    }
+    override def seed(xs: Array[Double], ys: Array[Double], vs: Array[Double]): Array[Double] = {
+      val bg = vs.min
       val xm = xs.max
-      val amp = if (xm > 0) (ys.last - bg) / math.max(xm, 1e-12) else 1.0
+      val amp = if (xm > 0) (vs.last - bg) / math.max(xm, 1e-12) else 1.0
       Array(bg, if (amp != 0.0) amp else 1.0, 1.0)
     }
   }
 
   /** `esd_*` mirror pyspec `fit.py`'s per-parameter error bars:
-    * `sqrt(diag((JᵀJ)⁻¹) · rss/(n−np))` at the solution (NaN when the
-    * fit degenerates or the shape lacks the parameter — e.g.
+    * `sqrt(diag((JᵀJ)⁻¹) · rss/(n−free))` at the solution (NaN when
+    * the fit degenerates or the shape lacks the parameter — e.g.
     * `esd_frac` for 4-parameter shapes).
     */
   final case class ShapeFit(g: Long, shape: String, n: Long, bg: Double,
@@ -85,221 +115,34 @@ object LineshapeFit {
                             esd_bg: Double, esd_height: Double, esd_center: Double,
                             esd_width: Double, esd_frac: Double)
 
-  private def rss(shape: Shape, xs: Array[Double], ys: Array[Double],
-                  p: Array[Double]): Double = {
-    var acc = 0.0; var i = 0
-    while (i < xs.length) {
-      val r = ys(i) - shape.model(xs(i), p)
-      acc += r * r; i += 1
-    }
-    acc
-  }
-
-  /** Solve a dense n×n system in place; null when singular. */
-  private[operators] def solveLinear(a: Array[Array[Double]], b: Array[Double]): Array[Double] =
-    solveN(a, b)
-
-  private def solveN(a: Array[Array[Double]], b: Array[Double]): Array[Double] = {
-    val n = b.length
-    var c = 0
-    while (c < n) {
-      var piv = c
-      var r = c + 1
-      while (r < n) { if (math.abs(a(r)(c)) > math.abs(a(piv)(c))) piv = r; r += 1 }
-      if (math.abs(a(piv)(c)) < 1e-300) return null
-      if (piv != c) { val t = a(piv); a(piv) = a(c); a(c) = t
-        val tb = b(piv); b(piv) = b(c); b(c) = tb }
-      r = c + 1
-      while (r < n) {
-        val f = a(r)(c) / a(c)(c)
-        var k = c
-        while (k < n) { a(r)(k) -= f * a(c)(k); k += 1 }
-        b(r) -= f * b(c)
-        r += 1
-      }
-      c += 1
-    }
-    val x = new Array[Double](n)
-    var i = n - 1
-    while (i >= 0) {
-      var s = b(i)
-      var k = i + 1
-      while (k < n) { s -= a(i)(k) * x(k); k += 1 }
-      x(i) = s / a(i)(i)
-      i -= 1
-    }
-    x
-  }
-
-  /** Normal equations via a central-difference numeric jacobian. */
-  private def buildNormal(shape: Shape, xs: Array[Double], ys: Array[Double],
-                          p: Array[Double]): (Array[Array[Double]], Array[Double]) = {
-    val n = xs.length
-    val np = shape.nParams
-    val jtj = Array.fill(np)(new Array[Double](np))
-    val jtr = new Array[Double](np)
-    val jrow = new Array[Double](np)
-    var i = 0
-    while (i < n) {
-      var k = 0
-      while (k < np) {
-        val h = math.max(1e-7, 1e-7 * math.abs(p(k)))
-        val pk = p(k)
-        p(k) = pk + h; val up = shape.model(xs(i), p)
-        p(k) = pk - h; val dn = shape.model(xs(i), p)
-        p(k) = pk
-        jrow(k) = (up - dn) / (2 * h)
-        k += 1
-      }
-      val r = ys(i) - shape.model(xs(i), p)
-      var a = 0
-      while (a < np) {
-        jtr(a) += jrow(a) * r
-        var b = 0
-        while (b < np) { jtj(a)(b) += jrow(a) * jrow(b); b += 1 }
-        a += 1
-      }
-      i += 1
-    }
-    (jtj, jtr)
-  }
-
-  /** Levenberg–Marquardt with a central-difference jacobian (the
-    * same solver family as the SciPy `leastsq` backing pyspec's
-    * `fit.py`): the normal equations are damped with λ·diag(JᵀJ)
-    * (Marquardt scaling), λ shrinking ×0.3 on every accepted step
-    * and growing ×10 on rejection — so far-off or ill-conditioned
-    * seeds take safe gradient-descent-like steps where plain
-    * Gauss–Newton's direction is garbage, and the damping vanishes
-    * near the optimum restoring GN's quadratic convergence.
-    * `lm = false` reverts to undamped GN with step-halving (kept for
-    * comparison; the LM path dominates it on hard seeds).
-    *
-    * `fixed` holds parameters at their SEED value (pyspec `fit.py`
-    * `ifix` semantics — e.g. freeze a known background while the
-    * peak refines): fixed parameters take no step, contribute no
-    * jacobian column, and report esd 0.
+  /** Fits one series. `fixed` holds parameters at their SEED value
+    * (pyspec `fit.py` `ifix` semantics — e.g. freeze a known background
+    * while the peak refines): fixed parameters take no step, contribute
+    * no jacobian column, and report esd 0.
     */
-  def fitArrays(shape: Shape, g: Long, xsIn: Array[Double], ysIn: Array[Double],
-                maxIter: Int = 40, fixed: Array[Boolean] = null,
-                lm: Boolean = true): ShapeFit = {
-    if (xsIn.isEmpty || ysIn.isEmpty)
-      return ShapeFit(g, shape.name, 0, Double.NaN, Double.NaN, Double.NaN,
-        Double.NaN, Double.NaN, Double.NaN, Double.NaN, converged = false,
-        Double.NaN, Double.NaN, Double.NaN, Double.NaN, Double.NaN)
-    val order = xsIn.indices.sortBy(i => (xsIn(i), ysIn(i)))
-    val xs = order.map(xsIn).toArray
-    val ys = order.map(ysIn).toArray
-    val n = xs.length
-    val np = shape.nParams
-    require(fixed == null || fixed.length == np,
-      s"fixed mask must have ${np} entries for ${shape.name}")
-    val isFixed: Array[Boolean] = if (fixed == null) Array.fill(np)(false) else fixed
-    val free: Array[Int] = (0 until np).filterNot(isFixed).toArray
-    var p = shape.seed(xs, ys)
-    val noEsd = Array.fill(np)(Double.NaN)
+  def fitArrays(shape: Shape, g: Long, xs: Array[Double], ys: Array[Double],
+                fixed: Array[Boolean] = null): ShapeFit = {
+    val s = LeastSquares.fit(shape, xs, new Array[Double](xs.length), ys, fixed)
+    val (p, esd, np) = (s.p, s.esd, shape.nParams)
     // esd layout follows the param layout: Power (bg, amp, exp) puts
     // its exponent esd under esd_width, matching where `width`
     // carries the exponent itself.
-    def pack(converged: Boolean, cur: Double, esd: Array[Double]) = ShapeFit(
-      g, shape.name, n, p(0), p(1),
+    ShapeFit(g, shape.name, s.n, p(0), p(1),
       if (np >= 4) p(2) else 0.0,
       if (np >= 4) math.abs(p(3)) else p(2),
       if (np == 5) math.min(1.0, math.max(0.0, p(4))) else 0.0,
-      cur, GaussFit.rSquared(ys, cur), converged,
+      s.rss, s.r2, s.converged,
       esd(0), esd(1),
       if (np >= 4) esd(2) else Double.NaN,
       if (np >= 4) esd(3) else esd(2),
       if (np == 5) esd(4) else Double.NaN)
-    if (n < free.length + 1 || free.isEmpty || p(1) <= 0)
-      return pack(converged = false, rss(shape, xs, ys, p), noEsd)
-    // restrict the normal equations to the FREE parameters (fixed
-    // ones take no step and contribute no jacobian column), damp the
-    // diagonal by λ·max(diag, floor), and scatter the solution back.
-    // Fresh copies every call: solveN destroys its inputs and the LM
-    // retry loop re-solves the SAME normal equations under new λ.
-    def solveMasked(jtj: Array[Array[Double]], jtr: Array[Double],
-                    lambda: Double): Array[Double] = {
-      val m = free.length
-      val a = Array.tabulate(m)(i => Array.tabulate(m)(j => jtj(free(i))(free(j))))
-      val b = Array.tabulate(m)(i => jtr(free(i)))
-      var i = 0
-      while (i < m) { a(i)(i) += lambda * math.max(a(i)(i), 1e-12); i += 1 }
-      val x = solveN(a, b)
-      if (x == null) null
-      else {
-        val d = new Array[Double](np)
-        free.zipWithIndex.foreach { case (k, i2) => d(k) = x(i2) }
-        d
-      }
-    }
-    var cur = rss(shape, xs, ys, p)
-    var lambda = if (lm) 1e-3 else 0.0
-    var it = 0
-    var converged = false
-    while (it < maxIter && !converged) {
-      val (jtj, jtr) = buildNormal(shape, xs, ys, p)
-      var step = 1.0
-      var accepted = false
-      var stop = false
-      var t = 0
-      while (t < 12 && !accepted && !stop) {
-        val d = solveMasked(jtj, jtr, lambda)
-        if (d == null) {
-          // singular even after damping: raise λ (LM) or give up (GN)
-          if (lm) { lambda *= 10; t += 1 } else stop = true
-        } else {
-          val cand = p.clone()
-          var k = 0
-          while (k < np) { cand(k) += step * d(k); k += 1 }
-          if (np >= 4 && !isFixed(3) && math.abs(cand(3)) < 1e-9) cand(3) = p(3) / 2
-          val nr = rss(shape, xs, ys, cand)
-          if (java.lang.Double.isFinite(nr) && nr <= cur) {
-            if (cur - nr < 1e-12 * (1 + cur)) converged = true
-            p = cand; cur = nr; accepted = true
-            if (lm) lambda = math.max(1e-12, lambda * 0.3)
-          } else if (lm) { lambda *= 10; t += 1 }
-          else { step /= 2; t += 1 }
-        }
-      }
-      if (!accepted) converged = true
-      it += 1
-    }
-    val esd = {
-      val jtjF = buildNormal(shape, xs, ys, p)._1
-      val reduced =
-        if (free.length == np) jtjF
-        else Array.tabulate(free.length)(i =>
-          Array.tabulate(free.length)(j => jtjF(free(i))(free(j))))
-      val inv = GaussFit.invDiag(reduced)
-      if (inv == null) noEsd
-      else {
-        val s2 = cur / math.max(1, n - free.length)
-        val out = Array.fill(np)(0.0) // fixed parameters: esd 0 by definition
-        free.zipWithIndex.foreach { case (k, i) =>
-          out(k) = if (inv(i) >= 0) math.sqrt(inv(i) * s2) else Double.NaN
-        }
-        out
-      }
-    }
-    pack(converged, cur, esd)
   }
 
   /** Per-group fit over (group, x, y) columns for one lineshape.
     * `fixed` (optional) freezes parameters at their seed (`ifix`). */
   def fitGroups(df: DataFrame, shape: Shape, group: String, x: String, y: String,
-                fixed: Array[Boolean] = null): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val pts: Dataset[GaussFit.Point] = df.select(
-      col(group).cast("long").as("g"),
-      col(x).cast("double").as("x"),
-      col(y).cast("double").as("y")).as[GaussFit.Point]
-    pts.groupByKey(_.g)
-      .mapGroups { (g, it) =>
-        val arr = it.toArray
-        fitArrays(shape, g, arr.map(_.x), arr.map(_.y), fixed = fixed)
-      }
-      .toDF()
-  }
+                fixed: Array[Boolean] = null): DataFrame =
+    LeastSquares.fitGroups(df, col(group), col(x), lit(0.0), col(y)) { (g, xs, _, ys) =>
+      fitArrays(shape, g, xs, ys, fixed)
+    }
 }

@@ -613,7 +613,7 @@ object CcdQueries {
   }
 
   /** #157 — per-frame 2-D Gaussian peak fit (rows-only: iterative
-    * Gauss–Newton is the documented non-SQL-expressible family;
+    * Levenberg–Marquardt is the documented non-SQL-expressible family;
     * parameter recovery on the known-truth fixture is pinned by
     * Gauss2DFitSpec). One `mapGroups` task per frame.
     */

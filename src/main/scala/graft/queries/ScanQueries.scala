@@ -285,9 +285,10 @@ object ScanQueries {
       .orderedSmall(col("event_id"))
   }
 
-  /** Iterative Gauss–Newton fit per scan (SURVEY §2 #10) — not
-    * SQL-expressible, so rows-only gate + ScalaTest tolerance oracle
-    * (GaussFitSpec). Deterministic: fixed iterations, sorted points.
+  /** Iterative Levenberg–Marquardt gaussian fit per scan (SURVEY §2
+    * #10) — not SQL-expressible, so rows-only gate + ScalaTest tolerance
+    * oracle (GaussFitSpec). Deterministic: fixed iteration budget,
+    * sorted points.
     */
   val qGaussFit = GateQuery.rowsOnly("q_gauss_fit") { (s, d) =>
     GaussFit.fitGroups(ev(s, d).select(col("user_id"), col("xs"),

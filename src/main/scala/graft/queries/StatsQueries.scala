@@ -2723,10 +2723,10 @@ object StatsQueries {
   /** The FULL peak-find → Gaussian-fit pipeline (#197): pyspec's
     * canonical interactive workflow (`findpeaks` then `fit`) as one
     * distributed pipeline — [[peakWindows]]' closed-form stages
-    * seeding per-(user, peak) damped Gauss–Newton fits (#10's
+    * seeding per-(user, peak) Levenberg–Marquardt fits (#10's
     * machinery, one task per group). ScalaTest-pinned (StatsEdgeSpec
     * two-peak recovery); the closed-form stages are SQL-gated by
-    * [[qPeakfitPipeline]], so only the GN step itself rides the
+    * [[qPeakfitPipeline]], so only the LM step itself rides the
     * test pin (the q_gauss_fit rows-gate covers its fit surface).
     */
   def peakfitFitted(s: SparkSession, d: String): DataFrame = {
@@ -2747,11 +2747,11 @@ object StatsQueries {
   /** Peak-find pipeline, closed-form stages (#197, SQL-gated r12 —
     * the r11 verdict's one contestable rows-only residue): peak
     * SELECTION (strict ±2 local maxima), the bounded ±6 window
-    * attach, and the per-peak MOMENT SEEDS the Gauss–Newton stage
+    * attach, and the per-peak MOMENT SEEDS the Levenberg–Marquardt stage
     * starts from — weight total, height, micro-floored center of
     * mass and second central moment — all exact integer arithmetic
     * the DuckDB oracle replays (signed-floor division macros, the
-    * ipw/aipw convention). The iterative GN refinement stays outside
+    * ipw/aipw convention). The iterative LM refinement stays outside
     * the SQL gate by nature ([[peakfitFitted]], test-pinned).
     */
   val qPeakfitPipeline = {

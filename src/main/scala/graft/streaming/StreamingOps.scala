@@ -258,7 +258,7 @@ object StreamingOps {
     * accumulate per key; the scan closes after `gapMs` of event-time
     * inactivity (observed in-stream, or via timeout once the
     * watermark passes), and the closed scan is fitted with the SAME
-    * damped Gauss–Newton kernel as the batch operator
+    * Levenberg–Marquardt kernel as the batch operator
     * ([[graft.operators.GaussFit.fitArrays]]) — batch and live fits
     * agree by construction.
     *

@@ -76,4 +76,25 @@ class Gauss2DFitSpec extends SparkSpec {
       assert(math.abs(r.getAs[Double]("mux") - (20.0 + fr)) < 0.1)
     }
   }
+
+  test("null and NaN pixels are skipped: every frame gets a row, n counts finite pixels") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val (xs, ys, vs) = synthFrame(mx = 20.0, my = 16.0, sx = 4.0, sy = 3.0,
+      bg = 5.0, h = 100.0, w = 40, hgt = 32)
+    val holes = Map(300 -> None, 650 -> Some(Double.NaN))
+    val px = vs.indices.map(i => holes.getOrElse(i, Some(vs(i))))
+    val rows = Seq((0L, 40, px), (1L, 40, px)).toDF("frame", "width", "pixels")
+    val out = Gauss2DFit.fitFrames(rows, col("frame"), col("width"), col("pixels"))
+      .as[Gauss2DFit.Fit2].collect().sortBy(_.g)
+    val keep = vs.indices.filterNot(holes.contains)
+    val ref = Gauss2DFit.fitArrays(0L, keep.map(xs).toArray, keep.map(ys).toArray,
+      keep.map(vs).toArray)
+    assert(out.map(_.g).toSeq == Seq(0L, 1L))
+    out.foreach { f =>
+      assert(f.n == vs.length - 2 && f.converged)
+      assert(f.copy(g = 0L) == ref)
+      assert(math.abs(f.mux - 20.0) < 0.1 && math.abs(f.muy - 16.0) < 0.1)
+    }
+  }
 }

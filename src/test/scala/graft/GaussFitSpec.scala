@@ -84,4 +84,24 @@ class GaussFitSpec extends SparkSpec {
       .collect().head
     assert(a == b)
   }
+
+  test("null and NaN y are skipped; a non-finite rss is never converged") {
+    val xs = (-50 to 50).map(_ * 0.1)
+    val clean = xs.map(gauss(1.0, 5.0, 0.3, 1.2))
+    def withHole(k: Int, hole: Option[Double]) = xs.indices.map { i =>
+      (k.toLong, xs(i), if (i == 40) hole else Some(clean(i)))
+    }
+    val df = (withHole(1, None) ++ withHole(2, Some(Double.NaN))).toDF("g", "x", "y")
+    val out = GaussFit.fitGroups(df, "g", "x", "y").as[GaussFit.Fit].collect().sortBy(_.g)
+    val keep = xs.indices.filter(_ != 40)
+    val ref = GaussFit.fitArrays(0L, keep.map(xs).toArray, keep.map(clean).toArray)
+    assert(out.map(_.g).toSeq == Seq(1L, 2L))
+    out.foreach { f =>
+      assert(f.n == xs.length - 1 && f.converged && f.rss < 1e-10)
+      assert(f.copy(g = 0L) == ref)
+    }
+    // residuals of 1e160 square to +Inf: no step can lower the rss
+    val huge = GaussFit.fitArrays(3L, xs.toArray, clean.map(_ * 1e160).toArray)
+    assert(huge.rss.isInfinite && !huge.converged)
+  }
 }

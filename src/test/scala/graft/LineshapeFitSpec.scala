@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.LineshapeFit
+import graft.operators.{Gauss2DFit, LeastSquares, LineshapeFit}
 import graft.operators.LineshapeFit.{Gaussian, Lorentzian, Power, PseudoVoigt}
 
 class LineshapeFitSpec extends SparkSpec {
@@ -100,8 +100,10 @@ class LineshapeFitSpec extends SparkSpec {
       .collect().head
     val ded = graft.operators.GaussFit.fitGroups(pts.toDF("g", "x", "y"), "g", "x", "y")
       .collect().head
-    assert(math.abs(gen.getDouble(gen.fieldIndex("center")) - ded.getDouble(ded.fieldIndex("com"))) < 1e-6)
-    assert(math.abs(gen.getDouble(gen.fieldIndex("width")) - ded.getDouble(ded.fieldIndex("sigma"))) < 1e-6)
+    Seq("bg" -> "bg", "height" -> "height", "center" -> "com", "width" -> "sigma",
+      "rss" -> "rss").foreach { case (g, d) =>
+      assert(gen.getDouble(gen.fieldIndex(g)) == ded.getDouble(ded.fieldIndex(d)), s"$g vs $d")
+    }
   }
 
   test("LM damping converges where undamped GN stalls (ill-conditioned seed)") {
@@ -113,14 +115,66 @@ class LineshapeFitSpec extends SparkSpec {
     // descent-like and the fit lands on the exact generating params.
     val xs = (0 until 60).map(i => i * 5.0).toArray
     val ys = xs.map { x => val t = (x - 151.0) / 2.0; 3.0 + 80.0 / (1 + t * t) }
-    val gn = LineshapeFit.fitArrays(PseudoVoigt, 1, xs, ys, lm = false)
     val lmFit = LineshapeFit.fitArrays(PseudoVoigt, 1, xs, ys)
-    assert(gn.rss > 100.0, s"expected plain GN to stall on this fixture, rss=${gn.rss}")
     assert(lmFit.converged && lmFit.rss < 1e-9, s"LM should solve it, rss=${lmFit.rss}")
     assert(math.abs(lmFit.bg - 3.0) < 1e-5)
     assert(math.abs(lmFit.height - 80.0) < 1e-4)
     assert(math.abs(lmFit.center - 151.0) < 1e-5)
     assert(math.abs(lmFit.width - 2.0) < 1e-4)
     assert(lmFit.frac > 0.99) // pure lorentzian
+  }
+
+  test("each model's analytic gradient matches a central difference") {
+    def check(m: LeastSquares.Model, pts: Seq[(Double, Double)],
+              params: Seq[Array[Double]]): Unit = params.foreach { p =>
+      val g = new Array[Double](m.nParams)
+      pts.foreach { case (x, y) =>
+        val v = m.gradient(x, y, p, g)
+        assert(math.abs(v - m.value(x, y, p)) <= 1e-12 * (1 + math.abs(v)))
+        (0 until m.nParams).foreach { k =>
+          val h = 1e-6 * math.max(1.0, math.abs(p(k)))
+          val up = p.clone(); up(k) += h
+          val dn = p.clone(); dn(k) -= h
+          val num = (m.value(x, y, up) - m.value(x, y, dn)) / (2 * h)
+          assert(math.abs(g(k) - num) <= 1e-6 * (1 + math.abs(num)),
+            s"$m d/dp$k at x=$x y=$y p=${p.mkString(",")}: ${g(k)} vs $num")
+        }
+      }
+    }
+    val line = Seq(-3.0, -0.5, 0.4, 1.7, 4.9, 6.2).map(_ -> 0.0)
+    val peaks = Seq(Array(2.0, 10.0, 5.0, 1.5), Array(0.5, 3.0, -2.0, 0.7),
+      Array(-1.0, 0.2, 0.3, 4.0))
+    check(Gaussian, line, peaks)
+    check(Lorentzian, line, peaks)
+    // the third point's frac lies outside [0, 1], where it is clamped
+    check(PseudoVoigt, line, Seq(Array(0.2, 5.0, -1.0, 1.2, 0.7),
+      Array(1.0, 2.0, 0.5, 0.6, 0.1), Array(0.0, 4.0, 1.0, 2.0, 1.3)))
+    check(Power, Seq(0.3, 1.0, 2.5, 7.0).map(_ -> 0.0),
+      Seq(Array(2.0, 3.0, 1.5), Array(0.5, -1.0, 0.3), Array(1.0, 2.0, 2.7)))
+    check(Gauss2DFit.Gaussian2D, Seq((24.0, 13.0), (30.0, 10.0), (8.0, 26.0), (0.5, -1.2)),
+      Seq(Array(7.0, 200.0, 25.0, 14.0, 5.0, 3.0), Array(20.0, 150.0, 8.0, 26.0, 2.5, 6.0),
+        Array(0.0, 1.0, 0.0, 0.0, 1.0, 2.0)))
+  }
+
+  test("null and NaN y are skipped: every group gets a row, n counts finite points") {
+    val (bg, h, c, g) = (1.0, 6.0, 2.5, 0.8)
+    val xs = (-120 to 120).map(i => c + i * 0.05)
+    val clean = xs.map(x => bg + h / (1 + math.pow((x - c) / g, 2)))
+    def withHole(k: Int, hole: Option[Double]) = xs.indices.map { i =>
+      (k.toLong, xs(i), if (i == 100) hole else Some(clean(i)))
+    }
+    val df = (withHole(1, None) ++ withHole(2, Some(Double.NaN))).toDF("g", "x", "y")
+    val out = LineshapeFit.fitGroups(df, Lorentzian, "g", "x", "y").as[LineshapeFit.ShapeFit]
+      .collect().sortBy(_.g)
+    val keep = xs.indices.filter(_ != 100)
+    val ref = LineshapeFit.fitArrays(Lorentzian, 0L, keep.map(xs).toArray,
+      keep.map(clean).toArray)
+    assert(out.map(_.g).toSeq == Seq(1L, 2L))
+    out.foreach { f =>
+      assert(f.n == xs.length - 1 && f.converged)
+      // string form: esd_frac is NaN for a 4-parameter shape
+      assert(f.copy(g = 0L).toString == ref.toString)
+      assert(math.abs(f.center - c) < 1e-5 && math.abs(f.width - g) < 1e-5)
+    }
   }
 }
