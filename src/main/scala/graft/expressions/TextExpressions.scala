@@ -231,11 +231,11 @@ case class MinHashSigExpr(child: Expression, k: Int, numPerms: Int)
       while (j < k) { if (j > 0) sb.append(' '); sb.append(tokens(i + j)); j += 1 }
       val key = TextExpressions.shingleKey(md, sb.toString)
       if (seen.add(key)) {
-        val k32 = key & 0xFFFFFFFFL
+        val kr = key % TextOps.PermPrime
         var p = 0
         while (p < numPerms) {
           val (a, b) = consts(p)
-          val h = (a * k32 + b) % TextOps.M61
+          val h = (a * kr + b) % TextOps.PermPrime
           if (h < mins(p)) mins(p) = h
           p += 1
         }

@@ -16,18 +16,12 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Exploded (id, shingle-key) relation, distinct per doc. The
-    * shingle array is materialized once per row so hashing happens
-    * exactly once per shingle per side. `fast` switches to
-    * engine-local xxhash64 keys (see [[TextOps.shinglesFast]]).
+  /** Exploded (id, shingle-key) relation, distinct per doc, over
+    * engine-local xxhash64 keys (see [[TextOps.shinglesFast]]; the
+    * native expression hashes each shingle exactly once per row).
     */
-  private def shingleRel(docs: DataFrame, id: Column, text: Column, k: Int,
-                         fast: Boolean): DataFrame = {
-    // Native expression for the fast path (tight per-row loop); the
-    // HOF TextOps.shingles stays for the portable md5 path.
-    val shl =
-      if (fast) graft.expressions.TextExpressions.shingleKeysFast(text, k)
-      else TextOps.shingles(text, k)
+  private def shingleRel(docs: DataFrame, id: Column, text: Column, k: Int): DataFrame = {
+    val shl = graft.expressions.TextExpressions.shingleKeysFast(text, k)
     docs.select(id.as("doc_id"), shl.as("shl"))
       .select(col("doc_id"), explode(col("shl")).as("h"),
         size(col("shl")).cast("long").as("m"))
@@ -69,7 +63,7 @@ object Dedup {
     // hot-key cap a 100 TB corpus needs (a shingle in f docs emits
     // f²/2 pairs; web-scale boilerplate shingles would dominate the
     // shuffle while contributing nothing to high-similarity pairs).
-    val sh = shingleRel(docs, id, text, k, fast = true)
+    val sh = shingleRel(docs, id, text, k)
     val grouped = sh.groupBy(col("h"))
       .agg(collect_list(struct(col("doc_id"), col("m"))).as("ds"))
       .filter(size(col("ds")) >= 2)

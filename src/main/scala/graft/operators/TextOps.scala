@@ -75,22 +75,27 @@ object TextOps {
     ((bh(s"a:$i") % ((1L << 28) - 1)) + 1, bh(s"b:$i") % (1L << 28))
   }
 
-  /** Mersenne prime 2^61 - 1 for the universal-hash modulus. */
-  val M61 = 2305843009213693951L
+  /** Mersenne prime 2^31 − 1, the MinHash permutation modulus. The
+    * shingle key is reduced below it first, so a_i (< 2^28) times the
+    * reduced key stays under 2^59 — no long overflow — while the
+    * product wraps the modulus, so every permutation orders the
+    * shingles differently. [[permHash]], [[permHashSql]] and the
+    * native `MinHashSigExpr` all compute h_i with this constant.
+    */
+  val PermPrime = 2147483647L
 
-  /** Arithmetic MinHash permutation over a 60-bit shingle key column:
-    * h_i = (a_i * (key & 0xFFFFFFFF) + b_i) mod M61. 28-bit a_i times
-    * 32-bit key stays under 2^60 — no overflow, no md5 per perm.
+  /** Arithmetic MinHash permutation over a non-negative shingle key
+    * column: h_i = (a_i * (key mod P) + b_i) mod P, P = [[PermPrime]].
     */
   def permHash(i: Int, key: Column): Column = {
     val (a, b) = permConsts(i)
-    pmod(lit(a) * key.bitwiseAND(lit(0xFFFFFFFFL)) + lit(b), lit(M61))
+    pmod(lit(a) * pmod(key, lit(PermPrime)) + lit(b), lit(PermPrime))
   }
 
   /** DuckDB SQL mirror of [[permHash]]. */
   def permHashSql(i: Int, key: String): String = {
     val (a, b) = permConsts(i)
-    s"(($a * (($key) & 4294967295) + $b) % $M61)"
+    s"(($a * (($key) % $PermPrime) + $b) % $PermPrime)"
   }
 
   /** Token base-hash array — project this ONCE and feed the result to

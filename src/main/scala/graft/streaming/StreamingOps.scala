@@ -1,20 +1,37 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming operators (SURVEY.md §2 #34–#35) — the live
   * counterpart of pyspec's scan monitoring: windowed detector-count
-  * aggregation with late-data watermarks, and scan-boundary detection
-  * (sessionization) via `flatMapGroupsWithState`.
+  * aggregation with late-data watermarks, scan-boundary detection
+  * (sessionization) and the per-key stream monitors.
   *
-  * Both transforms are source-agnostic: the same code runs over a
+  * These transforms are source-agnostic: the same code runs over a
   * MemoryStream in tests, a Kafka topic, or a file drop-box, because
-  * they only describe the logical streaming plan. State is per-key
-  * and O(1) per session — watermark-driven eviction bounds executor
-  * memory at any input rate.
+  * they only describe the logical streaming plan.
+  *
+  * Per-key contract, owned by one core (`Keyed`):
+  *  - Reading order: a key's rows of one micro-batch are folded in
+  *    (event time, operator tie-break) order, so a result does not
+  *    depend on arrival order or on how rows split into batches.
+  *  - [[IdleEvict]]: with a policy the input is watermarked by
+  *    `watermarkDelay`, and a key's state is removed once the
+  *    watermark passes the latest event time of its last batch +
+  *    `idleMs`; the key restarts from its initial state if it returns.
+  *    The timeout is always armed strictly above the current
+  *    watermark. `None` keeps the state for the life of the query.
+  *  - Gap sessions (`sessionize`, `fitPeaksStream`) close after
+  *    `gapMs` of event-time inactivity; a session the watermark closes
+  *    emits its row on the timeout (emit-on-timeout).
+  * The gap sessions, `nearDupStream` and the per-reading monitors are
+  * `step` functions on the core; `qteStream` and `benfordStream` fold
+  * a whole batch and use only its watermark, timeout and eviction
+  * parts. The heavy-hitter, HHI and itemset operators bound state by
+  * sketch or window instead.
   */
 object StreamingOps {
 
@@ -37,20 +54,78 @@ object StreamingOps {
     require(idleMs > 0, s"idleMs not positive: $idleMs")
   }
 
-  private def timeoutOf(e: Option[IdleEvict]): GroupStateTimeout =
-    if (e.isDefined) GroupStateTimeout.EventTimeTimeout()
-    else GroupStateTimeout.NoTimeout()
-
-  /** Arm the per-key idle timeout at (last event time + idle horizon),
-    * clamped strictly above the current watermark (required by the
-    * EventTimeTimeout contract when late keys straggle in).
+  /** The per-key state core: watermark, timeout mode, reading order,
+    * state update and eviction for every keyed monitor (see the
+    * contract in the object header). A monitor is a `step`.
     */
-  private def armEviction(state: GroupState[_], e: Option[IdleEvict],
-                          lastEventMs: Long): Unit =
-    e.foreach { p =>
-      state.setTimeoutTimestamp(
-        math.max(lastEventMs + p.idleMs, state.getCurrentWatermarkMs + 1L))
-    }
+  private object Keyed {
+
+    /** When a key's state ends: `watermark` (if set) is applied to the
+      * input's `ts` column, and the state expires once the watermark
+      * passes the key's last event time + `horizonMs`. */
+    final case class Expiry(watermark: Option[String], horizonMs: Long)
+
+    /** A gap session's end: its last event time (the timeout clock —
+      * not the batch's latest reading, since an out-of-order batch can
+      * end before the open session does) and the row it emits when
+      * the watermark closes it. */
+    final case class Session[K, S, O](lastMs: S => Long, close: (K, S) => O)
+
+    def idle(e: Option[IdleEvict]): Option[Expiry] =
+      e.map(p => Expiry(Some(p.watermarkDelay), p.idleMs))
+
+    def watermarked[E](in: Dataset[E], e: Option[Expiry]): Dataset[E] =
+      e.flatMap(_.watermark).fold(in)(in.withWatermark("ts", _))
+
+    def timeoutOf(e: Option[Expiry]): GroupStateTimeout =
+      if (e.isDefined) GroupStateTimeout.EventTimeTimeout()
+      else GroupStateTimeout.NoTimeout()
+
+    /** Arm the key's timeout at (last event time + horizon), clamped
+      * strictly above the current watermark (required by the
+      * EventTimeTimeout contract when late keys straggle in). */
+    def armEviction(state: GroupState[_], e: Option[Expiry], lastEventMs: Long): Unit =
+      e.foreach { p =>
+        state.setTimeoutTimestamp(
+          math.max(lastEventMs + p.horizonMs, state.getCurrentWatermarkMs + 1L))
+      }
+
+    /** Group `in` by `key` and fold each key's batch, sorted by
+      * (`ts`, `tie`), through `step`: it gets the key's state (None
+      * for a fresh key) and one row, and returns the new state and at
+      * most one output row. A key whose state is still None stores
+      * nothing. On expiry the state is removed and a `session` emits
+      * its closing row.
+      */
+    def apply[E, K: Encoder, S: Encoder, O: Encoder, T: Ordering](
+        in: Dataset[E], mode: OutputMode, expiry: Option[Expiry])(
+        key: E => K, ts: E => Timestamp, tie: E => T)(
+        step: (K, Option[S], E) => (Option[S], Option[O]),
+        session: Option[Session[K, S, O]] = None): Dataset[O] =
+      watermarked(in, expiry).groupByKey(key)
+        .flatMapGroupsWithState[S, O](mode, timeoutOf(expiry)) {
+          (k: K, rows: Iterator[E], state: GroupState[S]) =>
+            if (state.hasTimedOut) {
+              val last = state.get
+              state.remove()
+              session.map(_.close(k, last)).iterator
+            } else {
+              val sorted = rows.toSeq.sortBy(e => (ts(e).getTime, tie(e)))
+              var st = state.getOption
+              val out = sorted.flatMap { e =>
+                val (next, o) = step(k, st, e)
+                st = next
+                o
+              }
+              st.foreach { s =>
+                state.update(s)
+                armEviction(state, expiry,
+                  session.fold(ts(sorted.last).getTime)(_.lastMs(s)))
+              }
+              out.iterator
+            }
+        }
+  }
 
   /** Event-time windowed aggregation with a watermark: per (window,
     * key) event count and total value, emitted once finalized (Append
@@ -198,10 +273,11 @@ object StreamingOps {
     * and band-key derivation so batch and stream bucket identically.
     *
     * Plan: per-row native signature → explode band keys (bands× fan
-    * out of fixed-width keys, never payloads) → `flatMapGroupsWithState`
-    * keyed by band holding ONE doc id per band. State is evicted
-    * `ttlMs` past each band's latest event time once the watermark
-    * passes — memory is O(distinct bands in horizon), not O(stream).
+    * out of fixed-width keys, never payloads) → the keyed-state core,
+    * keyed by band, holding ONE doc id per band (reading order
+    * (ts, docId)). State is evicted `ttlMs` past the latest event time
+    * of a band's last batch once the watermark passes — memory is
+    * O(distinct bands in horizon), not O(stream).
     * A doc hitting b bands of an earlier doc emits b hits; consumers
     * dedup (docId, dupOf) downstream if they need pair-distinct
     * output (kept in the operator's output so the band that matched
@@ -210,6 +286,7 @@ object StreamingOps {
   def nearDupStream(docs: DataFrame, timeCol: String, idCol: String, textCol: String,
                     k: Int, numPerms: Int, bands: Int,
                     watermarkDelay: String, ttlMs: Long): Dataset[BandHit] = {
+    require(ttlMs > 0, s"ttlMs not positive: $ttlMs")
     import docs.sparkSession.implicits._
     val sig = graft.expressions.TextExpressions.minHashSig(col(textCol), k, numPerms)
     val banded = docs.withWatermark(timeCol, watermarkDelay)
@@ -220,32 +297,17 @@ object StreamingOps {
       .select(concat_ws(":", col("bd.band"), col("bd.bh")).as("band"),
         col("docId"), col("eventTs").as("ts"))
       .as[BandDoc]
-    banded.groupByKey(_.band)
-      .flatMapGroupsWithState[BandFirst, BandHit](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (band: String, rows: Iterator[BandDoc], state: GroupState[BandFirst]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            // arrival order within a batch is made deterministic
-            val sorted = rows.toSeq.sortBy(d => (d.ts.getTime, d.docId))
-            var first = state.getOption
-            var maxTs = 0L
-            val hits = Seq.newBuilder[BandHit]
-            for (d <- sorted) {
-              maxTs = math.max(maxTs, d.ts.getTime)
-              first match {
-                case None => first = Some(BandFirst(d.docId))
-                case Some(f) if f.firstId != d.docId => hits += BandHit(d.docId, f.firstId, band)
-                case _ => ()
-              }
-            }
-            first.foreach { f =>
-              state.update(f)
-              state.setTimeoutTimestamp(maxTs + ttlMs)
-            }
-            hits.result().iterator
-          }
-      }
+    // the watermark sits on the document stream (above), so documents
+    // too short to have a signature still advance it
+    Keyed(banded, OutputMode.Append(), Some(Keyed.Expiry(None, ttlMs)))(
+        _.band, _.ts, _.docId) {
+      (band: String, first: Option[BandFirst], d: BandDoc) =>
+        first match {
+          case None => (Some(BandFirst(d.docId)), None)
+          case Some(f) if f.firstId != d.docId => (first, Some(BandHit(d.docId, f.firstId, band)))
+          case _ => (first, None)
+        }
+    }
   }
 
   final case class ScanPoint(user: Long, ts: Timestamp, x: Double, y: Double)
@@ -267,44 +329,27 @@ object StreamingOps {
     * closes. The input must already carry a watermark on `ts`.
     */
   def fitPeaksStream(ds: Dataset[ScanPoint], gapMs: Long): Dataset[ScanFit] = {
+    require(gapMs > 0, s"gapMs not positive: $gapMs")
     import ds.sparkSession.implicits._
     def fitOf(user: Long, st: ScanFitState): ScanFit = {
       val f = graft.operators.GaussFit.fitArrays(
         user, st.xs.reverse.toArray, st.ys.reverse.toArray)
       ScanFit(user, f.n, f.bg, f.height, f.com, f.sigma, f.converged)
     }
-    ds.groupByKey(_.user)
-      .flatMapGroupsWithState[ScanFitState, ScanFit](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, events: Iterator[ScanPoint], state: GroupState[ScanFitState]) =>
-          if (state.hasTimedOut) {
-            val st = state.get
-            state.remove()
-            Iterator(fitOf(user, st))
-          } else {
-            val sorted = events.toSeq.sortBy(e => (e.ts.getTime, e.x, e.y))
-            val closed = Seq.newBuilder[ScanFit]
-            var cur = state.getOption
-            for (e <- sorted) {
-              val t = e.ts.getTime
-              cur match {
-                case Some(st) if t - st.last > gapMs =>
-                  closed += fitOf(user, st)
-                  cur = Some(ScanFitState(List(e.x), List(e.y), t))
-                case Some(st) =>
-                  cur = Some(ScanFitState(e.x :: st.xs, e.y :: st.ys,
-                    math.max(st.last, t)))
-                case None =>
-                  cur = Some(ScanFitState(List(e.x), List(e.y), t))
-              }
-            }
-            cur.foreach { st =>
-              state.update(st)
-              state.setTimeoutTimestamp(st.last + gapMs)
-            }
-            closed.result().iterator
-          }
-      }
+    Keyed(ds, OutputMode.Append(), Some(Keyed.Expiry(None, gapMs)))(
+        _.user, _.ts, e => (e.x, e.y))(
+      (user: Long, cur: Option[ScanFitState], e: ScanPoint) => {
+        val t = e.ts.getTime
+        cur match {
+          case Some(st) if t - st.last > gapMs =>
+            (Some(ScanFitState(List(e.x), List(e.y), t)), Some(fitOf(user, st)))
+          case Some(st) =>
+            (Some(ScanFitState(e.x :: st.xs, e.y :: st.ys, math.max(st.last, t))), None)
+          case None =>
+            (Some(ScanFitState(List(e.x), List(e.y), t)), None)
+        }
+      },
+      Some(Keyed.Session((st: ScanFitState) => st.last, fitOf)))
   }
 
   final case class Evt(user: Long, ts: Timestamp, value: Double)
@@ -319,40 +364,26 @@ object StreamingOps {
     * The input must already carry a watermark on `ts`.
     */
   def sessionize(ds: Dataset[Evt], gapMs: Long): Dataset[SessionOut] = {
+    require(gapMs > 0, s"gapMs not positive: $gapMs")
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.user)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, events: Iterator[Evt], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(SessionOut(user, s.start, s.last, s.n, s.total))
-          } else {
-            val sorted = events.toSeq.sortBy(e => (e.ts.getTime, e.value))
-            val closed = Seq.newBuilder[SessionOut]
-            var cur = state.getOption
-            for (e <- sorted) {
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.last > gapMs =>
-                  closed += SessionOut(user, s.start, s.last, s.n, s.total)
-                  cur = Some(SessionState(t, t, 1, e.value))
-                case Some(s) =>
-                  // out-of-order but within-watermark events may extend
-                  // the session backwards as well as forwards
-                  cur = Some(SessionState(math.min(s.start, t), math.max(s.last, t), s.n + 1, s.total + e.value))
-                case None =>
-                  cur = Some(SessionState(t, t, 1, e.value))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.last + gapMs)
-            }
-            closed.result().iterator
-          }
-      }
+    def out(user: Long, s: SessionState) = SessionOut(user, s.start, s.last, s.n, s.total)
+    Keyed(ds, OutputMode.Append(), Some(Keyed.Expiry(None, gapMs)))(
+        _.user, _.ts, _.value)(
+      (user: Long, cur: Option[SessionState], e: Evt) => {
+        val t = e.ts.getTime
+        cur match {
+          case Some(s) if t - s.last > gapMs =>
+            (Some(SessionState(t, t, 1, e.value)), Some(out(user, s)))
+          case Some(s) =>
+            // out-of-order but within-watermark events may extend
+            // the session backwards as well as forwards
+            (Some(SessionState(math.min(s.start, t), math.max(s.last, t),
+              s.n + 1, s.total + e.value)), None)
+          case None =>
+            (Some(SessionState(t, t, 1, e.value)), None)
+        }
+      },
+      Some(Keyed.Session((s: SessionState) => s.last, out)))
   }
 
   /** Live quality filtering: score each arriving document with a
@@ -470,31 +501,19 @@ object StreamingOps {
     */
   def zscoreStream(points: Dataset[ZPoint], window: Int,
                    idleEvict: Option[IdleEvict] = None): Dataset[ZFlag] = {
+    require(window >= 1, s"window not positive: $window")
     import points.sparkSession.implicits._
-    idleEvict.map(e => points.withWatermark("ts", e.watermarkDelay))
-      .getOrElse(points)
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[ZState, ZFlag](
-        OutputMode.Update(), timeoutOf(idleEvict)) {
-        (user: Long, rows: Iterator[ZPoint], state: GroupState[ZState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var ring = state.getOption.map(_.ring.toVector).getOrElse(Vector.empty)
-            val pts = rows.toSeq.sortBy(p => (p.ts.getTime, p.x))
-            val out = pts.map { p =>
-              val n = ring.length.toLong
-              val s = ring.sum
-              val q = ring.map(v => v * v).sum
-              val dev = n * p.x - s
-              val flagged = n >= 4 && dev * dev > 9L * (n * q - s * s)
-              ring = (ring :+ p.x).takeRight(window)
-              ZFlag(user, p.ts, p.x, n.toInt, flagged)
-            }
-            state.update(ZState(ring))
-            armEviction(state, idleEvict, pts.last.ts.getTime)
-            out.iterator
-          }
-      }
+    Keyed(points, OutputMode.Update(), Keyed.idle(idleEvict))(_.user, _.ts, _.x) {
+      (user: Long, prev: Option[ZState], p: ZPoint) =>
+        val ring = prev.map(_.ring.toVector).getOrElse(Vector.empty)
+        val n = ring.length.toLong
+        val s = ring.sum
+        val q = ring.map(v => v * v).sum
+        val dev = n * p.x - s
+        val flagged = n >= 4 && dev * dev > 9L * (n * q - s * s)
+        (Some(ZState((ring :+ p.x).takeRight(window))),
+          Some(ZFlag(user, p.ts, p.x, n.toInt, flagged)))
+    }
   }
 
   /** Streaming heavy hitters — the live counterpart of
@@ -692,39 +711,25 @@ object StreamingOps {
                         lambdaMicro: Long,
                         idleEvict: Option[IdleEvict] = None): Dataset[PhOut] = {
     import points.sparkSession.implicits._
-    idleEvict.map(e => points.withWatermark("ts", e.watermarkDelay))
-      .getOrElse(points)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[PhState, PhOut](
-        OutputMode.Update(), timeoutOf(idleEvict)) {
-        (key: Long, rows: Iterator[PhPoint], state: GroupState[PhState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.getOrElse(PhState(0L, 0L, 0L, 0L))
-            val pts = rows.toSeq.sortBy(p => (p.ts.getTime, p.x))
-            val out = pts.map { p =>
-              val n = st.n + 1
-              val s = st.s + p.x
-              // increment = x − s/n − δ in micro units, floor division on
-              // the exact rational (x·n − s)·1e6 / n; n grows without
-              // bound so the ×1e6 product is formed in BigInt (the
-              // decayStream convention) — long math overflows once
-              // n·|deviation| exceeds ~9.2e12
-              val num = (BigInt(p.x) * n - s) * 1000000L
-              val den = BigInt(n)
-              val (q0, r0) = num /% den
-              val inc = (if (r0.signum < 0) q0 - 1 else q0).toLong - deltaMicro
-              val m = st.mMicro + inc
-              val mn = math.min(st.minMicro, m)
-              st = PhState(n, s, m, mn)
-              val ph = m - mn
-              PhOut(key, p.ts, p.x, ph, ph > lambdaMicro)
-            }
-            state.update(st)
-            armEviction(state, idleEvict, pts.last.ts.getTime)
-            out.iterator
-          }
-      }
+    Keyed(points, OutputMode.Update(), Keyed.idle(idleEvict))(_.key, _.ts, _.x) {
+      (key: Long, prev: Option[PhState], p: PhPoint) =>
+        val st = prev.getOrElse(PhState(0L, 0L, 0L, 0L))
+        val n = st.n + 1
+        val s = st.s + p.x
+        // increment = x − s/n − δ in micro units, floor division on
+        // the exact rational (x·n − s)·1e6 / n; n grows without
+        // bound so the ×1e6 product is formed in BigInt (the
+        // decayStream convention) — long math overflows once
+        // n·|deviation| exceeds ~9.2e12
+        val num = (BigInt(p.x) * n - s) * 1000000L
+        val den = BigInt(n)
+        val (q0, r0) = num /% den
+        val inc = (if (r0.signum < 0) q0 - 1 else q0).toLong - deltaMicro
+        val m = st.mMicro + inc
+        val mn = math.min(st.minMicro, m)
+        val ph = m - mn
+        (Some(PhState(n, s, m, mn)), Some(PhOut(key, p.ts, p.x, ph, ph > lambdaMicro)))
+    }
   }
 
   final case class DecayPoint(key: Long, ts: Timestamp, v: Long)
@@ -750,6 +755,7 @@ object StreamingOps {
     */
   def decayStream(points: Dataset[DecayPoint], halflifeSec: Long,
                   idleEvict: Option[IdleEvict] = None): Dataset[DecayOut] = {
+    require(halflifeSec > 0, s"halflifeSec not positive: $halflifeSec")
     import points.sparkSession.implicits._
     val tab = graft.queries.AnalysisQueries.decayTabMicro.toArray
     val h = halflifeSec
@@ -760,31 +766,17 @@ object StreamingOps {
       val b = ((64L * (dt % h)) / h).toInt
       (((BigInt(total) * tab(b)) >> k.toInt) / 1000000L).toLong
     }
-    idleEvict.map(e => points.withWatermark("ts", e.watermarkDelay))
-      .getOrElse(points)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[DecayState, DecayOut](
-        OutputMode.Update(), timeoutOf(idleEvict)) {
-        (key: Long, rows: Iterator[DecayPoint], state: GroupState[DecayState]) =>
-          // a decayed key's state is also VALUE-dead after enough idle
-          // half-lives (totals decay to 0), so eviction loses nothing
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.getOrElse(DecayState(Long.MinValue, 0L, 0L))
-            val pts = rows.toSeq.sortBy(p => (p.ts.getTime, p.v))
-            val out = pts.map { p =>
-              val sec = p.ts.getTime / 1000L
-              val dt = if (st.lastSec == Long.MinValue) 0L else sec - st.lastSec
-              val n2 = decay(st.nMicro, dt) + 1000000L
-              val s2 = decay(st.sumMicro, dt) + p.v * 1000000L
-              st = DecayState(sec, n2, s2)
-              DecayOut(key, p.ts, n2, s2)
-            }
-            state.update(st)
-            armEviction(state, idleEvict, pts.last.ts.getTime)
-            out.iterator
-          }
-      }
+    // a decayed key's state is also VALUE-dead after enough idle
+    // half-lives (totals decay to 0), so eviction loses nothing
+    Keyed(points, OutputMode.Update(), Keyed.idle(idleEvict))(_.key, _.ts, _.v) {
+      (key: Long, prev: Option[DecayState], p: DecayPoint) =>
+        val st = prev.getOrElse(DecayState(Long.MinValue, 0L, 0L))
+        val sec = p.ts.getTime / 1000L
+        val dt = if (st.lastSec == Long.MinValue) 0L else sec - st.lastSec
+        val n2 = decay(st.nMicro, dt) + 1000000L
+        val s2 = decay(st.sumMicro, dt) + p.v * 1000000L
+        (Some(DecayState(sec, n2, s2)), Some(DecayOut(key, p.ts, n2, s2)))
+    }
   }
 
   /** Streaming frequent-itemset monitor (#321) — the live counterpart
@@ -877,27 +869,14 @@ object StreamingOps {
                   threshold: Long,
                   idleEvict: Option[IdleEvict] = None): Dataset[CuFlag] = {
     import points.sparkSession.implicits._
-    idleEvict.map(e => points.withWatermark("ts", e.watermarkDelay))
-      .getOrElse(points)
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[CuState, CuFlag](
-        OutputMode.Update(), timeoutOf(idleEvict)) {
-        (user: Long, rows: Iterator[CuPoint], state: GroupState[CuState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.getOrElse(CuState(0L, 0L))
-            val pts = rows.toSeq.sortBy(p => (p.ts.getTime, p.x))
-            val out = pts.map { p =>
-              val pNew = st.p + (p.x - target)
-              st = CuState(pNew, math.min(st.minP, pNew))
-              val s = pNew - math.min(0L, st.minP)
-              CuFlag(user, p.ts, p.x, s, s > threshold)
-            }
-            state.update(st)
-            armEviction(state, idleEvict, pts.last.ts.getTime)
-            out.iterator
-          }
-      }
+    Keyed(points, OutputMode.Update(), Keyed.idle(idleEvict))(_.user, _.ts, _.x) {
+      (user: Long, prev: Option[CuState], p: CuPoint) =>
+        val st = prev.getOrElse(CuState(0L, 0L))
+        val pNew = st.p + (p.x - target)
+        val minP = math.min(st.minP, pNew)
+        val s = pNew - math.min(0L, minP)
+        (Some(CuState(pNew, minP)), Some(CuFlag(user, p.ts, p.x, s, s > threshold)))
+    }
   }
 
   final case class HlPoint(user: Long, ts: java.sql.Timestamp, x: Long)
@@ -928,37 +907,22 @@ object StreamingOps {
       val h = md.digest(s"hl:$user:$tsMs:$x".getBytes("UTF-8"))
       java.lang.Long.parseLong(h.take(4).map(b => f"$b%02x").mkString, 16)
     }
-    idleEvict.map(e => points.withWatermark("ts", e.watermarkDelay))
-      .getOrElse(points)
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[HlState, HlOut](
-        OutputMode.Update(), timeoutOf(idleEvict)) {
-        (user: Long, rows: Iterator[HlPoint], state: GroupState[HlState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.getOrElse(HlState(0L, Seq.empty))
-            val pts = rows.toSeq.sortBy(p => (p.ts.getTime, p.x))
-            val out = pts.map { p =>
-              val t = p.ts.getTime
-              val entry = (prio(user, t, p.x), t, p.x, p.x)
-              val merged = (st.res :+ entry)
-                .sortBy(e => (e._1, e._2, e._3)).take(cap)
-              st = HlState(st.nSeen + 1, merged)
-              val vals = merged.map(_._4).sorted
-              val m = vals.length
-              val walsh = (for {
-                i <- 0 until m; j <- i until m
-              } yield vals(i) + vals(j)).sorted
-              val nPairs = walsh.length
-              val hl2 = walsh((nPairs + 1) / 2 - 1)
-              HlOut(user, p.ts, st.nSeen, m.toLong, hl2,
-                math.floorDiv(hl2, 2L))
-            }
-            state.update(st)
-            armEviction(state, idleEvict, pts.last.ts.getTime)
-            out.iterator
-          }
-      }
+    Keyed(points, OutputMode.Update(), Keyed.idle(idleEvict))(_.user, _.ts, _.x) {
+      (user: Long, prev: Option[HlState], p: HlPoint) =>
+        val st = prev.getOrElse(HlState(0L, Seq.empty))
+        val t = p.ts.getTime
+        val entry = (prio(user, t, p.x), t, p.x, p.x)
+        val merged = (st.res :+ entry)
+          .sortBy(e => (e._1, e._2, e._3)).take(cap)
+        val vals = merged.map(_._4).sorted
+        val m = vals.length
+        val walsh = (for {
+          i <- 0 until m; j <- i until m
+        } yield vals(i) + vals(j)).sorted
+        val hl2 = walsh((walsh.length + 1) / 2 - 1)
+        (Some(HlState(st.nSeen + 1, merged)),
+          Some(HlOut(user, p.ts, st.nSeen + 1, m.toLong, hl2, math.floorDiv(hl2, 2L))))
+    }
   }
 
   final case class QtePoint(user: Long, ts: java.sql.Timestamp, cents: Long)
@@ -1075,11 +1039,14 @@ object StreamingOps {
         }
       }
     }
-    idleEvict.map(e => pre.withWatermark("ts", e.watermarkDelay))
-      .getOrElse(pre)
+    // the pre-reduce folds a batch's drop counts in before its points
+    // and arms eviction from the carrier's raw max event time, so this
+    // monitor keeps its own fold and uses only the core's policy parts
+    val expiry = Keyed.idle(idleEvict)
+    Keyed.watermarked(pre, expiry)
       .groupByKey(_ => 0L)
       .flatMapGroupsWithState[QteState, QteOut](
-        OutputMode.Update(), timeoutOf(idleEvict)) {
+        OutputMode.Update(), Keyed.timeoutOf(expiry)) {
         (_: Long, rows: Iterator[QtePre], state: GroupState[QteState]) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
@@ -1114,7 +1081,7 @@ object StreamingOps {
             // arm from the batch's true max raw event time (the
             // carrier's maxTsMs), not the max SURVIVOR ts — the
             // newest points may have lost the reservoir lottery
-            armEviction(state, idleEvict,
+            Keyed.armEviction(state, expiry,
               math.max(pts.last.ts.getTime, prs.map(_.maxTsMs).max))
             out.iterator
           }
@@ -1193,33 +1160,20 @@ object StreamingOps {
                     idleEvict: Option[IdleEvict] = None): Dataset[CepMatch] = {
     require(withinUs > 0, s"window not positive: $withinUs")
     import evts.sparkSession.implicits._
-    idleEvict.map(e => evts.withWatermark("ts", e.watermarkDelay))
-      .getOrElse(evts)
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[CepState, CepMatch](
-        OutputMode.Append(), timeoutOf(idleEvict)) {
-        (user: Long, rows: Iterator[CepEvt], state: GroupState[CepState]) =>
-          // an idle key's anchor A is only matchable within withinUs
-          // anyway, so any idleMs ≥ withinUs/1000 evicts losslessly
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.getOrElse(CepState(Long.MinValue))
-            val out = scala.collection.mutable.ArrayBuffer.empty[CepMatch]
-            val seq = rows.toSeq.sortBy(e => (e.ts.getTime, e.etype))
-            seq.foreach { e =>
-              val us = e.ts.getTime * 1000L
-              if (e.etype == typeB && st.lastAUs != Long.MinValue &&
-                  us - st.lastAUs <= withinUs && us >= st.lastAUs) {
-                out += CepMatch(user, new java.sql.Timestamp(st.lastAUs / 1000L),
-                  e.ts, us - st.lastAUs)
-              }
-              if (e.etype == typeA) st = CepState(us)
-            }
-            state.update(st)
-            armEviction(state, idleEvict, seq.last.ts.getTime)
-            out.iterator
-          }
-      }
+    // an idle key's anchor A is only matchable within withinUs
+    // anyway, so any idleMs ≥ withinUs/1000 evicts losslessly
+    Keyed(evts, OutputMode.Append(), Keyed.idle(idleEvict))(_.user, _.ts, _.etype) {
+      (user: Long, prev: Option[CepState], e: CepEvt) =>
+        val st = prev.getOrElse(CepState(Long.MinValue))
+        val us = e.ts.getTime * 1000L
+        val hit =
+          if (e.etype == typeB && st.lastAUs != Long.MinValue &&
+              us - st.lastAUs <= withinUs && us >= st.lastAUs)
+            Some(CepMatch(user, new java.sql.Timestamp(st.lastAUs / 1000L),
+              e.ts, us - st.lastAUs))
+          else None
+        (Some(if (e.etype == typeA) CepState(us) else st), hit)
+    }
   }
 
   final case class KPoint(user: Long, ts: java.sql.Timestamp, y: Double)
@@ -1239,31 +1193,17 @@ object StreamingOps {
                    idleEvict: Option[IdleEvict] = None): Dataset[KEst] = {
     require(q >= 0 && r > 0, s"bad noise parameters: q=$q r=$r")
     import points.sparkSession.implicits._
-    idleEvict.map(e => points.withWatermark("ts", e.watermarkDelay))
-      .getOrElse(points)
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[KState, KEst](
-        OutputMode.Update(), timeoutOf(idleEvict)) {
-        (user: Long, rows: Iterator[KPoint], state: GroupState[KState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.getOrElse(KState(0.0, 0.0, seen = false))
-            val pts = rows.toSeq.sortBy(p => (p.ts.getTime, p.y))
-            val out = pts.map { pt =>
-              var k = 1.0
-              if (!st.seen) st = KState(pt.y, r, seen = true)
-              else {
-                val pPred = st.p + q
-                k = pPred / (pPred + r)
-                st = KState(st.l + k * (pt.y - st.l), (1 - k) * pPred, seen = true)
-              }
-              KEst(user, pt.ts, pt.y, st.l, k)
-            }
-            state.update(st)
-            armEviction(state, idleEvict, pts.last.ts.getTime)
-            out.iterator
-          }
-      }
+    Keyed(points, OutputMode.Update(), Keyed.idle(idleEvict))(_.user, _.ts, _.y) {
+      (user: Long, prev: Option[KState], pt: KPoint) =>
+        val (st, k) = prev match {
+          case Some(s) if s.seen =>
+            val pPred = s.p + q
+            val gain = pPred / (pPred + r)
+            (KState(s.l + gain * (pt.y - s.l), (1 - gain) * pPred, seen = true), gain)
+          case _ => (KState(pt.y, r, seen = true), 1.0)
+        }
+        (Some(st), Some(KEst(user, pt.ts, pt.y, st.l, k)))
+    }
   }
 
   final case class TouchEvt(user: Long, ts: java.sql.Timestamp, eventId: Long,
@@ -1286,38 +1226,22 @@ object StreamingOps {
   def attributionStream(evts: Dataset[TouchEvt], lookbackUs: Long,
                         idleEvict: Option[IdleEvict] = None): Dataset[Credit] = {
     import evts.sparkSession.implicits._
-    idleEvict.map(e => evts.withWatermark("ts", e.watermarkDelay))
-      .getOrElse(evts)
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[TouchState, Credit](
-        OutputMode.Update(), timeoutOf(idleEvict)) {
-        (user: Long, rows: Iterator[TouchEvt], state: GroupState[TouchState]) =>
-          // an idle key's carried touch can only credit a purchase
-          // within lookbackUs, so idleMs ≥ lookbackUs/1000 is lossless
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.orNull
-            val out = scala.collection.mutable.ArrayBuffer.empty[Credit]
-            val seq = rows.toSeq.sortBy(e => (e.ts.getTime, e.eventId))
-            seq.foreach { e =>
-              val tsUs = e.ts.getTime * 1000L
-              if (e.eventType != "purchase") {
-                // later (ts, id) always wins — the running max's carry
-                if (st == null || tsUs > st.tsUs ||
-                    (tsUs == st.tsUs && e.eventId > st.eventId))
-                  st = TouchState(tsUs, e.eventId, e.eventType)
-              } else {
-                val touch =
-                  if (st == null || st.tsUs < tsUs - lookbackUs) "none"
-                  else st.eventType
-                out += Credit(user, e.ts, e.eventId, touch, e.cents)
-              }
-            }
-            if (st != null) state.update(st)
-            if (state.exists) armEviction(state, idleEvict, seq.last.ts.getTime)
-            out.iterator
-          }
-      }
+    // an idle key's carried touch can only credit a purchase
+    // within lookbackUs, so idleMs ≥ lookbackUs/1000 is lossless;
+    // a purchase-only user keeps no state at all
+    Keyed(evts, OutputMode.Update(), Keyed.idle(idleEvict))(_.user, _.ts, _.eventId) {
+      (user: Long, st: Option[TouchState], e: TouchEvt) =>
+        val tsUs = e.ts.getTime * 1000L
+        if (e.eventType != "purchase") {
+          // later (ts, id) always wins — the running max's carry
+          val later = st.forall(s => tsUs > s.tsUs ||
+            (tsUs == s.tsUs && e.eventId > s.eventId))
+          (if (later) Some(TouchState(tsUs, e.eventId, e.eventType)) else st, None)
+        } else {
+          val touch = st.filter(_.tsUs >= tsUs - lookbackUs).fold("none")(_.eventType)
+          (st, Some(Credit(user, e.ts, e.eventId, touch, e.cents)))
+        }
+    }
   }
 
   final case class BenfordPoint(ts: Timestamp, key: Long, v: Long)
@@ -1341,20 +1265,22 @@ object StreamingOps {
     import points.sparkSession.implicits._
     val expected = (1 to 9).map(dd =>
       math.floor(math.log10(1.0 + 1.0 / dd) * 1e6).toLong).toArray
-    idleEvict.map(e => points.withWatermark("ts", e.watermarkDelay))
-      .getOrElse(points)
+    // emits once per batch (not per reading), so it keeps its own fold
+    // and uses only the core's policy parts
+    val expiry = Keyed.idle(idleEvict)
+    Keyed.watermarked(points, expiry)
       .groupByKey(_.key)
       .flatMapGroupsWithState[Seq[Long], BenfordOut](
-        OutputMode.Update(), timeoutOf(idleEvict)) {
+        OutputMode.Update(), Keyed.timeoutOf(expiry)) {
         (key: Long, rows: Iterator[BenfordPoint], state: GroupState[Seq[Long]]) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else benfordUpdate(key, rows, state, expected, idleEvict)
+          else benfordUpdate(key, rows, state, expected, expiry)
       }
   }
 
   private def benfordUpdate(key: Long, rows: Iterator[BenfordPoint],
                             state: GroupState[Seq[Long]], expected: Array[Long],
-                            idleEvict: Option[IdleEvict]): Iterator[BenfordOut] = {
+                            expiry: Option[Keyed.Expiry]): Iterator[BenfordOut] = {
     val counts = state.getOption.map(_.toArray).getOrElse(new Array[Long](9))
     var lastMs = Long.MinValue
     rows.foreach { p =>
@@ -1363,7 +1289,7 @@ object StreamingOps {
       if (v > 0) { while (v >= 10) v /= 10; counts(v.toInt - 1) += 1 }
     }
     state.update(counts.toSeq)
-    armEviction(state, idleEvict, lastMs)
+    Keyed.armEviction(state, expiry, lastMs)
     val n = counts.sum
     if (n == 0) Iterator.empty
     else {
@@ -1412,45 +1338,37 @@ object StreamingOps {
     require(k >= 1 && k <= 18, s"k out of range: $k")
     val w9 = Array.tabulate(k)(d => BigInt(9).pow(d) * 1000000L)
     val dn = Array.tabulate(k)(d => BigInt(10).pow(d + 1) * (d + 1))
-    events.groupByKey(_ => 0L)
-      .flatMapGroupsWithState[ChurnState, ChurnOut](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[ChurnEvent], state: GroupState[ChurnState]) =>
-          var st = state.getOption.getOrElse(
-            ChurnState(Long.MinValue, Map.empty, Seq.empty))
-          val out = scala.collection.mutable.ArrayBuffer.empty[ChurnOut]
-          def topOf(m: Map[Long, Long]): Seq[Long] =
-            m.toSeq.sortBy { case (u, sp) => (-sp, u) }.take(k).map(_._1)
-          def rboPpm(cur: Seq[Long], prev: Seq[Long]): Long = {
-            var acc = 0L
-            var d = 1
-            while (d <= k) {
-              val a = cur.take(d).toSet.intersect(prev.take(d).toSet).size.toLong
-              acc += ((a * w9(d - 1)) / dn(d - 1)).toLong // positive → / floors
-              d += 1
-            }
-            acc
-          }
-          def finalizeDay(): Unit = {
-            val top = topOf(st.users)
-            if (st.prevTop.nonEmpty && top.nonEmpty)
-              out += ChurnOut(st.day, top.size.toLong, rboPpm(top, st.prevTop))
-            st = ChurnState(st.day, Map.empty,
-              if (top.nonEmpty) top else st.prevTop)
-          }
-          rows.toSeq.sortBy(e => (e.ts.getTime, e.user)).foreach { e =>
-            val day = e.ts.getTime / 1000L / 86400L
-            if (st.day == Long.MinValue) st = st.copy(day = day)
-            else if (day > st.day) { finalizeDay(); st = st.copy(day = day) }
-            val m = st.users.updated(e.user,
-              st.users.getOrElse(e.user, 0L) + e.spend)
-            st = st.copy(users =
-              if (m.size <= candidateCap) m
-              else m.toSeq.sortBy { case (u, sp) => (-sp, u) }
-                .take(candidateCap).toMap)
-          }
-          state.update(st)
-          out.iterator
+    def topOf(m: Map[Long, Long]): Seq[Long] =
+      m.toSeq.sortBy { case (u, sp) => (-sp, u) }.take(k).map(_._1)
+    def rboPpm(cur: Seq[Long], prev: Seq[Long]): Long = {
+      var acc = 0L
+      var d = 1
+      while (d <= k) {
+        val a = cur.take(d).toSet.intersect(prev.take(d).toSet).size.toLong
+        acc += ((a * w9(d - 1)) / dn(d - 1)).toLong // positive → / floors
+        d += 1
       }
+      acc
+    }
+    Keyed(events, OutputMode.Update(), None)(_ => 0L, _.ts, _.user) {
+      (_: Long, prev: Option[ChurnState], e: ChurnEvent) =>
+        val st = prev.getOrElse(ChurnState(Long.MinValue, Map.empty, Seq.empty))
+        val day = e.ts.getTime / 1000L / 86400L
+        // the first event of a later day closes the current one
+        val (cur, closed) =
+          if (st.day == Long.MinValue || day <= st.day) (st, None)
+          else {
+            val top = topOf(st.users)
+            (ChurnState(st.day, Map.empty, if (top.nonEmpty) top else st.prevTop),
+              if (st.prevTop.nonEmpty && top.nonEmpty)
+                Some(ChurnOut(st.day, top.size.toLong, rboPpm(top, st.prevTop)))
+              else None)
+          }
+        val m = cur.users.updated(e.user, cur.users.getOrElse(e.user, 0L) + e.spend)
+        (Some(ChurnState(math.max(day, st.day),
+          if (m.size <= candidateCap) m
+          else m.toSeq.sortBy { case (u, sp) => (-sp, u) }.take(candidateCap).toMap,
+          cur.prevTop)), closed)
+    }
   }
 }

@@ -450,12 +450,12 @@ class StreamingSpec extends SparkSpec {
   test("nearDupStream flags later docs sharing LSH bands with an earlier doc") {
     implicit val ctx = spark.sqlContext
     val base = "the quick brown fox jumps over the lazy dog while counting many tokens"
-    // "holding" picked so the changed shingles don't displace any
-    // per-permutation minimum: the two docs share all 4 band keys
-    // under the deterministic md5-seeded permutations (verified
-    // against the kernel's arithmetic) — the test is not at the mercy
-    // of LSH collision probability
-    val nearDup = base.replace("counting", "holding")
+    // "reading" picked so the two docs agree on 5 of the 8 signature
+    // components, two whole bands among them, under the deterministic
+    // md5-seeded permutations (checked against the kernel's
+    // arithmetic) — the test is not at the mercy of LSH collision
+    // probability
+    val nearDup = base.replace("counting", "reading")
     val unrelated = "completely different content about spark structured streaming state stores"
     val input = MemoryStream[(Timestamp, Long, String)]
     val hits = StreamingOps.nearDupStream(
@@ -829,6 +829,90 @@ class StreamingSpec extends SparkSpec {
       assert(u1.map(_.level).toSeq === Seq(10.0, 50.0))
       assert(u1.forall(_.gain === 1.0))
     } finally q2.stop()
+  }
+
+  test("idle-evict contract: every IdleEvict monitor drops a silent key, keeps a live one") {
+    implicit val ctx = spark.sqlContext
+    import StreamingOps._
+    // input rows (ts, key, v); v = 100 opens a key, v = 400 returns to it.
+    // Each case maps them onto the monitor's input and names the output
+    // key column and the columns that reveal the key's carried state.
+    final case class Monitor(name: String, keyCol: String, sigCols: Seq[String],
+                             run: (org.apache.spark.sql.DataFrame, Option[IdleEvict]) =>
+                               org.apache.spark.sql.DataFrame,
+                             mode: OutputMode = OutputMode.Update())
+    val etype = when(col("v") === 100L, "view").otherwise("purchase")
+    val monitors = Seq(
+      Monitor("zscore", "user", Seq("n_win"), (df, e) => zscoreStream(
+        df.select(col("key").as("user"), col("ts"), col("v").as("x")).as[ZPoint], 8, e).toDF()),
+      Monitor("page-hinkley", "key", Seq("ph_micro"), (df, e) => pageHinkleyStream(
+        df.select(col("key"), col("ts"), col("v").as("x")).as[PhPoint], 0L, 1000000000000L, e)
+        .toDF()),
+      Monitor("decay", "key", Seq("decayed_n_micro"), (df, e) => decayStream(
+        df.select(col("key"), col("ts"), col("v")).as[DecayPoint], 3600L, e).toDF()),
+      Monitor("cusum", "user", Seq("cusum"), (df, e) => cusumStream(
+        df.select(col("key").as("user"), col("ts"), col("v").as("x")).as[CuPoint],
+        0L, 1000000L, e).toDF()),
+      Monitor("hodges-lehmann", "user", Seq("nSeen", "nRes"), (df, e) => hlStream(
+        df.select(col("key").as("user"), col("ts"), col("v").as("x")).as[HlPoint], 32, e).toDF()),
+      Monitor("kalman", "user", Seq("level", "gain"), (df, e) => kalmanStream(
+        df.select(col("key").as("user"), col("ts"), col("v").cast("double").as("y")).as[KPoint],
+        0.5, 2.0, e).toDF()),
+      Monitor("pattern", "user", Seq("gapUs"), (df, e) => patternStream(
+        df.select(col("key").as("user"), col("ts"), etype.as("etype")).as[CepEvt],
+        "view", "purchase", 1000L * 1000000L, e).toDF(), OutputMode.Append()),
+      Monitor("attribution", "user", Seq("touchType"), (df, e) => attributionStream(
+        df.select(col("key").as("user"), col("ts"), (col("key") * 1000L + col("v")).as("eventId"),
+          etype.as("eventType"), lit(0L).as("cents")).as[TouchEvt],
+        1000L * 1000000L, e).toDF()),
+      Monitor("benford", "key", Seq("n"), (df, e) => benfordStream(
+        df.select(col("ts"), col("key"), col("v")).as[BenfordPoint], e).toDF()))
+    // qteStream is left out: its state sits under one global key, so no
+    // other key can advance the watermark while it stays silent.
+    monitors.foreach { m =>
+      val input = MemoryStream[(Timestamp, Long, Long)]
+      val out = m.run(input.toDF().toDF("ts", "key", "v"),
+        Some(IdleEvict("10 seconds", idleMs = 60000L)))
+      val name = "evict_" + m.name.replace("-", "_")
+      val q = out.writeStream.format("memory").queryName(name)
+        .outputMode(m.mode).start()
+      try {
+        input.addData((ts(0), 1L, 100L))    // key 1 reads once, then goes silent
+        q.processAllAvailable()
+        input.addData((ts(280), 3L, 100L), (ts(300), 2L, 100L)) // key 3 stays inside 60 s
+        q.processAllAvailable()
+        input.addData((ts(310), 2L, 100L))  // the watermark passes key 1's horizon
+        q.processAllAvailable()
+        val before = spark.table(name).count().toInt
+        // keys 1 and 3 return; key 4 is new and shows a fresh state's output
+        input.addData((ts(320), 1L, 400L), (ts(320), 3L, 400L), (ts(320), 4L, 400L))
+        q.processAllAvailable()
+        val last = spark.table(name).collect().drop(before)
+        def sig(key: Long): Seq[String] = last
+          .filter(r => r.getAs[Long](m.keyCol) == key)
+          .map(r => m.sigCols.map(c => String.valueOf(r.getAs[Any](c))).mkString(",")).toSeq.sorted
+        assert(sig(1L) == sig(4L), s"${m.name}: evicted key 1 must restart from scratch")
+        assert(sig(3L) != sig(4L), s"${m.name}: key 3 inside the horizon must keep its state")
+      } finally q.stop()
+    }
+  }
+
+  test("monitors reject out-of-range parameters when built") {
+    implicit val ctx = spark.sqlContext
+    import StreamingOps._
+    val docs = MemoryStream[(Timestamp, Long, String)].toDF().toDF("ts", "doc_id", "text")
+    val builds: Seq[(String, () => Any)] = Seq(
+      "decayStream halflifeSec = 0" ->
+        (() => decayStream(MemoryStream[DecayPoint].toDS(), halflifeSec = 0L)),
+      "zscoreStream window = 0" -> (() => zscoreStream(MemoryStream[ZPoint].toDS(), window = 0)),
+      "nearDupStream ttlMs = 0" -> (() => nearDupStream(docs, "ts", "doc_id", "text",
+        k = 3, numPerms = 8, bands = 4, watermarkDelay = "10 seconds", ttlMs = 0L)),
+      "sessionize gapMs = 0" -> (() => sessionize(MemoryStream[Evt].toDS(), gapMs = 0L)),
+      "fitPeaksStream gapMs = 0" ->
+        (() => fitPeaksStream(MemoryStream[ScanPoint].toDS(), gapMs = 0L)))
+    builds.foreach { case (name, build) =>
+      withClue(name) { intercept[IllegalArgumentException](build()) }
+    }
   }
 
   test("streaming drift monitor: on-reference windows score near 0, shifted ones alarm") {

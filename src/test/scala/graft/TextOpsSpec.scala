@@ -74,6 +74,20 @@ class TextOpsSpec extends SparkSpec {
     assert(out(0).getDouble(out(0).fieldIndex("est_sim")) == 1.0)
   }
 
+  test("minhashPairs: permutations differ, so Jaccard-0.5 docs match on some components only") {
+    // a = t0..t16 (15 word 3-grams); b keeps t0..t11 and appends 5
+    // new words: 10 shared 3-grams of 20 distinct -> J = 0.5. With
+    // every permutation keeping the same shingle the signatures agree
+    // on all 64 components or on none.
+    val a = (0 to 16).map(i => s"t$i").mkString(" ")
+    val b = ((0 to 11).map(i => s"t$i") ++ (0 to 4).map(i => s"u$i")).mkString(" ")
+    val df = Seq((1L, a), (2L, b)).toDF("id", "text")
+    val out = Dedup.minhashPairs(df, col("id"), col("text"), 3, 64, 64, 1).collect()
+    assert(out.length == 1, "one shared component should make the pair a candidate")
+    val nMatch = out(0).getLong(out(0).fieldIndex("n_match"))
+    assert(nMatch > 0L && nMatch < 64L, s"n_match = $nMatch")
+  }
+
   test("minhashPairs: hot-band cap bounds a block of identical docs") {
     // 1000 byte-identical boilerplate docs collide in EVERY band —
     // uncapped that is 1000*999/2 candidates from each band bucket.
