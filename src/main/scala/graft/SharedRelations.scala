@@ -246,18 +246,25 @@ object SharedRelations {
     * each re-derived with a full corpus parse + explode per call.
     * Production serves lexical retrieval from exactly this
     * materialized postings structure next to the corpus. Keyed by
-    * the caller's workload `key` (term sets are fixed driver-side
-    * workloads, not data).
+    * the distinct sorted term set, so two workloads share a slice
+    * only when they ask for the same terms.
     */
-  def queryPostings(s: SparkSession, d: String, key: String,
-                    terms: Seq[String]): DataFrame =
-    snapshot(s, s"qpost-$key", d)(
+  def queryPostings(s: SparkSession, d: String, terms: Seq[String]): DataFrame =
+    snapshot(s, "qpost-" + termSetKey(terms), d)(
       docTokens(s, d)
         .select(col("doc_id"), size(col("w")).cast("long").as("dl"),
           explode(col("w")).as("term"))
         .filter(col("term").isin(terms: _*))
         .groupBy(col("doc_id"), col("dl"), col("term"))
         .agg(count(lit(1)).as("tf")))
+
+  /** SHA-256 hex of the distinct sorted terms, NUL-joined — a short
+    * snapshot key that differs whenever the term sets differ. */
+  private def termSetKey(terms: Seq[String]): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(terms.distinct.sorted.mkString("\u0000")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
 
   /** (n_docs, total tokens) of the documents corpus — session-cached
     * driver scalars (the BM25 / query-likelihood normalizers; both

@@ -471,7 +471,7 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIters: Int = 20, jumpAfter: Int = 4,
-                          driverMaxEdges: Long = DriverCcMaxEdges): DataFrame = {
+                          driverMaxEdges: Long = DriverBound.rows): DataFrame = {
     val caller = pairs.sparkSession
     val spark = caller.newSession()
     val edgeRows = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
@@ -501,12 +501,15 @@ object Dedup {
     // a capped LSH/cell stage are usually MINUTE relative to the corpus
     // (hundreds of pairs from 60k docs at sf0.1), and the iterative
     // loop bills 5-10 scheduled jobs to close them — ~3 s of pure
-    // overhead measured at local[32]. Under a hard edge bound the exact
-    // same fixed point (every node → its component MINIMUM) comes from
-    // one collect + union-find + createDataFrame. The distributed loop
-    // below is unchanged as the 100 TB path; the bound is rows, not a
-    // fraction, so a pathological pair explosion can't pull a corpus
-    // through the driver.
+    // overhead measured at local[32]. Under the driver row budget
+    // (doubled arcs, [[DriverBound.rows]]) the exact same fixed point
+    // (every node → its component MINIMUM) comes from one collect +
+    // union-find + createDataFrame. The distributed loop below is the
+    // 100 TB path; the bound is rows, not a fraction, so a pathological
+    // pair explosion can't pull a corpus through the driver. The test
+    // is count-based, not [[DriverBound.driverOr]]: the count on the
+    // checkpointed edges already feeds the empty-input and AQE
+    // decisions.
     if (edgeCount <= driverMaxEdges) {
       driverUnionFind(edges, caller) match {
         case Some(out) => return out
@@ -580,13 +583,6 @@ object Dedup {
     * logical plan is the bare checkpointed-RDD scan). */
   private def isCheckpointBacked(df: DataFrame): Boolean =
     df.queryExecution.logical.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-
-  /** Edge bound for the driver union-find fast path in
-    * [[connectedComponents]]: 2M doubled arcs ≈ 1M pairs ≈ tens of MB
-    * collected — driver model-state scale (the IvfIndex/PqIndex
-    * budget), far below any corpus.
-    */
-  private val DriverCcMaxEdges = 2000000L
 
   /** Exact min-label components on the driver: union-find with path
     * compression, then each root's component minimum under the id

@@ -154,22 +154,18 @@ object Graphs {
   private val BroadcastPeelMax = 2000000L
 
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 50,
-            driverMaxEdges: Long = DriverGraphMaxEdges): DataFrame = {
+            driverMaxEdges: Long = DriverBound.rows): DataFrame = {
     require(k >= 1, s"k out of range: $k")
-    // Bounded driver fast path (the Dedup.connectedComponents
-    // discipline): peeling runs to a DATA-DEPENDENT fixpoint, and each
-    // distributed round bills ~2 scheduled jobs — on a graph whose
-    // edge list fits the hard driver bound, one collect + an O(E)
-    // bucket peel replaces every round. Exact same fixpoint; the
-    // distributed loop below is unchanged as the 100 TB path. The
-    // probe is limit-based (r8 advisory): a 100 TB relation answers
-    // "more than the bound" from its first partitions instead of
-    // paying a full count scan just to reject the fast path; the
-    // probe and the collect are ONE fused action (r9).
-    collectUnderBound(edges.select(col("u"), col("v")), driverMaxEdges) match {
-      case Some(rows) => return kCoreDriver(edges, rows, k)
-      case None =>
-    }
+    // Bounded driver fast path: peeling runs to a DATA-DEPENDENT
+    // fixpoint, and each distributed round bills ~2 scheduled jobs —
+    // on a graph whose edge list fits the driver budget, one collect
+    // + an O(E) bucket peel replaces every round. Exact same fixpoint.
+    DriverBound.driverOr(edges.select(col("u"), col("v")), driverMaxEdges)(
+      kCoreDriver(edges, _, k))(kCoreDistributed(edges, k, maxIter))
+  }
+
+  /** [[kCore]]'s distributed peeling loop — the 100 TB path. */
+  private def kCoreDistributed(edges: DataFrame, k: Int, maxIter: Int): DataFrame = {
     // Doubled-arc form, hash-partitioned on src ONCE: degree is then a
     // zero-exchange groupBy(src) over the persisted blocks, and the
     // broadcast anti-joins preserve the partitioning round to round —
@@ -218,29 +214,6 @@ object Graphs {
     */
   private def degrees2(arcs: DataFrame): DataFrame =
     arcs.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-
-  /** Edge bound for the driver fast paths in [[kCore]] and
-    * [[bfsHops]]: 2M edges ≈ tens of MB collected — driver
-    * model-state scale, far below any corpus (the
-    * [[Dedup.connectedComponents]] bound rationale).
-    */
-  private val DriverGraphMaxEdges = 2000000L
-
-  /** FUSED probe + collect: bring back up to `bound` rows in ONE
-    * action, or None if the relation is larger. An under-bound
-    * relation previously paid the limit-probe scan AND a second full
-    * collect scan; the fused form bills one. An over-bound relation
-    * still short-circuits at bound+1 rows (CollectLimit executes
-    * partitions incrementally) — the extra cost vs the count probe is
-    * only shipping the first bound+1 rows, and callers taking this
-    * path are about to run a far heavier distributed loop anyway.
-    */
-  private def collectUnderBound(df: DataFrame,
-                                bound: Long): Option[Array[org.apache.spark.sql.Row]] = {
-    if (bound <= 0) return None
-    val rows = df.limit(math.min(bound + 1, Int.MaxValue.toLong).toInt).collect()
-    if (rows.length <= bound) Some(rows) else None
-  }
 
   /** Int-indexed CSR adjacency built from collected (u, v) edge rows
     * — primitive arrays (a boxed HashSet adjacency measured ~10×
@@ -382,20 +355,19 @@ object Graphs {
     * next peel, never restarting from the full edge set).
     */
   def coreSizes(edges: DataFrame, ks: Seq[Int], maxIter: Int = 50,
-                driverMaxEdges: Long = DriverGraphMaxEdges): Seq[(Int, Long, Long)] = {
+                driverMaxEdges: Long = DriverBound.rows): Seq[(Int, Long, Long)] = {
     require(ks.nonEmpty && ks == ks.sorted && ks.head >= 1,
       s"ks must be ascending and >= 1: $ks")
-    val under = collectUnderBound(edges.select(col("u"), col("v")), driverMaxEdges)
-    if (under.isDefined) {
-      val pl = new Csr(under.get).newPeel
+    DriverBound.driverOr(edges.select(col("u"), col("v")), driverMaxEdges) { rows =>
+      val pl = new Csr(rows).newPeel
       ks.map { k =>
         pl.peel(k)
         (k, pl.aliveNodes, pl.aliveEdges)
       }
-    } else {
+    } {
       var cur = edges
       ks.map { k =>
-        val core = kCore(cur, k, maxIter, driverMaxEdges = 0L)
+        val core = kCoreDistributed(cur, k, maxIter)
         // truncate lineage before chaining: each peel's output would
         // otherwise feed the next peel's union/repartition/anti-join
         // stack and the accumulated logical plan grows superlinearly
@@ -434,98 +406,106 @@ object Graphs {
     * @return (node, r) relation, node typed as the src column
     */
   def pageRankPico(e0: DataFrame, iters: Int, unit: Long, dampNum: Long,
-                   driverMaxEdges: Long = DriverGraphMaxEdges): DataFrame = {
-    import org.apache.spark.sql.types._
+                   driverMaxEdges: Long = DriverBound.rows): DataFrame = {
     require(iters >= 1 && dampNum >= 0 && dampNum <= 100 && unit > 0)
-    collectUnderBound(e0.select(col("src"), col("dst")), driverMaxEdges) match {
-      case Some(rows) =>
-        val idx = new java.util.HashMap[Any, Integer](rows.length * 2)
-        val keys = new scala.collection.mutable.ArrayBuffer[Any]()
-        rows.foreach { r =>
-          if (!idx.containsKey(r.get(0))) { idx.put(r.get(0), keys.length); keys += r.get(0) }
-        }
-        val n = keys.length
-        // an empty arc relation has no rank mass to distribute —
-        // return the empty (node, r) relation instead of dividing by
-        // zero nodes (r9 ADVICE)
-        if (n == 0) {
-          val nodeType = e0.select(col("src")).schema.head.dataType
-          return distributed(e0.sparkSession, Seq.empty,
-            StructType(Seq(StructField("node", nodeType), StructField("r", LongType))))
-        }
-        val srcI = new Array[Int](rows.length)
-        val dstI = new Array[Int](rows.length)
-        val outdeg = new Array[Long](n)
-        var i = 0
-        while (i < rows.length) {
-          val s = idx.get(rows(i).get(0)).intValue
-          val dObj = idx.get(rows(i).get(1))
-          srcI(i) = s
-          dstI(i) = if (dObj == null) -1 else dObj.intValue
-          outdeg(s) += 1
-          i += 1
-        }
-        val teleport = ((100L - dampNum) * unit) / (100L * n)
-        var r = Array.fill(n)(unit / n)
-        var it = 0
-        while (it < iters) {
-          val in = new Array[Long](n)
-          i = 0
-          while (i < rows.length) {
-            if (dstI(i) >= 0) in(dstI(i)) += r(srcI(i)) / outdeg(srcI(i))
-            i += 1
-          }
-          val next = new Array[Long](n)
-          i = 0
-          while (i < n) { next(i) = teleport + (dampNum * in(i)) / 100L; i += 1 }
-          r = next
-          it += 1
-        }
-        val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row](n)
-        i = 0
-        while (i < n) { out += org.apache.spark.sql.Row(keys(i), r(i)); i += 1 }
-        val nodeType = e0.select(col("src")).schema.head.dataType
-        distributed(e0.sparkSession, out.toSeq,
-          StructType(Seq(StructField("node", nodeType), StructField("r", LongType))))
-      case None =>
-        val deg = e0.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-        // pin hash(src) into the cached blocks: each rank⋈edges join
-        // then exchanges only the node-sized rank side, never the
-        // edge relation (Layout.writeBucketed on src at cluster scale)
-        val edges = e0.join(deg.withColumnRenamed("node", "src"), "src")
-          .repartition(col("src"))
-          .persist()
-        val nodes = deg.select(col("node")).persist()
-        val n = nodes.agg(count(lit(1)).as("n")).head().getLong(0)
-        if (n == 0) { // empty graph: no nodes, no rank (r9 ADVICE)
-          edges.unpersist(); nodes.unpersist()
-          val nodeType = e0.select(col("src")).schema.head.dataType
-          return distributed(e0.sparkSession, Seq.empty,
-            StructType(Seq(StructField("node", nodeType), StructField("r", LongType))))
-        }
-        val teleport = ((100L - dampNum) * unit) / (100L * n)
-        var r = nodes.select(col("node"), lit(unit / n).as("r"))
-        for (_ <- 1 to iters) {
-          val contrib = edges.join(r, edges("src") === r("node"))
-            .select(col("dst").as("node"),
-              Binning.floorDivCol(col("r"), col("outdeg")).as("c"))
-            .groupBy(col("node"))
-            .agg(sum(col("c")).cast("long").as("in_sum"))
-          r = nodes.join(contrib, Seq("node"), "left")
-            .select(col("node"),
-              (lit(teleport) +
-                Binning.floorDivCol(lit(dampNum) * coalesce(col("in_sum"), lit(0L)),
-                  lit(100L))).as("r"))
-        }
-        // materialize before dropping the edge blocks (a later action
-        // would otherwise re-run every iteration); freed by the
-        // harness-owned persisted-block lifecycle
-        val out = r.persist()
-        out.count()
-        edges.unpersist()
-        nodes.unpersist()
-        out
+    DriverBound.driverOr(e0.select(col("src"), col("dst")), driverMaxEdges)(
+      pageRankDriver(e0, _, iters, unit, dampNum))(
+      pageRankDistributed(e0, iters, unit, dampNum))
+  }
+
+  /** [[pageRankPico]]'s fixed-iteration loop in primitive arrays. */
+  private def pageRankDriver(e0: DataFrame, rows: Array[org.apache.spark.sql.Row],
+                             iters: Int, unit: Long, dampNum: Long): DataFrame = {
+    val idx = new java.util.HashMap[Any, Integer](rows.length * 2)
+    val keys = new scala.collection.mutable.ArrayBuffer[Any]()
+    rows.foreach { r =>
+      if (!idx.containsKey(r.get(0))) { idx.put(r.get(0), keys.length); keys += r.get(0) }
     }
+    val n = keys.length
+    // an empty arc relation has no rank mass to distribute —
+    // return the empty (node, r) relation instead of dividing by
+    // zero nodes
+    if (n == 0) return rankRel(e0, Seq.empty)
+    val srcI = new Array[Int](rows.length)
+    val dstI = new Array[Int](rows.length)
+    val outdeg = new Array[Long](n)
+    var i = 0
+    while (i < rows.length) {
+      val s = idx.get(rows(i).get(0)).intValue
+      val dObj = idx.get(rows(i).get(1))
+      srcI(i) = s
+      dstI(i) = if (dObj == null) -1 else dObj.intValue
+      outdeg(s) += 1
+      i += 1
+    }
+    val teleport = ((100L - dampNum) * unit) / (100L * n)
+    var r = Array.fill(n)(unit / n)
+    var it = 0
+    while (it < iters) {
+      val in = new Array[Long](n)
+      i = 0
+      while (i < rows.length) {
+        if (dstI(i) >= 0) in(dstI(i)) += r(srcI(i)) / outdeg(srcI(i))
+        i += 1
+      }
+      val next = new Array[Long](n)
+      i = 0
+      while (i < n) { next(i) = teleport + (dampNum * in(i)) / 100L; i += 1 }
+      r = next
+      it += 1
+    }
+    val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row](n)
+    i = 0
+    while (i < n) { out += org.apache.spark.sql.Row(keys(i), r(i)); i += 1 }
+    rankRel(e0, out.toSeq)
+  }
+
+  /** [[pageRankPico]]'s distributed 2-shuffle round loop. */
+  private def pageRankDistributed(e0: DataFrame, iters: Int, unit: Long,
+                                  dampNum: Long): DataFrame = {
+    val deg = e0.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
+    // pin hash(src) into the cached blocks: each rank⋈edges join
+    // then exchanges only the node-sized rank side, never the
+    // edge relation (Layout.writeBucketed on src at cluster scale)
+    val edges = e0.join(deg.withColumnRenamed("node", "src"), "src")
+      .repartition(col("src"))
+      .persist()
+    val nodes = deg.select(col("node")).persist()
+    val n = nodes.agg(count(lit(1)).as("n")).head().getLong(0)
+    if (n == 0) { // empty graph: no nodes, no rank
+      edges.unpersist(); nodes.unpersist()
+      return rankRel(e0, Seq.empty)
+    }
+    val teleport = ((100L - dampNum) * unit) / (100L * n)
+    var r = nodes.select(col("node"), lit(unit / n).as("r"))
+    for (_ <- 1 to iters) {
+      val contrib = edges.join(r, edges("src") === r("node"))
+        .select(col("dst").as("node"),
+          Binning.floorDivCol(col("r"), col("outdeg")).as("c"))
+        .groupBy(col("node"))
+        .agg(sum(col("c")).cast("long").as("in_sum"))
+      r = nodes.join(contrib, Seq("node"), "left")
+        .select(col("node"),
+          (lit(teleport) +
+            Binning.floorDivCol(lit(dampNum) * coalesce(col("in_sum"), lit(0L)),
+              lit(100L))).as("r"))
+    }
+    // materialize before dropping the edge blocks (a later action
+    // would otherwise re-run every iteration); freed by the
+    // harness-owned persisted-block lifecycle
+    val out = r.persist()
+    out.count()
+    edges.unpersist()
+    nodes.unpersist()
+    out
+  }
+
+  /** (node, r) relation over driver rows, node typed as `e0`'s src. */
+  private def rankRel(e0: DataFrame, rows: Seq[org.apache.spark.sql.Row]): DataFrame = {
+    import org.apache.spark.sql.types._
+    distributed(e0.sparkSession, rows, StructType(Seq(
+      StructField("node", e0.select(col("src")).schema.head.dataType),
+      StructField("r", LongType))))
   }
 
   /** Rebuild a DataFrame from driver rows as an RDD-backed relation —
@@ -557,16 +537,17 @@ object Graphs {
     * @return (node, dist) for every node within maxHops
     */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-              driverMaxEdges: Long = DriverGraphMaxEdges): DataFrame = {
+              driverMaxEdges: Long = DriverBound.rows): DataFrame = {
     require(maxHops >= 0 && maxHops <= 10, s"maxHops out of range: $maxHops")
     // Bounded driver fast path (see kCore): each distributed hop is a
-    // join + distinct + anti-join round; under the hard edge bound one
+    // join + distinct + anti-join round; under the driver budget one
     // collect + in-memory BFS computes the identical distance map.
-    // Limit-based probe fused with the collect — ONE action (r9).
-    collectUnderBound(edges.select(col("src"), col("dst")), driverMaxEdges) match {
-      case Some(rows) => return bfsDriver(edges, rows, seeds, maxHops)
-      case None =>
-    }
+    DriverBound.driverOr(edges.select(col("src"), col("dst")), driverMaxEdges)(
+      bfsDriver(edges, _, seeds, maxHops))(bfsDistributed(edges, seeds, maxHops))
+  }
+
+  /** [[bfsHops]]'s distributed frontier loop over directed arcs. */
+  private def bfsDistributed(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     // Hash-partition the arc relation on its join key ONCE: the cached
     // blocks then carry HashPartitioning(src), so every round's
     // frontier⋈edges join exchanges only the (node-sized) frontier,
@@ -605,59 +586,63 @@ object Graphs {
     * to the doubled distributed loop unchanged).
     */
   def bfsHopsUndirected(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-                        driverMaxEdges: Long = DriverGraphMaxEdges): DataFrame = {
+                        driverMaxEdges: Long = DriverBound.rows): DataFrame = {
     require(maxHops >= 0 && maxHops <= 10, s"maxHops out of range: $maxHops")
-    collectUnderBound(edges.select(col("u"), col("v")), driverMaxEdges) match {
-      case Some(rows) =>
-        import org.apache.spark.sql.types._
-        val csr = new Csr(rows) // undirected adjacency by construction
-        val dist = new Array[Int](csr.nNodes)
-        java.util.Arrays.fill(dist, -1)
-        // seeds absent from the edge relation still carry distance 0
-        val stray = new scala.collection.mutable.ArrayBuffer[Any]()
-        var frontier = new Array[Int](csr.nNodes)
-        var fLen = 0
-        seeds.select(col("node")).distinct().collect().foreach { r =>
-          val i = csr.indexOf(r.get(0))
-          if (i < 0) stray += r.get(0)
-          else if (dist(i) < 0) { dist(i) = 0; frontier(fLen) = i; fLen += 1 }
-        }
-        var hop = 1
-        while (hop <= maxHops && fLen > 0) {
-          val next = new Array[Int](csr.nNodes)
-          var nLen = 0
-          var f = 0
-          while (f < fLen) {
-            val u = frontier(f)
-            var j = csr.start(u)
-            val end = csr.start(u + 1)
-            while (j < end) {
-              val m = csr.nbr(j)
-              if (dist(m) < 0) { dist(m) = hop; next(nLen) = m; nLen += 1 }
-              j += 1
-            }
-            f += 1
-          }
-          frontier = next
-          fLen = nLen
-          hop += 1
-        }
-        val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-        var i = 0
-        while (i < csr.nNodes) {
-          if (dist(i) >= 0) out += org.apache.spark.sql.Row(csr.keyOf(i), dist(i))
-          i += 1
-        }
-        stray.foreach(k => out += org.apache.spark.sql.Row(k, 0))
-        val nodeType = edges.select(col("u")).schema.head.dataType
-        distributed(edges.sparkSession, out.toSeq,
-          StructType(Seq(StructField("node", nodeType), StructField("dist", IntegerType))))
-      case None =>
-        val doubled = edges
-          .select(col("u").as("src"), col("v").as("dst"))
-          .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
-        bfsHops(doubled, seeds, maxHops, driverMaxEdges = 0L)
+    DriverBound.driverOr(edges.select(col("u"), col("v")), driverMaxEdges)(
+      bfsUndirectedDriver(edges, _, seeds, maxHops)) {
+      val doubled = edges
+        .select(col("u").as("src"), col("v").as("dst"))
+        .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
+      bfsDistributed(doubled, seeds, maxHops)
     }
+  }
+
+  /** [[bfsHopsUndirected]]'s in-memory BFS over the pair CSR. */
+  private def bfsUndirectedDriver(edges: DataFrame, rows: Array[org.apache.spark.sql.Row],
+                                  seeds: DataFrame, maxHops: Int): DataFrame = {
+    import org.apache.spark.sql.types._
+    val csr = new Csr(rows) // undirected adjacency by construction
+    val dist = new Array[Int](csr.nNodes)
+    java.util.Arrays.fill(dist, -1)
+    // seeds absent from the edge relation still carry distance 0
+    val stray = new scala.collection.mutable.ArrayBuffer[Any]()
+    var frontier = new Array[Int](csr.nNodes)
+    var fLen = 0
+    seeds.select(col("node")).distinct().collect().foreach { r =>
+      val i = csr.indexOf(r.get(0))
+      if (i < 0) stray += r.get(0)
+      else if (dist(i) < 0) { dist(i) = 0; frontier(fLen) = i; fLen += 1 }
+    }
+    var hop = 1
+    while (hop <= maxHops && fLen > 0) {
+      val next = new Array[Int](csr.nNodes)
+      var nLen = 0
+      var f = 0
+      while (f < fLen) {
+        val u = frontier(f)
+        var j = csr.start(u)
+        val end = csr.start(u + 1)
+        while (j < end) {
+          val m = csr.nbr(j)
+          if (dist(m) < 0) { dist(m) = hop; next(nLen) = m; nLen += 1 }
+          j += 1
+        }
+        f += 1
+      }
+      frontier = next
+      fLen = nLen
+      hop += 1
+    }
+    val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
+    var i = 0
+    while (i < csr.nNodes) {
+      if (dist(i) >= 0) out += org.apache.spark.sql.Row(csr.keyOf(i), dist(i))
+      i += 1
+    }
+    stray.foreach(k => out += org.apache.spark.sql.Row(k, 0))
+    val nodeType = edges.select(col("u")).schema.head.dataType
+    distributed(edges.sparkSession, out.toSeq,
+      StructType(Seq(StructField("node", nodeType), StructField("dist", IntegerType))))
   }
 
   /** Exact in-memory bounded-hop BFS — the same (node, dist) map as
@@ -808,7 +793,7 @@ object Graphs {
     * returns an unpersisted local relation.
     */
   def trussEdges(edges: DataFrame, k: Int, rounds: Int = 10,
-                 driverMaxEdges: Long = DriverGraphMaxEdges): DataFrame = {
+                 driverMaxEdges: Long = DriverBound.rows): DataFrame = {
     require(k >= 2, s"k out of range: $k")
     require(rounds >= 1, s"rounds out of range: $rounds")
     // checkpoint the canonical relation BEFORE the bound probe: the
@@ -816,10 +801,13 @@ object Graphs {
     // and without materialization each would re-run the corpus-scale
     // self-join + distinct from scratch
     val canon = canonicalEdges(edges.select(col("u"), col("v"))).localCheckpoint()
-    collectUnderBound(canon, driverMaxEdges) match {
-      case Some(rows) => return trussDriver(canon, rows, k, rounds)
-      case None =>
-    }
+    DriverBound.driverOr(canon, driverMaxEdges)(trussDriver(canon, _, k, rounds))(
+      trussDistributed(canon, k, rounds))
+  }
+
+  /** [[trussEdges]]' distributed support-peel loop over the
+    * checkpointed canonical relation. */
+  private def trussDistributed(canon: DataFrame, k: Int, rounds: Int): DataFrame = {
     // Every round's edge relation is an EAGER localCheckpoint, not a
     // persist: the round plan references `cur` several times (degrees,
     // orientation, the support join), so without lineage truncation
@@ -869,8 +857,8 @@ object Graphs {
 
   /** (k, n_nodes, n_edges) of the `rounds`-capped k-truss for each k
     * in `ks` — the q_ktruss gate's shape. Under the driver bound the
-    * edge list collects ONCE and every k peels from scratch on the
-    * same primitive arrays with the sizes read directly off the
+    * edge list collects ONCE and every k peels from scratch on one
+    * [[PeelGraph]]'s primitive arrays with the sizes read directly off the
     * alive flags (no per-k DataFrame rebuild/count jobs — the
     * rebuild of a 1.1M-row relation per k dominated the first gate
     * measurement); past the bound each k runs the distributed
@@ -879,56 +867,20 @@ object Graphs {
     * from-scratch unrolls exactly even before the fixpoint.
     */
   def trussSizes(edges: DataFrame, ks: Seq[Int], rounds: Int = 10,
-                 driverMaxEdges: Long = DriverGraphMaxEdges): Seq[(Int, Long, Long)] = {
+                 driverMaxEdges: Long = DriverBound.rows): Seq[(Int, Long, Long)] = {
     require(ks.nonEmpty, "ks must be nonempty")
     // canonicalize up front, matching [[trussEdges]]: the same
     // logical input yields the same sizes on either side of the bound
-    collectUnderBound(canonicalEdges(edges.select(col("u"), col("v"))),
-        driverMaxEdges) match {
-      case Some(rows) =>
-        val nE = rows.length
-        val idx = new java.util.HashMap[Long, Integer](nE * 2)
-        var nN = 0
-        def id(x: Long): Int = {
-          val got = idx.get(x)
-          if (got != null) got.intValue
-          else { idx.put(x, nN); nN += 1; nN - 1 }
-        }
-        val eu = new Array[Int](nE)
-        val ev = new Array[Int](nE)
-        var i = 0
-        while (i < nE) {
-          eu(i) = id(rows(i).getLong(0)); ev(i) = id(rows(i).getLong(1)); i += 1
-        }
-        requireCanonicalCollected(rows, eu, ev)
-        // ONE CSR build + ONE capped support pass shared by every k
-        val g = new TrussGraph(eu, ev, nN)
-        val sup0 = g.cappedSupport(ks.map(_ - 2).max)
-        ks.map { k =>
-          val alive = g.peel(k, rounds, sup0)
-          var e = 0L
-          val seen = new Array[Boolean](nN)
-          var n = 0L
-          i = 0
-          while (i < nE) {
-            if (alive(i)) {
-              e += 1
-              if (!seen(eu(i))) { seen(eu(i)) = true; n += 1 }
-              if (!seen(ev(i))) { seen(ev(i)) = true; n += 1 }
-            }
-            i += 1
-          }
-          (k, n, e)
-        }
-      case None =>
-        ks.map { k =>
-          val t = trussEdges(edges, k, rounds, driverMaxEdges).persist()
-          val nEdges = t.count()
-          val nNodes = degrees(t)
-            .agg(count(lit(1)).cast("long")).collect()(0).getLong(0)
-          t.unpersist()
-          (k, nNodes, nEdges)
-        }
+    DriverBound.driverOr(canonicalEdges(edges.select(col("u"), col("v"))),
+        driverMaxEdges)(new PeelGraph(_).trussSizes(ks, rounds)) {
+      ks.map { k =>
+        val t = trussEdges(edges, k, rounds, driverMaxEdges).persist()
+        val nEdges = t.count()
+        val nNodes = degrees(t)
+          .agg(count(lit(1)).cast("long")).collect()(0).getLong(0)
+        t.unpersist()
+        (k, nNodes, nEdges)
+      }
     }
   }
 
@@ -1197,15 +1149,18 @@ object Graphs {
   final class TradeGraph private[Graphs] (rows0: Array[org.apache.spark.sql.Row]) {
     private val nArcs = rows0.length * 2
     private val idx = new java.util.HashMap[Long, Integer](rows0.length * 4)
-    private val keysBuf = new scala.collection.mutable.ArrayBuffer[Long]()
-    private def id(x: Long): Int = {
-      val got = idx.get(x)
-      if (got != null) got.intValue
-      else { idx.put(x, keysBuf.length); keysBuf += x; keysBuf.length - 1 }
-    }
     private val srcI = new Array[Int](nArcs)
     private val dstI = new Array[Int](nArcs)
-    locally {
+    // the boxed key buffer lives only while the index builds; the
+    // session-cached object keeps the primitive `keys` array
+    private val keys: Array[Long] = {
+      val keysBuf = new scala.collection.mutable.ArrayBuilder.ofLong
+      var n = 0
+      def id(x: Long): Int = {
+        val got = idx.get(x)
+        if (got != null) got.intValue
+        else { idx.put(x, n); keysBuf += x; n += 1; n - 1 }
+      }
       var i = 0
       while (i < rows0.length) {
         val c = id(rows0(i).getLong(0) * 2)
@@ -1214,9 +1169,9 @@ object Graphs {
         srcI(2 * i + 1) = s; dstI(2 * i + 1) = c
         i += 1
       }
+      keysBuf.result()
     }
-    val nNodes: Int = keysBuf.length
-    private val keys = keysBuf.toArray
+    val nNodes: Int = keys.length
     private val deg = new Array[Int](nNodes)
     locally { var i = 0; while (i < nArcs) { deg(srcI(i)) += 1; i += 1 } }
     private val start = new Array[Int](nNodes + 1)
@@ -1319,17 +1274,17 @@ object Graphs {
     * bound — callers fall back to their distributed paths, which keep
     * their own (identically budgeted) driver branches. */
   def tradeGraphUnder(pairs: DataFrame,
-                      bound: Long = DriverGraphMaxEdges): Option[TradeGraph] =
-    collectUnderBound(pairs.select(col("ck"), col("sk")), bound / 2)
-      .map(new TradeGraph(_))
+                      bound: Long = DriverBound.rows): Option[TradeGraph] =
+    DriverBound.driverOr(pairs.select(col("ck"), col("sk")), bound / 2)(
+      rows => Option(new TradeGraph(rows)))(None)
 
   /** Collect a canonical edge relation under the driver bound into a
     * [[PeelGraph]]; None past the bound (callers fall back to the
     * distributed loops with `driverMaxEdges = 0`). */
   def peelGraphUnder(canonEdges: DataFrame,
-                     bound: Long = DriverGraphMaxEdges): Option[PeelGraph] =
-    collectUnderBound(canonEdges.select(col("u"), col("v")), bound)
-      .map(new PeelGraph(_))
+                     bound: Long = DriverBound.rows): Option[PeelGraph] =
+    DriverBound.driverOr(canonEdges.select(col("u"), col("v")), bound)(
+      rows => Option(new PeelGraph(rows)))(None)
 
   /** Split [0, n) into one contiguous chunk per available core and
     * run `f(lo, hi)` on each in parallel (plain threads — the driver

@@ -25,27 +25,22 @@ import graft.expressions.VectorExpressions
   */
 object IvfIndex {
 
-  /** Driver fast-path bound for [[train]]: up to this many vectors
-    * collect ONCE and every Lloyd iteration runs in a driver loop —
-    * one Spark job instead of one per iteration plus the seed sort
-    * (the QualityClassifier.train discipline; at bench scale the
-    * iteration jobs' scheduling floors ARE the gate cost). 200k × 64
-    * long components ≈ 110 MB of driver state. Past the bound, the
-    * per-iteration aggregate loop runs unchanged — the 100 TB shape
-    * (the corpus never shuffles; C rows per iteration cross to the
-    * driver). */
-  private val DriverTrainMaxVectors = 200000L
-
   /** Deterministic k-means over (vec_id, q, n) rows.
     * @return centroid matrix, indexed by cell id.
     */
   def train(e: DataFrame, c: Int, iters: Int, dims: Int,
-            driverMaxVectors: Long = DriverTrainMaxVectors): Array[Array[Long]] = {
-    QualityClassifier.collectUnderBound(
-        e.select(col("vec_id"), col("q")), driverMaxVectors) match {
-      case Some(rows) => return trainDriver(rows, c, iters, dims)
-      case None =>
-    }
+            driverMaxVectors: Long = DriverBound.IvfTrainVectors): Array[Array[Long]] =
+    // under the vector budget every Lloyd iteration runs in one driver
+    // loop off one collect — one Spark job instead of one per
+    // iteration plus the seed sort
+    DriverBound.driverOr(e.select(col("vec_id"), col("q")), driverMaxVectors)(
+      trainDriver(_, c, iters, dims))(trainDistributed(e, c, iters, dims))
+
+  /** [[train]]'s per-iteration aggregate loop — the 100 TB shape (the
+    * corpus never shuffles; C rows per iteration cross to the
+    * driver). */
+  private def trainDistributed(e: DataFrame, c: Int, iters: Int,
+                               dims: Int): Array[Array[Long]] = {
     // Seeds: the C smallest vec_ids (deterministic, cheap).
     var cents: Array[Array[Long]] = e.orderBy(col("vec_id")).limit(c)
       .select(col("q")).collect()

@@ -68,7 +68,7 @@ object LangClassifier {
     */
   def train(packed: DataFrame, langs: Seq[String], buckets: Int,
             iters: Int, lr: Double, samplePct: Int = 100,
-            driverMaxDocs: Long = DriverTrainMaxDocs): Model = {
+            driverMaxDocs: Long = DriverBound.LangTrainDocs): Model = {
     require(langs.nonEmpty && langs == langs.sorted, "langs must be sorted")
     val rel =
       if (samplePct >= 100) packed
@@ -76,11 +76,14 @@ object LangClassifier {
     // bounded driver fast path (see QualityClassifier.train): one
     // collect, all iterations × classes advanced in a driver loop
     // with the distributed loop's exact arithmetic
-    QualityClassifier.collectUnderBound(
-        rel.select(col("lang"), col("bs")), driverMaxDocs) match {
-      case Some(rows) => return trainDriver(rows, langs, buckets, iters, lr)
-      case None =>
-    }
+    DriverBound.driverOr(rel.select(col("lang"), col("bs")), driverMaxDocs)(
+      trainDriver(_, langs, buckets, iters, lr))(
+      trainDistributed(rel, langs, buckets, iters, lr))
+  }
+
+  /** [[train]]'s per-iteration distributed aggregate loop. */
+  private def trainDistributed(rel: DataFrame, langs: Seq[String], buckets: Int,
+                               iters: Int, lr: Double): Model = {
     val nDocs = rel.count()
     val w = Array.fill(langs.size)(Array.fill(buckets)(0L))
     var it = 0
@@ -106,11 +109,6 @@ object LangClassifier {
     }
     Model(langs, w)
   }
-
-  /** Char-n-gram features run ~one per CHARACTER, so the driver
-    * fast-path bound is tighter than the word-bigram trainer's:
-    * 50k docs × ~500 int features ≈ 100 MB of driver state. */
-  private val DriverTrainMaxDocs = 50000L
 
   /** All iterations × classes over collected (lang, bs) rows —
     * the one-vs-rest analog of [[QualityClassifier]]'s driver loop:

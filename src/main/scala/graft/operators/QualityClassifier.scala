@@ -69,29 +69,6 @@ object QualityClassifier {
     floor((lit(1.0) / (lit(1.0) + exp(-marginExpr(bs, w) / lit(1e6)))
       - label) * lit(1000000)).cast("long")
 
-  /** Driver fast-path bound for [[train]]/[[LangClassifier.train]]:
-    * up to this many packed docs collect ONCE and run every GD
-    * iteration in a tight driver loop — one Spark job instead of one
-    * per iteration (the iteration jobs each billed a full scheduling
-    * floor; at bench scale the loop IS the gate's cost). 200k docs ×
-    * ~100 int features ≈ 80 MB of driver state — the same bounded-
-    * model-state rationale as the graph fast paths. Past the bound,
-    * the per-iteration distributed aggregate loop runs unchanged
-    * (the 100 TB shape: O(B·tasks) bytes per iteration, never a
-    * corpus-sized exchange).
-    */
-  private[operators] val DriverTrainMaxDocs = 200000L
-
-  /** FUSED probe + collect (the Graphs discipline): up to `bound`
-    * rows in ONE action, or None if the relation is larger —
-    * CollectLimit short-circuits at bound+1 rows. */
-  private[operators] def collectUnderBound(df: DataFrame,
-      bound: Long): Option[Array[org.apache.spark.sql.Row]] = {
-    if (bound <= 0) return None
-    val rows = df.limit(math.min(bound + 1, Int.MaxValue.toLong).toInt).collect()
-    if (rows.length <= bound) Some(rows) else None
-  }
-
   /** Unpack a collected long-array column to a primitive array. */
   private[operators] def bucketLongArr(r: org.apache.spark.sql.Row, i: Int): Array[Long] = {
     val s = r.getSeq[Long](i)
@@ -123,15 +100,22 @@ object QualityClassifier {
     */
   def train(packed: DataFrame, buckets: Int, iters: Int, lr: Double,
             samplePct: Int = 100,
-            driverMaxDocs: Long = DriverTrainMaxDocs): Weights = {
+            driverMaxDocs: Long = DriverBound.QualityTrainDocs): Weights = {
     val rel =
       if (samplePct >= 100) packed
       else packed.filter(Sampling.samplePredicate(col("doc_id"), samplePct, "qctrain"))
-    collectUnderBound(rel.select(col("label").cast("int").as("label"), col("bs")),
-        driverMaxDocs) match {
-      case Some(rows) => return trainDriver(rows, buckets, iters, lr)
-      case None =>
-    }
+    // under the doc budget every GD iteration runs in one driver loop
+    // off one collect — one Spark job instead of one per iteration
+    DriverBound.driverOr(rel.select(col("label").cast("int").as("label"), col("bs")),
+        driverMaxDocs)(trainDriver(_, buckets, iters, lr))(
+      trainDistributed(rel, buckets, iters, lr))
+  }
+
+  /** [[train]]'s per-iteration distributed aggregate loop — the 100 TB
+    * shape: O(B·tasks) bytes per iteration, never a corpus-sized
+    * exchange. */
+  private def trainDistributed(rel: DataFrame, buckets: Int, iters: Int,
+                               lr: Double): Weights = {
     val nDocs = rel.count()
     val w: Weights = Array.fill(buckets)(0L)
     var it = 0

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.{Binning, Curation, Exact, Graphs, Relational, TextOps}
+import graft.operators.{Binning, Curation, DriverBound, Exact, Graphs, Relational, TextOps}
 import graft.operators.Exact.centsSql
 
 /** Second audit layer (SURVEY.md §2 #247–#253): static-graph
@@ -1147,61 +1147,54 @@ object AuditQueries {
     // division is a nonnegative floor). The r12 shape paid a SECOND
     // corpus pass for the z moments plus two windows and a join.
     // r14: distinct cents is DATA-dependent, not calendar-bounded, so
-    // the collect is guarded like the graph driver paths (fused
-    // limit-probe, Graphs.DriverGraphMaxEdges-class bound); past the
-    // bound the r12 distributed shape below runs unchanged.
+    // the collect is guarded by the driver row budget; past it the
+    // distributed shape runs.
     import s.implicits._
-    val rows0 = v.limit(LeveneGridMaxRows + 1).collect()
-    if (rows0.length > LeveneGridMaxRows) qLeveneDistributed(e, v)
-    else {
-    val rows = rows0.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val types = rows.groupBy(_._1).toSeq.sortBy(_._1)
-    var k = 0L
-    var nTot = 0L
-    var q = BigInt(0)
-    var aScaled = BigInt(0)
-    var sTot = BigInt(0)
-    types.foreach { case (_, rs) =>
-      val pts = rs.map(r => (r._2, r._3)).sortBy(_._1)
-      val n = pts.iterator.map(_._2).sum
-      // LO-median: smallest value with 2·cum ≥ n (the pinned rule)
-      var cum = 0L
-      var med = 0L
-      var found = false
-      pts.foreach { case (c, cnt) =>
-        if (!found) { cum += cnt; if (2 * cum >= n) { med = c; found = true } }
+    DriverBound.driverOr(v, DriverBound.rows) { rows0 =>
+      val rows = rows0.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      val types = rows.groupBy(_._1).toSeq.sortBy(_._1)
+      var k = 0L
+      var nTot = 0L
+      var q = BigInt(0)
+      var aScaled = BigInt(0)
+      var sTot = BigInt(0)
+      types.foreach { case (_, rs) =>
+        val pts = rs.map(r => (r._2, r._3)).sortBy(_._1)
+        val n = pts.iterator.map(_._2).sum
+        // LO-median: smallest value with 2·cum ≥ n (the pinned rule)
+        var cum = 0L
+        var med = 0L
+        var found = false
+        pts.foreach { case (c, cnt) =>
+          if (!found) { cum += cnt; if (2 * cum >= n) { med = c; found = true } }
+        }
+        var sg = BigInt(0)
+        var qg = BigInt(0)
+        pts.foreach { case (c, cnt) =>
+          val zc = math.abs(c - med)
+          sg += BigInt(zc) * cnt
+          qg += BigInt(zc) * zc * cnt
+        }
+        k += 1
+        nTot += n
+        q += qg
+        aScaled += sg * sg * 1000000L / n
+        sTot += sg
       }
-      var sg = BigInt(0)
-      var qg = BigInt(0)
-      pts.foreach { case (c, cnt) =>
-        val zc = math.abs(c - med)
-        sg += BigInt(zc) * cnt
-        qg += BigInt(zc) * zc * cnt
-      }
-      k += 1
-      nTot += n
-      q += qg
-      aScaled += sg * sg * 1000000L / n
-      sTot += sg
-    }
-    val out =
-      if (k == 0) // empty corpus: the single-row aggregate still emits
-        Seq((0L, None: Option[Long], -1L, None: Option[Long], None: Option[Long]))
-      else {
-        val ssb = (aScaled - sTot * sTot * 1000000L / nTot).max(BigInt(0))
-        val ssw = q * 1000000L - aScaled
-        val fPpm =
-          if (ssw == 0 || k <= 1) None
-          else Some((ssb * (nTot - k) * 1000000L / (ssw * (k - 1))).toLong)
-        Seq((k, Some(nTot), k - 1, Some(nTot - k), fPpm))
-      }
-    out.toDF("k", "n", "dof_between", "dof_within", "f_ppm")
-    }
+      val out =
+        if (k == 0) // empty corpus: the single-row aggregate still emits
+          Seq((0L, None: Option[Long], -1L, None: Option[Long], None: Option[Long]))
+        else {
+          val ssb = (aScaled - sTot * sTot * 1000000L / nTot).max(BigInt(0))
+          val ssw = q * 1000000L - aScaled
+          val fPpm =
+            if (ssw == 0 || k <= 1) None
+            else Some((ssb * (nTot - k) * 1000000L / (ssw * (k - 1))).toLong)
+          Seq((k, Some(nTot), k - 1, Some(nTot - k), fPpm))
+        }
+      out.toDF("k", "n", "dof_between", "dof_within", "f_ppm")
+    }(qLeveneDistributed(e, v))
   }
-
-  /** Driver bound for the q_levene value grid: 2M (type, cents, cnt)
-    * rows ≈ tens of MB — the [[Graphs]] driver-graph budget. */
-  private val LeveneGridMaxRows = 2000000
 
   /** The r12 distributed Brown–Forsythe shape — the 100 TB path past
     * the value-grid driver bound: per-type LO-median via windows over

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.{Binning, Curation, Exact}
+import graft.operators.{Binning, Curation, DriverBound, Exact}
 import graft.operators.Exact.centsSql
 
 /** Classifier-evaluation / statistical-testing completions
@@ -1359,13 +1359,11 @@ object EvalQueries {
     // mirror's exact integer arithmetic (BigInt where the oracle says
     // HUGEINT) — the q_levene convention; the distributed shape paid
     // a grid window + grid join + four aggregate stages. The grid is
-    // value-domain bounded only by assumption, so the collect carries
-    // the same fused limit-probe bound, with the distributed shape
-    // below unchanged as the fallback.
-    val kwCap = 2000000
-    val kwRows = v.limit(kwCap + 1).collect()
-    if (kwRows.length <= kwCap) {
-      import s.implicits._
+    // value-domain bounded only by assumption, so the collect is
+    // guarded by the driver row budget; past it the distributed shape
+    // runs.
+    import s.implicits._
+    DriverBound.driverOr(v, DriverBound.rows) { kwRows =>
       val byG = kwRows.map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
         .groupBy(_._1).toSeq.sortBy(_._1)
       val out = byG.map { case (g, rows) =>
@@ -1407,7 +1405,15 @@ object EvalQueries {
       }
       out.toDF("g", "n_obs", "k_cohorts", "dof", "h_micro")
         .orderedSmall(col("g"))
-    } else {
+    }(qKruskalWallisDistributed(v))
+  }
+
+  /** The distributed Kruskal–Wallis shape over the value-collapsed
+    * (g, c, event_type, cnt) grid `v` — the 100 TB path past the
+    * driver row budget: grid window + grid join + four aggregate
+    * stages. Same integers as the driver replay.
+    */
+  private def qKruskalWallisDistributed(v: DataFrame): DataFrame = {
     val tv = v.groupBy(col("g"), col("c"))
       .agg(sum(col("cnt")).cast("long").as("t"))
       .withColumn("cum",
@@ -1442,7 +1448,6 @@ object EvalQueries {
             col("n3n") - col("ties")).cast("long"))
           .otherwise(lit(null).cast("long")).as("h_micro"))
       .orderedSmall(col("g"))
-    }
   }
 
   /** CUPED variance reduction (#322): the deployed experimentation

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.{Binning, Curation, Exact, TextOps}
+import graft.operators.{Binning, Curation, DriverBound, Exact, TextOps}
 import graft.operators.Exact.centsSql
 
 /** Statistical-testing / ML-evaluation / graph extensions
@@ -845,8 +845,10 @@ object StatsQueries {
         max(abs(Exact.cents(col("vd")))).cast("long")).head
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    val longSafe =
-      BigInt(2) * poissonCdfPpm.length * maxAbsC * nRows < BigInt(Long.MaxValue) / 4
+    // max|c| floors at 1 so the guard also bounds sw = Σw ≤ maxW·n
+    // on an all-zero-cents corpus
+    val longSafe = BigInt(2) * poissonCdfPpm.length * math.max(maxAbsC, 1L) * nRows <
+      BigInt(Long.MaxValue) / 4
     def sumExact(c: Column) =
       if (longSafe) sum(c).cast("long") else Exact.sumUnits(c).cast("long")
     val w = e.select(col("event_type"), col("c"),
@@ -4280,14 +4282,10 @@ object StatsQueries {
         .agg(count(lit(1)).cast("long").as("v"))
         .groupBy(col("v")).agg(count(lit(1)).cast("long").as("c"))
       // r14 guard: the activity-count DOMAIN is data-dependent (≤
-      // distinct per-user counts), so the collect carries the same
-      // fused limit-probe bound as the graph/levene driver paths;
-      // past it the thresholds come from ONE windowed crossing plan
-      // that collects a single row (decileThrSql's derivation — the
-      // identical exact-integer crossing rule, so same thresholds).
-      val cap = 2000000
-      val pv = hist.orderBy(col("v")).limit(cap + 1).collect()
-      if (pv.length <= cap) {
+      // distinct per-user counts), so the collect is guarded by the
+      // driver row budget; past it the thresholds come from ONE
+      // windowed crossing plan that collects a single row.
+      DriverBound.driverOr(hist.orderBy(col("v")), DriverBound.rows) { pv =>
         val tot = pv.iterator.map(_.getLong(1)).sum
         DecilePs.map { p =>
           var cum = 0L
@@ -4300,23 +4298,30 @@ object StatsQueries {
           }
           res
         }
-      } else {
-        val w = hist
-          .withColumn("cum", sum(col("c")).over(
-            Window.orderBy(col("v")).rowsBetween(Window.unboundedPreceding, 0)))
-          .withColumn("tot", sum(col("c")).over(
-            Window.partitionBy().rowsBetween(
-              Window.unboundedPreceding, Window.unboundedFollowing)))
-        val row = w.agg(
-          min(when(col("cum") * 100 >= col("tot") * DecilePs.head, col("v")))
-            .as(s"t${DecilePs.head}"),
-          DecilePs.tail.map(p =>
-            min(when(col("cum") * 100 >= col("tot") * p, col("v"))).as(s"t$p")): _*)
-          .head()
-        DecilePs.indices.map(i =>
-          if (row.isNullAt(i)) Long.MaxValue else row.getLong(i))
-      }
+      }(userCountThresholdsDistributed(hist))
     }
+
+  /** [[userCountThresholds]] past the driver row budget:
+    * [[decileThrSql]]'s windowed derivation over the (v, c) histogram
+    * — the identical exact-integer crossing rule (min v with
+    * cum·100 ≥ tot·p), so the same thresholds, in one single-row
+    * collect. */
+  private def userCountThresholdsDistributed(hist: DataFrame): Seq[Long] = {
+    val w = hist
+      .withColumn("cum", sum(col("c")).over(
+        Window.orderBy(col("v")).rowsBetween(Window.unboundedPreceding, 0)))
+      .withColumn("tot", sum(col("c")).over(
+        Window.partitionBy().rowsBetween(
+          Window.unboundedPreceding, Window.unboundedFollowing)))
+    val row = w.agg(
+      min(when(col("cum") * 100 >= col("tot") * DecilePs.head, col("v")))
+        .as(s"t${DecilePs.head}"),
+      DecilePs.tail.map(p =>
+        min(when(col("cum") * 100 >= col("tot") * p, col("v"))).as(s"t$p")): _*)
+      .head()
+    DecilePs.indices.map(i =>
+      if (row.isNullAt(i)) Long.MaxValue else row.getLong(i))
+  }
 
   /** DuckDB mirror of [[decileStratum]]'s threshold derivation:
     * emits CTEs pv/cw/th/thr over `uTbl.v`; compose with

@@ -1149,7 +1149,7 @@ object TextQueries {
     // times per call (stats, df, scoring)
     val (nDocs, totalLen) = graft.SharedRelations.docLenStats(s, d)
     graft.operators.Retrieval.bm25TopKFromPostings(
-        graft.SharedRelations.queryPostings(s, d, "bm25q", Bm25Terms),
+        graft.SharedRelations.queryPostings(s, d, Bm25Terms),
         nDocs, totalLen, Bm25Queries)
       .orderedSmall(col("query_id"), col("rank"))
   }
@@ -1166,7 +1166,7 @@ object TextQueries {
     graft.operators.Retrieval.qlSql(Bm25Queries)) { (s, d) =>
     // same postings slice + literal collection length as q_bm25
     graft.operators.Retrieval.qlTopKFromPostings(
-        graft.SharedRelations.queryPostings(s, d, "bm25q", Bm25Terms),
+        graft.SharedRelations.queryPostings(s, d, Bm25Terms),
         graft.SharedRelations.docLenStats(s, d)._2, Bm25Queries)
       .orderedSmall(col("query_id"), col("rank"))
   }

@@ -13,16 +13,6 @@ class AuditEdgeSpec extends SparkSpec {
 
   private def edges(pairs: (Long, Long)*) = pairs.toSeq.toDF("u", "v")
 
-  private def eventsDir(rows: Seq[(Long, Long, String, Double)]): String = {
-    val dir = Files.createTempDirectory("graft_audit_fix").toString
-    rows.toDF("event_id", "user_id", "event_type", "value")
-      .withColumn("ts", timestamp_seconds(lit(1704067200L) + col("event_id")))
-      .withColumn("props", lit("{}"))
-      .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    dir
-  }
-
   private def docsDir(rows: Seq[(Long, String, String, String)]): String = {
     val dir = Files.createTempDirectory("graft_audit_fix").toString
     rows.toDF("doc_id", "text", "lang", "source")

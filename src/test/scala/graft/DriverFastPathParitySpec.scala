@@ -1,16 +1,55 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
-import graft.operators.{Binning, Curation, Graphs, HeavyHitters, Retrieval}
+import org.apache.spark.sql.{DataFrame, Row}
+import graft.operators.{Binning, Curation, DriverBound, Graphs, HeavyHitters, Retrieval}
+import graft.queries.{AuditQueries, EvalQueries, StatsQueries}
 
-/** Parity pins for the r14 driver fast paths and count-table /
-  * postings entry points: each must return EXACTLY the rows of the
+/** Parity pins for the driver fast paths and count-table / postings
+  * entry points: each must return EXACTLY the rows of the
   * distributed (or in-corpus) shape it replaces — the gates switch on
-  * a size bound, so both paths must agree bit-for-bit.
+  * a size bound ([[DriverBound]]), so both paths must agree
+  * bit-for-bit.
   */
 class DriverFastPathParitySpec extends SparkSpec {
   import spark.implicits._
+
+  test("DriverBound: `bound` rows or an empty relation take the driver side; " +
+      "bound + 1 rows or a bound of 0 the distributed side") {
+    def side(df: DataFrame, bound: Long): String =
+      DriverBound.driverOr(df, bound)(rows => s"driver:${rows.length}")("distributed")
+    val five = spark.range(5).toDF("id")
+    assert(side(five, 5) === "driver:5")
+    assert(side(five, 4) === "distributed")
+    assert(side(five, 0) === "distributed")
+    assert(side(five.limit(0), 5) === "driver:0")
+    assert(side(five.limit(0), 0) === "distributed")
+    assert(DriverBound.withRows(4)(DriverBound.rows) === 4L)
+    assert(DriverBound.rows === 2000000L) // the scope is restored
+  }
+
+  // events fixture for the row-budgeted gates: 20 users with tied
+  // activity counts (u % 7 + 1 events each — the user-count decile
+  // crossings land exactly on a cumulative count), all 8 user cohorts,
+  // five event types, values on a 9-step grid (ties in every group)
+  private val gateEvents: Seq[(Long, Long, String, Double)] = {
+    val types = Array("view", "click", "cart", "purchase", "refund")
+    (for (u <- 1L to 20L; j <- 0L to u % 7) yield (u, j)).zipWithIndex.map {
+      case ((u, j), i) => (i + 1L, u, types(((u + j) % 5).toInt), 1.0 + (i * 37 % 9) * 0.5)
+    }
+  }
+
+  Seq(AuditQueries.qLevene, EvalQueries.qKruskalWallis,
+      StatsQueries.qIpwAte, StatsQueries.qAipwAte).foreach { q =>
+    test(s"${q.name}: the distributed side at row budget 0 returns the driver replay's rows") {
+      // one directory per side: userCountThresholds caches per directory
+      def rows: Seq[Row] = q.run(spark, eventsDir(gateEvents)).collect().toSeq
+      val driver = rows
+      val distributed = DriverBound.withRows(0)(rows)
+      assert(driver.nonEmpty)
+      assert(distributed === driver)
+    }
+  }
 
   // deterministic pseudo-random canonical edge fixture (u < v, distinct)
   private lazy val edgeDf: DataFrame = {
@@ -184,6 +223,18 @@ class DriverFastPathParitySpec extends SparkSpec {
         fixtureQueries, topK = 5)
       .orderBy(col("query_id"), col("rank")).collect().map(_.toSeq).toSeq
     assert(got == want)
+  }
+
+  test("queryPostings: each term set over one directory gets its own postings") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_parity_fix").toString
+    docsDf.withColumn("lang", lit("en")).withColumn("source", lit("s0"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .write.parquet(s"$dir/documents.parquet")
+    def terms(ts: String*): Seq[String] = SharedRelations.queryPostings(spark, dir, ts)
+      .select(col("term")).distinct().as[String].collect().sorted.toSeq
+    assert(terms("cat", "mat") === Seq("cat", "mat"))
+    assert(terms("dog", "fast") === Seq("dog", "fast"))
+    assert(terms("mat", "cat", "cat") === Seq("cat", "mat"))
   }
 
   test("qlTopKFromPostings matches qlTopK") {

@@ -22,16 +22,6 @@ class EvalEdgeSpec extends SparkSpec {
     dir
   }
 
-  private def eventsDir(rows: Seq[(Long, Long, String, Double)]): String = {
-    val dir = Files.createTempDirectory("graft_eval_fix").toString
-    rows.toDF("event_id", "user_id", "event_type", "value")
-      .withColumn("ts", timestamp_seconds(lit(1704067200L) + col("event_id")))
-      .withColumn("props", lit("{}"))
-      .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    dir
-  }
-
   test("confusion matrix: balanced fixture splits 1/1/1/1 at the mean threshold") {
     // mean n_chars = 24/4 = 6; predicted positive = {10s}, label = en
     val dir = docsDir(Seq(

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, lit, timestamp_seconds}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -9,6 +10,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // keep the shared session alive
+
+  /** Synthetic events table dir: (event_id, user_id, event_type,
+    * value), ts = epoch + event_id seconds (so (ts_us, event_id)
+    * order == event_id order), props "{}". Gates read
+    * `$dir/events.parquet`. */
+  protected def eventsDir(rows: Seq[(Long, Long, String, Double)]): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_events_fix").toString
+    rows.toDF("event_id", "user_id", "event_type", "value")
+      .withColumn("ts", timestamp_seconds(lit(1704067200L) + col("event_id")))
+      .withColumn("props", lit("{}"))
+      .select("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    dir
+  }
 }
 
 object SparkSpec {

@@ -15,20 +15,6 @@ import graft.queries.StatsQueries
 class StatsEdgeSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Synthetic events table: (event_id, user_id, event_type, value),
-    * ts = epoch + event_id seconds (so (ts_us, event_id) order ==
-    * event_id order).
-    */
-  private def eventsDir(rows: Seq[(Long, Long, String, Double)]): String = {
-    val dir = Files.createTempDirectory("graft_stats_fix").toString
-    rows.toDF("event_id", "user_id", "event_type", "value")
-      .withColumn("ts", timestamp_seconds(lit(1704067200L) + col("event_id")))
-      .withColumn("props", lit("{}"))
-      .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    dir
-  }
-
   test("cusum closed form equals the textbook recursion") {
     val xs = Seq(100L, 300L, 50L, 50L, 400L, 10L, 10L, 500L)
     val target = 150L
