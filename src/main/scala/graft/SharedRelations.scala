@@ -160,8 +160,7 @@ object SharedRelations {
     snapshot(s, "hcg", d)(
       Tables.events(s, d).select(
           col("event_type"),
-          graft.operators.Binning.floorDiv(
-            expr("ts_us div 1000000") - lit(1704067200L), 3600L).as("grid"),
+          graft.operators.Binning.floorDiv(Tables.xs, 3600L).as("grid"),
           graft.operators.Exact.cents(col("value").cast("decimal(18,2)")).as("c"))
         .groupBy(col("event_type"), col("grid"))
         .agg(graft.operators.Exact.sumUnits(col("c")).cast("long").as("y")))
@@ -172,8 +171,7 @@ object SharedRelations {
     snapshot(s, "hcc", d)(
       Tables.events(s, d).select(
           col("event_type"),
-          graft.operators.Binning.floorDiv(
-            expr("ts_us div 1000000") - lit(1704067200L), 3600L).as("grid"))
+          graft.operators.Binning.floorDiv(Tables.xs, 3600L).as("grid"))
         .groupBy(col("event_type"), col("grid"))
         .agg(count(lit(1)).cast("long").as("c")))
 

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{expr, lit}
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
@@ -69,6 +70,15 @@ object Tables {
       .withColumn("ts_us", expr("ts_ns div 1000"))
       .withColumn("ts_sec", col("ts_ns") / 1e9)
   }
+
+  /** The `xs` clock of the events gates: whole seconds of `ts_us`
+    * (µs floor, the value is positive) counted from 2024-01-01T00:00Z.
+    * [[xs]] is the Spark side, [[xsSql]] the DuckDB side over raw
+    * `ts`; the two are bit-identical longs. */
+  private[graft] val XsEpochSec = 1704067200L
+  private[graft] def xs: Column = expr("ts_us div 1000000") - lit(XsEpochSec)
+  private[graft] val xsSql: String = s"(epoch_us(ts) // 1000000) - $XsEpochSec"
+
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

@@ -63,6 +63,43 @@ object Binning {
       .select(col("bin"), col("n"), col("bin_lo"))
   }
 
+  /** The pixel stream of 2-D detector frames `(id, width, pixels
+    * array<double> row-major)`: one row `(id, w, keep…, i, v)` per
+    * pixel, `i` its row-major index. [[pxCol]] and [[pxRow]] read the
+    * pixel's column and row off `i` and `w`, exactly and with no
+    * per-pixel decimal: `i − pmod(i, w)` is a multiple of `w`.
+    */
+  private[operators] def pixelStream(frames: DataFrame, id: Column, width: Column,
+                                     pixels: Column, keep: Column*): DataFrame =
+    frames.select(Seq(id.as("id"), width.as("w")) ++ keep :+
+      posexplode(pixels).as(Seq("i", "v")): _*)
+
+  private[operators] def pxCol: Column = col("i") % col("w")
+  private[operators] def pxRow: Column = (col("i") - pmod(col("i"), col("w"))) / col("w")
+
+  /** A pixel's integer offset (col − cx, row − cy) from the beam center. */
+  private def offset(cx: Int, cy: Int): (Column, Column) = (pxCol - lit(cx), pxRow - lit(cy))
+
+  /** A pixel's distance from the beam center: the one floating step,
+    * `sqrt` of an exact integer (engine-stable below 2^52). */
+  private def radius(cx: Int, cy: Int): Column = {
+    val (dc, dr) = offset(cx, cy)
+    sqrt((dc * dc + dr * dr).cast("double"))
+  }
+
+  /** The ring `floor(radius)` a pixel lands in. */
+  private def ring(cx: Int, cy: Int): Column = floor(radius(cx, cy)).cast("long")
+
+  /** Per (id, ring) pixel count / exact integer sum / mean of a pixel
+    * stream — the aggregate of [[radialProfile]]. */
+  private def ringSums(px: DataFrame, cx: Int, cy: Int): DataFrame =
+    px.groupBy(col("id"), ring(cx, cy).as("rbin"))
+      .agg(count(lit(1)).as("n_px"),
+        sum(col("v").cast("long")).as("v_sum"))
+      .select(col("id"), col("rbin"), col("n_px"), col("v_sum"),
+        // signed: dark-corrected frames legitimately sum negative
+        Exact.roundedRatioSigned(col("v_sum"), col("n_px"), 4).as("v_mean"))
+
   /** Azimuthal (radial) integration of 2-D detector frames — the
     * powder-diffraction reduction (pyFAI's integrate1d shape, here
     * over the decoded SPE/EDF `pixels` rows): every pixel lands in
@@ -79,19 +116,8 @@ object Binning {
     * floor(sqrt(exact integer)) is engine-stable for dr² < 2^52.
     */
   def radialProfile(frames: DataFrame, id: Column, width: Column,
-                    pixels: Column, cx: Int, cy: Int): DataFrame = {
-    val px = frames.select(id.as("id"), width.as("w"),
-      posexplode(pixels).as(Seq("i", "v")))
-    val dc = col("i") % col("w") - lit(cx)                              // col − cx
-    val dr = (col("i") - pmod(col("i"), col("w"))) / col("w") - lit(cy) // row − cy (exact)
-    val rbin = floor(sqrt((dc * dc + dr * dr).cast("double"))).cast("long")
-    px.groupBy(col("id"), rbin.as("rbin"))
-      .agg(count(lit(1)).as("n_px"),
-        sum(col("v").cast("long")).as("v_sum"))
-      .select(col("id"), col("rbin"), col("n_px"), col("v_sum"),
-        // signed: dark-corrected frames legitimately sum negative
-        Exact.roundedRatioSigned(col("v_sum"), col("n_px"), 4).as("v_mean"))
-  }
+                    pixels: Column, cx: Int, cy: Int): DataFrame =
+    ringSums(pixelStream(frames, id, width, pixels), cx, cy)
 
   /** Pixel-splitting azimuthal integration — [[radialProfile]] with
     * each pixel's intensity split LINEARLY between its two bracketing
@@ -112,14 +138,10 @@ object Binning {
     */
   def radialProfileSplit(frames: DataFrame, id: Column, width: Column,
                          pixels: Column, cx: Int, cy: Int): DataFrame = {
-    val px = frames.select(id.as("id"), width.as("w"),
-      posexplode(pixels).as(Seq("i", "v")))
-    val dc = col("i") % col("w") - lit(cx)
-    val dr = (col("i") - pmod(col("i"), col("w"))) / col("w") - lit(cy)
-    val rho = sqrt((dc * dc + dr * dr).cast("double"))
+    val rho = radius(cx, cy)
     val rbin = floor(rho).cast("long")
     val fm = floor((rho - floor(rho)) * lit(1000000.0)).cast("long")
-    px.select(col("id"), col("v"),
+    pixelStream(frames, id, width, pixels).select(col("id"), col("v"),
         explode(array(
           struct(rbin.as("rb"), (lit(1000000L) - fm).as("wt")),
           struct((rbin + 1).as("rb"), fm.as("wt")))).as("s"))
@@ -158,19 +180,14 @@ object Binning {
                              pixels: Column, dark: Column, cx: Int, cy: Int,
                              pixelSize: Double, distance: Double,
                              flat: (Column, Column) => Column): DataFrame = {
-    val px = frames.select(id.as("id"), width.as("w"), dark.as("d"),
-      posexplode(pixels).as(Seq("i", "v")))
-    val cc = col("i") % col("w")
-    val rr = (col("i") - pmod(col("i"), col("w"))) / col("w")
-    val dc = cc - lit(cx)
-    val dr = rr - lit(cy)
-    val rpx = sqrt((dc * dc + dr * dr).cast("double"))
+    val rpx = radius(cx, cy)
     val rbin = floor(rpx).cast("long")
     val x = rpx * lit(pixelSize) / lit(distance)
     val s = sqrt(lit(1.0) + x * x)
     val corr = floor((col("v") - element_at(col("d"), (col("i") + 1).cast("int")))
-      / flat(rr, cc) * (s * s * s) * lit(1000000.0)).cast("long")
-    px.groupBy(col("id"), rbin.as("rbin"))
+      / flat(pxRow, pxCol) * (s * s * s) * lit(1000000.0)).cast("long")
+    pixelStream(frames, id, width, pixels, dark.as("d"))
+      .groupBy(col("id"), rbin.as("rbin"))
       .agg(count(lit(1)).as("n_px"), sum(corr).as("i_sum_micro"))
       .select(col("id"), col("rbin"), col("n_px"), col("i_sum_micro"),
         Exact.roundedRatioSigned(col("i_sum_micro"), col("n_px"), 4).as("i_mean_micro"))
@@ -209,12 +226,9 @@ object Binning {
     */
   def sectorProfile(frames: DataFrame, id: Column, width: Column,
                     pixels: Column, cx: Int, cy: Int): DataFrame = {
-    val px = frames.select(id.as("id"), width.as("w"),
-      posexplode(pixels).as(Seq("i", "v")))
-    val dc = col("i") % col("w") - lit(cx)
-    val dr = (col("i") - pmod(col("i"), col("w"))) / col("w") - lit(cy)
-    val rbin = floor(sqrt((dc * dc + dr * dr).cast("double"))).cast("long")
-    px.groupBy(col("id"), rbin.as("rbin"), sectorOctant(dc, dr).as("sect"))
+    val (dc, dr) = offset(cx, cy)
+    pixelStream(frames, id, width, pixels)
+      .groupBy(col("id"), ring(cx, cy).as("rbin"), sectorOctant(dc, dr).as("sect"))
       .agg(count(lit(1)).as("n_px"),
         sum(col("v").cast("long")).as("v_sum"))
       .select(col("id"), col("rbin"), col("sect"), col("n_px"), col("v_sum"),
@@ -250,19 +264,9 @@ object Binning {
     */
   def radialProfileMasked(frames: DataFrame, id: Column, width: Column,
                           pixels: Column, cx: Int, cy: Int,
-                          mask: DataFrame): DataFrame = {
-    val px = frames.select(id.as("id"), width.as("w"),
-        posexplode(pixels).as(Seq("i", "v")))
-      .join(broadcast(mask.select(col("i"))), Seq("i"), "left_anti")
-    val dc = col("i") % col("w") - lit(cx)
-    val dr = (col("i") - pmod(col("i"), col("w"))) / col("w") - lit(cy)
-    val rbin = floor(sqrt((dc * dc + dr * dr).cast("double"))).cast("long")
-    px.groupBy(col("id"), rbin.as("rbin"))
-      .agg(count(lit(1)).as("n_px"),
-        sum(col("v").cast("long")).as("v_sum"))
-      .select(col("id"), col("rbin"), col("n_px"), col("v_sum"),
-        Exact.roundedRatioSigned(col("v_sum"), col("n_px"), 4).as("v_mean"))
-  }
+                          mask: DataFrame): DataFrame =
+    ringSums(pixelStream(frames, id, width, pixels)
+      .join(broadcast(mask.select(col("i"))), Seq("i"), "left_anti"), cx, cy)
 
   /** Lorentz–polarization corrected azimuthal integration — the two
     * remaining standard powder corrections on top of
@@ -291,14 +295,9 @@ object Binning {
                       pixelSize: Double, distance: Double,
                       pf: Double): DataFrame = {
     val k2 = (pixelSize / distance) * (pixelSize / distance)
-    val px = frames.select(id.as("id"), width.as("w"),
-      posexplode(pixels).as(Seq("i", "v")))
-    val cc = col("i") % col("w")
-    val rr = (col("i") - pmod(col("i"), col("w"))) / col("w")
-    val dc = cc - lit(cx)
-    val dr = rr - lit(cy)
+    val (dc, dr) = offset(cx, cy)
     val r2 = dc * dc + dr * dr
-    val rbin = floor(sqrt(r2.cast("double"))).cast("long")
+    val rbin = ring(cx, cy)
     val x2 = r2.cast("double") * lit(k2)
     val c2t2 = lit(1.0) / (lit(1.0) + x2)           // cos²2θ
     val s2t2 = x2 / (lit(1.0) + x2)                 // sin²2θ
@@ -307,7 +306,7 @@ object Binning {
     val sinth = sqrt((lit(1.0) - sqrt(c2t2)) / lit(2.0))
     val sin2t = sqrt(s2t2)
     val corr = floor(col("v") * sinth * sin2t / p * lit(1000000.0)).cast("long")
-    px.filter(r2 > 0)
+    pixelStream(frames, id, width, pixels).filter(r2 > 0)
       .groupBy(col("id"), rbin.as("rbin"))
       .agg(count(lit(1)).as("n_px"), sum(corr).as("i_sum_micro"))
       .select(col("id"), col("rbin"), col("n_px"), col("i_sum_micro"),
@@ -324,13 +323,8 @@ object Binning {
     */
   def roiLineCuts(frames: DataFrame, id: Column, width: Column,
                   pixels: Column, r0: Int, r1: Int, c0: Int, c1: Int): DataFrame = {
-    val px = frames.select(id.as("id"), width.as("w"),
-      posexplode(pixels).as(Seq("i", "v")))
-    val roi = px
-      .select(col("id"),
-        (col("i") % col("w")).as("c"),
-        ((col("i") - pmod(col("i"), col("w"))) / col("w")).cast("int").as("r"),
-        col("v"))
+    val roi = pixelStream(frames, id, width, pixels)
+      .select(col("id"), pxCol.as("c"), pxRow.cast("int").as("r"), col("v"))
       .filter(col("r") >= r0 && col("r") < r1 && col("c") >= c0 && col("c") < c1)
     roi
       .groupingSets(Seq(Seq(col("id"), col("c")), Seq(col("id"), col("r"))),
@@ -361,11 +355,9 @@ object Binning {
     */
   def peakWidths(frames: DataFrame, id: Column, width: Column,
                  pixels: Column, threshold: Long): DataFrame = {
-    val px = frames.select(id.as("id"), width.as("w"),
-      posexplode(pixels).as(Seq("i", "v")))
-      .filter(col("v") >= threshold)
-    val cc = (col("i") % col("w")).cast("long")
-    val rr = ((col("i") - pmod(col("i"), col("w"))) / col("w")).cast("long")
+    val px = pixelStream(frames, id, width, pixels).filter(col("v") >= threshold)
+    val cc = pxCol.cast("long")
+    val rr = pxRow.cast("long")
     val v = col("v").cast("long")
     val agg = px.groupBy(col("id"))
       .agg(count(lit(1)).as("n_peak"),
@@ -402,11 +394,9 @@ object Binning {
     */
   def peakCentroid(frames: DataFrame, id: Column, width: Column,
                    pixels: Column, threshold: Long): DataFrame = {
-    val px = frames.select(id.as("id"), width.as("w"),
-      posexplode(pixels).as(Seq("i", "v")))
-      .filter(col("v") >= threshold)
-    val cc = (col("i") % col("w")).cast("long")
-    val rr = ((col("i") - pmod(col("i"), col("w"))) / col("w")).cast("long")
+    val px = pixelStream(frames, id, width, pixels).filter(col("v") >= threshold)
+    val cc = pxCol.cast("long")
+    val rr = pxRow.cast("long")
     val v = col("v").cast("long")
     px.groupBy(col("id"))
       .agg(count(lit(1)).as("n_peak"),

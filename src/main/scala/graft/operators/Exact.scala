@@ -23,6 +23,10 @@ import org.apache.spark.sql.functions._
   */
 object Exact {
 
+  /** Lift to decimal(38,0), the exact integer domain for products and
+    * sums that overflow a long (DuckDB's HUGEINT twin). */
+  def dec(c: Column): Column = c.cast("decimal(38,0)")
+
   /** Scale-2 decimal column → exact integer cents (long). */
   def cents(c: Column): Column = (c * lit(100)).cast("long")
 

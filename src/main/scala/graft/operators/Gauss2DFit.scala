@@ -60,11 +60,9 @@ object Gauss2DFit {
   /** Per-frame fit over a detector-stack DataFrame (id, width,
     * pixels array): pixels explode to (x = col, y = row, v) and each
     * frame fits in one `mapGroups` task. */
-  def fitFrames(df: DataFrame, id: Column, width: Column, pixels: Column): DataFrame = {
-    val px = df.select(id.as("g"), width.as("w"), posexplode(pixels).as(Seq("i", "v")))
-    val i = col("i"); val w = col("w")
-    LeastSquares.fitGroups(px, col("g"), i % w, (i - pmod(i, w)) / w, col("v")) {
+  def fitFrames(df: DataFrame, id: Column, width: Column, pixels: Column): DataFrame =
+    LeastSquares.fitGroups(Binning.pixelStream(df, id, width, pixels),
+        col("id"), Binning.pxCol, Binning.pxRow, col("v")) {
       (g, xs, ys, vs) => fitArrays(g, xs, ys, vs)
     }
-  }
 }

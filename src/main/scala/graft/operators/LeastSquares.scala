@@ -3,7 +3,7 @@ package graft.operators
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{coalesce, lit}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 
 /** The one least-squares core behind every peak fitter ([[GaussFit]],
   * [[LineshapeFit]], [[Gauss2DFit]]): Levenberg–Marquardt, the solver
@@ -249,14 +249,17 @@ object LeastSquares {
   /** One `fit` per group of `df`, in one `groupByKey(g).mapGroups` task
     * each: a typed Dataset operator, since iterative refinement has no
     * declarative Spark form (SURVEY §2 #10). A null x, y or v becomes
-    * NaN, which the core skips, so every group still gets a row. */
+    * NaN, which the core skips, so every group still gets a row. A row
+    * whose key is null, or does not cast to long, belongs to no group
+    * and is skipped. */
   private[operators] def fitGroups[R <: Product : TypeTag](
       df: DataFrame, g: Column, x: Column, y: Column, v: Column)(
       fit: (Long, Array[Double], Array[Double], Array[Double]) => R): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     def num(c: Column) = coalesce(c.cast("double"), lit(Double.NaN))
-    df.select(g.cast("long").as("g"), num(x).as("x"), num(y).as("y"), num(v).as("v"))
+    df.select(g.try_cast("long").as("g"), num(x).as("x"), num(y).as("y"), num(v).as("v"))
+      .filter(col("g").isNotNull)
       .as[Pt]
       .groupByKey(_.g)
       .mapGroups { (key, it) =>

@@ -17,21 +17,6 @@ import graft.operators.Exact.{centsSql, roundedRatioSql}
   */
 object AnalysisQueries {
 
-  /** Shared DuckDB prep over events (mirror of [[ev]]). */
-  private val E: String =
-    """(SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-      |   (epoch_us(ts) // 1000000) - 1704067200 AS xs,
-      |   CAST(value AS DECIMAL(18,2)) AS vd, event_type
-      | FROM events)""".stripMargin
-
-  /** Shared Spark prep — mirror of [[E]]. */
-  private def ev(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d).select(
-      col("event_id"), col("user_id"), col("ts_us"),
-      (expr("ts_us div 1000000") - lit(1704067200L)).as("xs"),
-      col("value").cast("decimal(18,2)").as("vd"),
-      col("event_type"))
-
   private val TauE7 = 10L // deadtime τ = 1 µs per unit rate
 
   /** Deadtime correction (#144): nonparalyzable correction of every
@@ -1021,10 +1006,10 @@ object AnalysisQueries {
     */
   val qIsotonicFit = GateQuery.sql(
     "q_isotonic_fit",
-    """WITH RECURSIVE pts AS MATERIALIZED (
+    s"""WITH RECURSIVE pts AS MATERIALIZED (
       |  SELECT g, row_number() OVER (PARTITION BY g ORDER BY x, y, w) AS rn, y, w
       |  FROM (SELECT user_id % 8 AS g,
-      |      CAST((epoch_us(ts) // 1000000) - 1704067200 AS DOUBLE) AS x,
+      |      CAST(${Tables.xsSql} AS DOUBLE) AS x,
       |      CAST(CAST(value AS DECIMAL(18,2)) AS DOUBLE) AS y, CAST(1.0 AS DOUBLE) AS w
       |    FROM events WHERE event_type = 'view') z),
       |np AS MATERIALIZED (SELECT g, CAST(count(*) AS BIGINT) AS n FROM pts GROUP BY 1),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{Binning, Curation, DriverBound, Exact, Graphs, Relational, TextOps}
-import graft.operators.Exact.centsSql
+import graft.operators.Exact.{centsSql, dec}
 
 /** Second audit layer (SURVEY.md §2 #247–#253): static-graph
   * structure (triangles / clustering), normality and trend tests
@@ -23,21 +23,6 @@ import graft.operators.Exact.centsSql
   * forms mirrored textually on both engines.
   */
 object AuditQueries {
-
-  /** Shared DuckDB prep over events (mirror of [[ev]]). */
-  private val E: String =
-    """(SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-      |   (epoch_us(ts) // 1000000) - 1704067200 AS xs,
-      |   CAST(value AS DECIMAL(18,2)) AS vd, event_type
-      | FROM events)""".stripMargin
-
-  /** Shared Spark prep — mirror of [[E]]. */
-  private def ev(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d).select(
-      col("event_id"), col("user_id"), col("ts_us"),
-      (expr("ts_us div 1000000") - lit(1704067200L)).as("xs"),
-      col("value").cast("decimal(18,2)").as("vd"),
-      col("event_type"))
 
   import Exact.{floorDivBig, floorDivBigSql}
 
@@ -1947,7 +1932,6 @@ object AuditQueries {
       sum(col("p3")).cast("long").as("c3"),
       sum((col("p1") + col("p2") + col("p3")) * (col("p1") + col("p2") + col("p3")))
         .cast("long").as("sr2"))
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val sTot = col("c1") + col("c2") + col("c3")
     a.select(col("n_users"), col("c1"), col("c2"), col("c3"),
       when(lit(3L) * sTot - col("sr2") > 0,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{SharedRelations, Tables}
 import graft.operators.{Binning, Curation, Exact}
-import graft.operators.Exact.{roundedRatioSql, roundedRatioSignedSql}
+import graft.operators.Exact.{roundedRatioSql, roundedRatioSignedSql, dec}
 
 /** Published-playbook corpus-curation gates (SURVEY.md §2 #83–#86)
   * over the `documents` table: C4-style corpus-wide segment dedup,
@@ -1661,7 +1661,6 @@ object CurationQueries {
       .select(col("source"), col("word"),
         Binning.floorDivCol(coalesce(col("c"), lit(0L)) * lit(1000000L), col("n_s"))
           .as("f_ppm"))
-    def dec(x: org.apache.spark.sql.Column) = x.cast("decimal(38,0)")
     val ws = f.groupBy(col("word")).agg(
       count(lit(1)).cast("long").as("k"),
       sum(col("f_ppm")).cast("long").as("sf"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{Exact, Relational, VectorOps}
+import graft.operators.Exact.dec
 import graft.operators.VectorOps._
 
 /** Embedding similarity + array gate queries (SURVEY.md §2 #18–#20,
@@ -186,7 +187,6 @@ object EmbeddingQueries {
       .groupBy(col("vec_id"))
       .agg(count(col("query_id")).cast("long").as("o"))
       .persist() // moments AND the hub ranking read it
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val mo = occ.agg(count(lit(1)).cast("long").as("n"),
       sum(col("o")).cast("decimal(38,0)").as("s1"),
       sum(dec(col("o")) * col("o")).cast("decimal(38,0)").as("s2"),

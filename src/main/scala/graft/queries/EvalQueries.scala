@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{Binning, Curation, DriverBound, Exact}
-import graft.operators.Exact.centsSql
+import graft.operators.Exact.{centsSql, dec}
 
 /** Classifier-evaluation / statistical-testing completions
   * (SURVEY.md §2 #207–#212): confusion-matrix metrics, Brier score,
@@ -28,21 +28,6 @@ import graft.operators.Exact.centsSql
   * scalars (means, maxima) ride 1-row broadcasts.
   */
 object EvalQueries {
-
-  /** Shared DuckDB prep over events (mirror of [[ev]]). */
-  private val E: String =
-    """(SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-      |   (epoch_us(ts) // 1000000) - 1704067200 AS xs,
-      |   CAST(value AS DECIMAL(18,2)) AS vd, event_type
-      | FROM events)""".stripMargin
-
-  /** Shared Spark prep — mirror of [[E]]. */
-  private def ev(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d).select(
-      col("event_id"), col("user_id"), col("ts_us"),
-      (expr("ts_us div 1000000") - lit(1704067200L)).as("xs"),
-      col("value").cast("decimal(18,2)").as("vd"),
-      col("event_type"))
 
   import Exact.{floorDivBig, floorDivBigSql}
 
@@ -430,7 +415,6 @@ object EvalQueries {
     val e = ev(s, d).select(pmod(col("user_id"), lit(4L)).as("a"),
       Binning.floorDiv(pmod(Binning.floorDiv(col("xs"), 3600L), lit(24L)), 6L).as("b"),
       Exact.cents(col("vd")).as("c"))
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val cl = e.groupBy(col("a"), col("b")).agg(
       count(lit(1)).cast("long").as("n_ab"),
       sum(col("c")).cast("long").as("s_ab"),
@@ -517,7 +501,6 @@ object EvalQueries {
       coalesce(sum(when(col("band") === 0, col("c"))), lit(0L)).as("b0"),
       (1 to 3).map(b =>
         coalesce(sum(when(col("band") === b, col("c"))), lit(0L)).as(s"b$b")): _*)
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val tot = col("b0") + col("b1") + col("b2") + col("b3")
     val a = u.agg(count(lit(1)).cast("long").as("n"),
       ((0 to 3).flatMap(b => Seq(
@@ -576,7 +559,6 @@ object EvalQueries {
         Exact.cents(col("vd")))).cast("long"), lit(0L)).as("o"),
       coalesce(Exact.sumUnits(when(pmod(Binning.floorDiv(col("xs"), 3600L), lit(2L)) === 0,
         Exact.cents(col("vd")))).cast("long"), lit(0L)).as("ev"))
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val a = u.agg(count(lit(1)).cast("long").as("n"),
       sum(col("o")).cast("long").as("so"), sum(col("ev")).cast("long").as("se"),
       sum(dec(col("o")) * col("o")).cast("decimal(38,0)").as("qo"),
@@ -634,7 +616,6 @@ object EvalQueries {
       col("n_chars").cast("long").as("m1"),
       (lit(6L) * size(split(col("text"), " "))).cast("long").as("m2"))
     val dd = t.select(col("doc_id"), (col("m1") - col("m2")).as("df"))
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val a = dd.agg(count(lit(1)).cast("long").as("n"),
       sum(col("df")).cast("long").as("s"),
       sum(dec(col("df")) * col("df")).cast("decimal(38,0)").as("q"))
@@ -725,7 +706,6 @@ object EvalQueries {
           .over(Window.partitionBy(col("g")).orderBy(col("c"))).cast("long"))
       .withColumn("nn",
         sum(col("c1") + col("c2")).over(Window.partitionBy(col("g"))).cast("long"))
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val r2 = lit(2L) * col("cum") - col("t") + 1
     val a = w.groupBy(col("g")).agg(
       sum(col("c1")).cast("long").as("n1"), sum(col("c2")).cast("long").as("n2"),
@@ -865,7 +845,6 @@ object EvalQueries {
       (tPart(col("m1"), col("k1")) - tPart(col("m0"), col("k0"))).as("sdiff"))
     val w5 = w4.withColumn("mm",
       Exact.floorDivBig(col("sdiff").cast("decimal(38,0)") * lit(1000000L), col("t")))
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val a = w5.groupBy(col("g")).agg(
       sum(col("c1")).cast("long").as("n1"), sum(col("c2")).cast("long").as("n2"),
       first(col("nn")).as("nn"),
@@ -944,7 +923,6 @@ object EvalQueries {
       .rowsBetween(Window.unboundedPreceding, -1)
     val w = (0 to 3).foldLeft(v)((df, i) =>
       df.withColumn(s"cx$i", coalesce(sum(col(s"c$i")).over(wSpec), lit(0L)).cast("long")))
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val pairs = for { i <- 0 to 3; j <- 0 to 3 if i < j } yield (i, j)
     val rowTerm = pairs.map { case (i, j) =>
       dec(col(s"c$j")) * (lit(2L) * col(s"cx$i") + col(s"c$i")) }.reduce(_ + _)
@@ -1222,7 +1200,6 @@ object EvalQueries {
       sum(when(col("w") === 1, col("s"))).cast("long").as("x1"),
       sum(when(col("w") === 2, col("s"))).cast("long").as("x2"),
       sum(when(col("w") === 3, col("s"))).cast("long").as("x3"))
-    def dec(c: Column) = c.cast("decimal(38,0)")
     a.select(col("n0"), col("x0"), col("n1"), col("x1"), col("n2"), col("x2"),
       col("n3"), col("x3"), col("n").as("n_total"), col("x").as("x_total"),
       when(col("x") * (col("n") - col("x")) === 0 ||
@@ -2043,7 +2020,6 @@ object EvalQueries {
           .over(Window.partitionBy(col("g")).orderBy(col("c"))).cast("long"))
       .withColumn("nn",
         sum(col("c1") + col("c2")).over(Window.partitionBy(col("g"))).cast("long"))
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val r2 = lit(2L) * col("cum") - col("t") + 1
     val r2v = lit(2L) * (col("nn") + 1) - r2
     val a = w.groupBy(col("g")).agg(
@@ -2201,7 +2177,6 @@ object EvalQueries {
     val w = c.withColumn("r2",
       (lit(2L) * (sum(col("c")).over(Window.orderBy(col("cat"))) - col("c"))
         + col("c") + 1).cast("long"))
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val a = w.agg(sum(col("c1") * col("r2")).cast("long").as("w2"),
       sum(col("c1")).cast("long").as("n1"), sum(col("c")).cast("long").as("nn"),
       sum(dec(col("c")) * col("c") * col("c") - col("c")).cast("decimal(38,0)").as("tcube"))

@@ -14,21 +14,6 @@ import graft.operators.Exact.centsSql
   */
 object ExtendedQueries {
 
-  /** Shared DuckDB prep over events (mirror of [[ev]]). */
-  private val E: String =
-    """(SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-      |   (epoch_us(ts) // 1000000) - 1704067200 AS xs,
-      |   CAST(value AS DECIMAL(18,2)) AS vd, event_type
-      | FROM events)""".stripMargin
-
-  /** Shared Spark prep — mirror of [[E]]. */
-  private def ev(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d).select(
-      col("event_id"), col("user_id"), col("ts_us"),
-      (expr("ts_us div 1000000") - lit(1704067200L)).as("xs"),
-      col("value").cast("decimal(18,2)").as("vd"),
-      col("event_type"))
-
   /** Bounded range join (#49): per click, the count and exact-cents
     * total of the same user's purchases in the preceding 6 hours.
     * The Spark plan is the bucketized equi-join ([[RangeJoin]]) —
@@ -197,7 +182,7 @@ object ExtendedQueries {
     GateQuery.sql(
       "q_sixc_hkl",
       s"""WITH e AS (SELECT event_id,
-         |    (epoch_us(ts) // 1000000) - 1704067200 AS xs FROM events),
+         |    ${Tables.xsSql} AS xs FROM events),
          |$SweepSql
          |SELECT event_id,
          |  round($qxS * 4, 6) + 0.0 AS h,

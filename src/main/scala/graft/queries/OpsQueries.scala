@@ -22,20 +22,6 @@ import graft.operators.Exact.centsSql
   */
 object OpsQueries {
 
-  /** Shared DuckDB prep over events (mirror of [[ev]]). */
-  private val E: String =
-    """(SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-      |   (epoch_us(ts) // 1000000) - 1704067200 AS xs,
-      |   CAST(value AS DECIMAL(18,2)) AS vd, event_type
-      | FROM events)""".stripMargin
-
-  private def ev(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d).select(
-      col("event_id"), col("user_id"), col("ts_us"),
-      (expr("ts_us div 1000000") - lit(1704067200L)).as("xs"),
-      col("value").cast("decimal(18,2)").as("vd"),
-      col("event_type"))
-
   private val CfTopItems = 10
   private val CfTopK = 5
 

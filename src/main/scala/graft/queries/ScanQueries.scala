@@ -27,21 +27,6 @@ import graft.operators.Exact.{centsSql, roundedRatioSql}
   */
 object ScanQueries {
 
-  /** Shared DuckDB prep — mirror of [[ev]]. */
-  private val E: String =
-    """(SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-      |   (epoch_us(ts) // 1000000) - 1704067200 AS xs,
-      |   CAST(value AS DECIMAL(18,2)) AS vd, event_type
-      | FROM events)""".stripMargin
-
-  /** Shared Spark prep — mirror of [[E]]. */
-  private def ev(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d).select(
-      col("event_id"), col("user_id"), col("ts_us"),
-      (expr("ts_us div 1000000") - lit(1704067200L)).as("xs"),
-      col("value").cast("decimal(18,2)").as("vd"),
-      col("event_type"))
-
   private def xsd: Column = col("xs").cast("decimal(9,0)")
 
   val qScanStats = GateQuery.sql(
@@ -315,12 +300,12 @@ object ScanQueries {
   val qInterpGrid = GateQuery.sql(
     "q_interp_grid", {
       Interpolate.onGridSql("events", "user_id", "epoch_us(ts)", "value",
-        x0 = 1704067200000000L, dx = 162000000000L, n = 16) +
+        x0 = Tables.XsEpochSec * 1000000L, dx = 162000000000L, n = 16) +
         "\nORDER BY user_id, grid_x"
     }) { (s, d) =>
     Interpolate.onGrid(Tables.events(s, d), Seq("user_id"),
         col("ts_us"), col("value"),
-        x0 = 1704067200000000L, dx = 162000000000L, n = 16)
+        x0 = Tables.XsEpochSec * 1000000L, dx = 162000000000L, n = 16)
       .orderedSmall(col("user_id"), col("grid_x"))
   }
 

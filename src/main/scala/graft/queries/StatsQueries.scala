@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{Binning, Curation, DriverBound, Exact, TextOps}
-import graft.operators.Exact.centsSql
+import graft.operators.Exact.{centsSql, dec}
 
 /** Statistical-testing / ML-evaluation / graph extensions
   * (SURVEY.md §2 #178–#185): chi-squared independence, Welch's
@@ -25,22 +25,72 @@ import graft.operators.Exact.centsSql
   */
 object StatsQueries {
 
-  /** Shared DuckDB prep over events (mirror of [[ev]]). */
-  private val E: String =
-    """(SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-      |   (epoch_us(ts) // 1000000) - 1704067200 AS xs,
-      |   CAST(value AS DECIMAL(18,2)) AS vd, event_type
-      | FROM events)""".stripMargin
-
-  /** Shared Spark prep — mirror of [[E]]. */
-  private def ev(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d).select(
-      col("event_id"), col("user_id"), col("ts_us"),
-      (expr("ts_us div 1000000") - lit(1704067200L)).as("xs"),
-      col("value").cast("decimal(18,2)").as("vd"),
-      col("event_type"))
-
   import Exact.{floorDivBig, floorDivBigSql}
+
+  /** Churn lifetime per user, the input of the survival gates:
+    * `lt` = whole days between the user's first and last event,
+    * `last_xs` = the last event's `xs`, and `censored` = 1 when that
+    * last event lies within `horizonDays` of the corpus's last event
+    * (the user may still be active, so `lt` is only a lower bound).
+    * [[churnLifetimesSql]] is the DuckDB side. */
+  private def churnLifetimes(e: DataFrame, horizonDays: Long): DataFrame = {
+    val mx = e.agg(max(col("xs")).as("mxs"))
+    e.groupBy(col("user_id"))
+      .agg(Binning.floorDiv(max(col("xs")) - min(col("xs")), 86400L).as("lt"),
+        max(col("xs")).as("last_xs"))
+      .join(broadcast(mx))
+      .select(col("user_id"), col("lt"), col("last_xs"),
+        when(col("last_xs") >= col("mxs") - lit(horizonDays * 86400L), 1L).otherwise(0L)
+          .as("censored"))
+  }
+
+  /** DuckDB side of [[churnLifetimes]]. */
+  private def churnLifetimesSql(horizonDays: Long): String =
+    s"""(SELECT user_id, (max(xs) - min(xs)) // 86400 AS lt, max(xs) AS last_xs,
+       |    CASE WHEN max(xs) >= (SELECT max(xs) FROM $E e2) - ${horizonDays * 86400}
+       |      THEN 1 ELSE 0 END AS censored
+       |  FROM $E e GROUP BY user_id)""".stripMargin
+
+  /** First-big-purchase lifetime per user, the input of the Cox
+    * family: `lt` = whole days from the user's first event to their
+    * first purchase of at least $90, or to their last event when
+    * there is none (`censored` = 1). `extra` per-user aggregates ride
+    * the same aggregate and keep their names.
+    * [[purchaseLifetimesSql]] is the DuckDB side. */
+  private def purchaseLifetimes(e: DataFrame, extra: Column*): DataFrame =
+    e.groupBy(col("user_id"))
+      .agg(min(col("xs")).as("fx"), Seq(max(col("xs")).as("lx"),
+        min(when(col("event_type") === "purchase" &&
+          Exact.cents(col("vd")) >= 9000L, col("xs"))).as("px")) ++ extra: _*)
+      .withColumn("lt", Binning.floorDiv(coalesce(col("px"), col("lx")) - col("fx"), 86400L))
+      .withColumn("censored", when(col("px").isNull, 1L).otherwise(0L))
+
+  /** DuckDB side of [[purchaseLifetimes]]; `extra` are aggregate
+    * SQL fragments with their aliases. */
+  private def purchaseLifetimesSql(extra: String*): String =
+    s"""(SELECT *, (coalesce(px, lx) - fx) // 86400 AS lt,
+       |    CASE WHEN px IS NULL THEN 1 ELSE 0 END AS censored
+       |  FROM (SELECT user_id, min(xs) AS fx, max(xs) AS lx,
+       |    min(CASE WHEN event_type = 'purchase' AND ${centsSql("vd")} >= 9000
+       |      THEN xs END) AS px${extra.map(",\n    " + _).mkString}
+       |  FROM $E e GROUP BY user_id) f)""".stripMargin
+
+  /** The Cox-family covariate relation (q_schoenfeld, q_cox_ph):
+    * purchase lifetimes with x = 1 for users with more clicks than
+    * views. [[ClickHeavySql]] is the DuckDB side. */
+  private def clickHeavyLifetimes(e: DataFrame): DataFrame =
+    purchaseLifetimes(e,
+        sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("nclick"),
+        sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("nview"))
+      .select(col("lt"), col("censored"),
+        when(col("nclick") > col("nview"), 1L).otherwise(0L).as("x"))
+
+  /** DuckDB side of [[clickHeavyLifetimes]]. */
+  private val ClickHeavySql: String =
+    s"""(SELECT lt, censored, CASE WHEN nclick > nview THEN 1 ELSE 0 END AS x
+       |  FROM ${purchaseLifetimesSql(
+            "sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS nclick",
+            "sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS nview")} f)""".stripMargin
 
   /** Chi-squared independence test (#178): is the event-type mix
     * independent of the user cohort (user_id mod 8)? The classic
@@ -891,11 +941,7 @@ object StatsQueries {
     */
   val qKaplanMeier = GateQuery.sql(
     "q_kaplan_meier",
-    s"""WITH u AS (SELECT user_id,
-       |    (max(xs) - min(xs)) // 86400 AS lt,
-       |    CASE WHEN max(xs) >= (SELECT max(xs) FROM $E e2) - 7 * 86400
-       |      THEN 1 ELSE 0 END AS censored
-       |  FROM $E e GROUP BY user_id),
+    s"""WITH u AS ${churnLifetimesSql(7)},
        |t AS (SELECT lt, count(*) AS n_at,
        |    CAST(sum(1 - censored) AS BIGINT) AS d,
        |    CAST(sum(censored) AS BIGINT) AS cens
@@ -913,15 +959,7 @@ object StatsQueries {
        |SELECT lt AS t_days, n_risk, d AS n_deaths, cens AS n_censored,
        |  CASE WHEN died = 1 THEN NULL ELSE cum_ln END AS ln_surv_micro
        |FROM s ORDER BY t_days""".stripMargin) { (s, d) =>
-    val e = ev(s, d)
-    val mx = e.agg(max(col("xs")).as("mxs"))
-    val u = e.groupBy(col("user_id"))
-      .agg(Binning.floorDiv(max(col("xs")) - min(col("xs")), 86400L).as("lt"),
-        max(col("xs")).as("last_xs"))
-      .join(broadcast(mx))
-      .select(col("lt"),
-        when(col("last_xs") >= col("mxs") - lit(7L * 86400L), 1L).otherwise(0L)
-          .as("censored"))
+    val u = churnLifetimes(ev(s, d), 7L)
     val t = u.groupBy(col("lt"))
       .agg(count(lit(1)).as("n_at"),
         Exact.sumUnits(lit(1L) - col("censored")).cast("long").as("d"),
@@ -966,11 +1004,8 @@ object StatsQueries {
     */
   val qLogRank = GateQuery.sql(
     "q_logrank",
-    s"""WITH u AS (SELECT user_id % 2 AS grp,
-       |    (max(xs) - min(xs)) // 86400 AS lt,
-       |    CASE WHEN max(xs) >= (SELECT max(xs) FROM $E e2) - 7 * 86400
-       |      THEN 1 ELSE 0 END AS censored
-       |  FROM $E e GROUP BY user_id),
+    s"""WITH u AS (SELECT user_id % 2 AS grp, lt, censored
+       |  FROM ${churnLifetimesSql(7)} l),
        |t AS (SELECT lt,
        |    CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS a1,
        |    CAST(count(*) AS BIGINT) AS a,
@@ -998,15 +1033,8 @@ object StatsQueries {
        |      + 0.0
        |  END AS chi2
        |FROM g, tot""".stripMargin) { (s, d) =>
-    val e = ev(s, d)
-    val mx = e.agg(max(col("xs")).as("mxs"))
-    val u = e.groupBy(col("user_id"))
-      .agg(Binning.floorDiv(max(col("xs")) - min(col("xs")), 86400L).as("lt"),
-        max(col("xs")).as("last_xs"))
-      .join(broadcast(mx))
-      .select(pmod(col("user_id"), lit(2L)).as("grp"), col("lt"),
-        when(col("last_xs") >= col("mxs") - lit(7L * 86400L), 1L).otherwise(0L)
-          .as("censored"))
+    val u = churnLifetimes(ev(s, d), 7L)
+      .select(pmod(col("user_id"), lit(2L)).as("grp"), col("lt"), col("censored"))
     val t = u.groupBy(col("lt")).agg(
       Exact.sumUnits(when(col("grp") === 1, 1L).otherwise(0L)).cast("long").as("a1"),
       count(lit(1)).cast("long").as("a"),
@@ -1062,11 +1090,8 @@ object StatsQueries {
     */
   val qLogrankStrat = GateQuery.sql(
     "q_logrank_strat",
-    s"""WITH u AS (SELECT user_id % 2 AS grp, (user_id // 2) % 4 AS st,
-       |    (max(xs) - min(xs)) // 86400 AS lt,
-       |    CASE WHEN max(xs) >= (SELECT max(xs) FROM $E e2) - 86400
-       |      THEN 1 ELSE 0 END AS censored
-       |  FROM $E e GROUP BY user_id),
+    s"""WITH u AS (SELECT user_id % 2 AS grp, (user_id // 2) % 4 AS st, lt, censored
+       |  FROM ${churnLifetimesSql(1)} l),
        |t AS (SELECT st, lt,
        |    CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS a1,
        |    CAST(count(*) AS BIGINT) AS a,
@@ -1099,16 +1124,10 @@ object StatsQueries {
        |  END AS pooled_chi2
        |FROM g JOIN nu ON g.st = nu.st CROSS JOIN p
        |ORDER BY stratum""".stripMargin) { (s, d) =>
-    val e = ev(s, d)
-    val mx = e.agg(max(col("xs")).as("mxs"))
-    val u = e.groupBy(col("user_id"))
-      .agg(Binning.floorDiv(max(col("xs")) - min(col("xs")), 86400L).as("lt"),
-        max(col("xs")).as("last_xs"))
-      .join(broadcast(mx))
+    val u = churnLifetimes(ev(s, d), 1L)
       .select(pmod(col("user_id"), lit(2L)).as("grp"),
         pmod(Binning.floorDiv(col("user_id"), 2L), lit(4L)).as("st"), col("lt"),
-        when(col("last_xs") >= col("mxs") - lit(86400L), 1L).otherwise(0L)
-          .as("censored"))
+        col("censored"))
       .persist() // feeds the lifetime grid AND the per-stratum user
                  // counts; freed by the harness post-action
     val t = u.groupBy(col("st"), col("lt")).agg(
@@ -1170,11 +1189,8 @@ object StatsQueries {
     */
   val qAalen = GateQuery.sql(
     "q_aalen",
-    s"""WITH u AS (SELECT user_id % 2 AS grp,
-       |    (max(xs) - min(xs)) // 86400 AS lt,
-       |    CASE WHEN max(xs) >= (SELECT max(xs) FROM $E e2) - 86400
-       |      THEN 1 ELSE 0 END AS censored
-       |  FROM $E e GROUP BY user_id),
+    s"""WITH u AS (SELECT user_id % 2 AS grp, lt, censored
+       |  FROM ${churnLifetimesSql(1)} l),
        |t AS (SELECT lt,
        |    CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS a0,
        |    CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS a1,
@@ -1200,15 +1216,8 @@ object StatsQueries {
        |  b0 AS cum_b0_micro, b1 AS cum_b1_micro,
        |  CAST(singular AS BIGINT) AS singular
        |FROM c ORDER BY t_days""".stripMargin) { (s, d) =>
-    val e = ev(s, d)
-    val mx = e.agg(max(col("xs")).as("mxs"))
-    val u = e.groupBy(col("user_id"))
-      .agg(Binning.floorDiv(max(col("xs")) - min(col("xs")), 86400L).as("lt"),
-        max(col("xs")).as("last_xs"))
-      .join(broadcast(mx))
-      .select(pmod(col("user_id"), lit(2L)).as("grp"), col("lt"),
-        when(col("last_xs") >= col("mxs") - lit(86400L), 1L).otherwise(0L)
-          .as("censored"))
+    val u = churnLifetimes(ev(s, d), 1L)
+      .select(pmod(col("user_id"), lit(2L)).as("grp"), col("lt"), col("censored"))
     val t = u.groupBy(col("lt")).agg(
       Exact.sumUnits(when(col("grp") === 0, 1L).otherwise(0L)).cast("long").as("a0"),
       Exact.sumUnits(when(col("grp") === 1, 1L).otherwise(0L)).cast("long").as("a1"),
@@ -1256,16 +1265,7 @@ object StatsQueries {
     */
   val qSchoenfeld = GateQuery.sql(
     "q_schoenfeld",
-    s"""WITH f AS (SELECT user_id, min(xs) AS fx, max(xs) AS lx,
-       |    min(CASE WHEN event_type = 'purchase' AND ${centsSql("vd")} >= 9000
-       |      THEN xs END) AS px,
-       |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS nclick,
-       |    sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS nview
-       |  FROM $E e GROUP BY user_id),
-       |u AS (SELECT (coalesce(px, lx) - fx) // 86400 AS lt,
-       |    CASE WHEN px IS NULL THEN 1 ELSE 0 END AS censored,
-       |    CASE WHEN nclick > nview THEN 1 ELSE 0 END AS x
-       |  FROM f),
+    s"""WITH u AS $ClickHeavySql,
        |t AS (SELECT lt, CAST(sum(1 - censored) AS BIGINT) AS d,
        |    CAST(sum((1 - censored) * x) AS BIGINT) AS dx,
        |    CAST(count(*) AS BIGINT) AS n_at, CAST(sum(x) AS BIGINT) AS n_at1
@@ -1292,17 +1292,7 @@ object StatsQueries {
        |        * sqrt(CAST(m * srr - sr * sr AS DOUBLE))), 6) + 0.0
        |  END AS trend_corr
        |FROM m""".stripMargin) { (s, d) =>
-    val e = ev(s, d)
-    val u = e.groupBy(col("user_id"))
-      .agg(min(col("xs")).as("fx"), max(col("xs")).as("lx"),
-        min(when(col("event_type") === "purchase" &&
-          Exact.cents(col("vd")) >= 9000L, col("xs"))).as("px"),
-        sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("nclick"),
-        sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("nview"))
-      .select(
-        Binning.floorDiv(coalesce(col("px"), col("lx")) - col("fx"), 86400L).as("lt"),
-        when(col("px").isNull, 1L).otherwise(0L).as("censored"),
-        when(col("nclick") > col("nview"), 1L).otherwise(0L).as("x"))
+    val u = clickHeavyLifetimes(ev(s, d))
     val t = u.groupBy(col("lt"))
       .agg(Exact.sumUnits(lit(1L) - col("censored")).cast("long").as("d"),
         Exact.sumUnits((lit(1L) - col("censored")) * col("x")).cast("long").as("dx"),
@@ -1319,7 +1309,6 @@ object StatsQueries {
           Binning.floorDivCol(col("d") * col("n1") * lit(1000000L), col("nr")))
           .cast("long").as("res"),
         row_number().over(Window.orderBy(col("lt"))).cast("long").as("i"))
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val m = dts.agg(count(lit(1)).cast("long").as("m"),
       sum(dec(col("i"))).cast("decimal(38,0)").as("si"),
       sum(dec(col("i")) * col("i")).cast("decimal(38,0)").as("sii"),
@@ -1352,11 +1341,8 @@ object StatsQueries {
   val qRmst = GateQuery.sql(
     "q_rmst", {
       val tau = 21L
-      s"""WITH u AS (SELECT user_id % 2 AS grp,
-         |    (max(xs) - min(xs)) // 86400 AS lt,
-         |    CASE WHEN max(xs) >= (SELECT max(xs) FROM $E e2) - 86400
-         |      THEN 1 ELSE 0 END AS censored
-         |  FROM $E e GROUP BY user_id),
+      s"""WITH u AS (SELECT user_id % 2 AS grp, lt, censored
+         |  FROM ${churnLifetimesSql(1)} l),
          |t AS (SELECT grp, lt, count(*) AS n_at,
          |    CAST(sum(1 - censored) AS BIGINT) AS d
          |  FROM u GROUP BY grp, lt),
@@ -1398,15 +1384,8 @@ object StatsQueries {
          |ORDER BY nu.grp""".stripMargin
     }) { (s, d) =>
     val tau = 21L
-    val e = ev(s, d)
-    val mx = e.agg(max(col("xs")).as("mxs"))
-    val u = e.groupBy(col("user_id"))
-      .agg(Binning.floorDiv(max(col("xs")) - min(col("xs")), 86400L).as("lt"),
-        max(col("xs")).as("last_xs"))
-      .join(broadcast(mx))
-      .select(pmod(col("user_id"), lit(2L)).as("grp"), col("lt"),
-        when(col("last_xs") >= col("mxs") - lit(86400L), 1L).otherwise(0L)
-          .as("censored"))
+    val u = churnLifetimes(ev(s, d), 1L)
+      .select(pmod(col("user_id"), lit(2L)).as("grp"), col("lt"), col("censored"))
       .persist() // feeds the day grid AND per-arm totals
     val t = u.groupBy(col("grp"), col("lt"))
       .agg(count(lit(1)).as("n_at"),
@@ -1471,12 +1450,8 @@ object StatsQueries {
     s"""WITH last AS (SELECT user_id, event_type AS cause FROM (
        |    SELECT user_id, event_type, row_number() OVER (PARTITION BY user_id
        |      ORDER BY ts_us DESC, event_id DESC) AS rn FROM $E e) WHERE rn = 1),
-       |u AS (SELECT e.user_id,
-       |    (max(e.xs) - min(e.xs)) // 86400 AS lt,
-       |    CASE WHEN max(e.xs) >= (SELECT max(xs) FROM $E e2) - 86400
-       |      THEN 1 ELSE 0 END AS censored,
-       |    any_value(l.cause) AS cause
-       |  FROM $E e JOIN last l ON e.user_id = l.user_id GROUP BY e.user_id),
+       |u AS (SELECT c.lt, c.censored, l.cause
+       |  FROM ${churnLifetimesSql(1)} c JOIN last l ON c.user_id = l.user_id),
        |t AS (SELECT lt, count(*) AS n_at,
        |    CAST(sum(1 - censored) AS BIGINT) AS d
        |  FROM u GROUP BY lt),
@@ -1500,18 +1475,11 @@ object StatsQueries {
        |FROM dk JOIN sl ON dk.lt = sl.lt
        |GROUP BY dk.cause ORDER BY dk.cause""".stripMargin) { (s, d) =>
     val e = ev(s, d)
-    val mx = e.agg(max(col("xs")).as("mxs"))
     val last = e.groupBy(col("user_id"))
       .agg(max_by(col("event_type"), struct(col("ts_us"), col("event_id"))).as("cause"))
-    val u = e.groupBy(col("user_id"))
-      .agg(Binning.floorDiv(max(col("xs")) - min(col("xs")), 86400L).as("lt"),
-        max(col("xs")).as("last_xs"))
-      .join(broadcast(mx))
+    val u = churnLifetimes(e, 1L)
       .join(last, "user_id")
-      .select(col("lt"),
-        when(col("last_xs") >= col("mxs") - lit(86400L), 1L).otherwise(0L)
-          .as("censored"),
-        col("cause"))
+      .select(col("lt"), col("censored"), col("cause"))
       .persist() // feeds the all-cause grid AND the per-cause deaths
     val t = u.groupBy(col("lt"))
       .agg(count(lit(1)).as("n_at"),
@@ -1604,7 +1572,6 @@ object StatsQueries {
       Exact.sumUnits(when(col("x") === 0 && col("out") === 0, 1L).otherwise(0L))
         .cast("long").as("d"))
     val n = col("a") + col("b") + col("c") + col("d")
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val m = t.filter(n > 0).select(col("st"), col("a"), col("b"), col("c"), col("d"),
       Binning.floorDivCol((col("a") + col("b")) * (col("a") + col("c")) * lit(1000000L), n)
         .as("e_micro"),
@@ -1671,7 +1638,6 @@ object StatsQueries {
        |FROM a ORDER BY event_type""".stripMargin) { (s, d) =>
     val u = ev(s, d).groupBy(col("event_type"), col("user_id"))
       .agg(count(lit(1)).cast("long").as("n"))
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val a = u.groupBy(col("event_type")).agg(
       count(lit(1)).cast("long").as("uu"),
       sum(col("n")).cast("long").as("s"),
@@ -1794,15 +1760,12 @@ object StatsQueries {
   val qTurnbull = GateQuery.sql(
     "q_turnbull", {
       val inf = Long.MaxValue
-      s"""WITH RECURSIVE ev0 AS (SELECT user_id, (epoch_us(ts) // 1000000) - 1704067200 AS xs FROM events),
-         |mx AS (SELECT max(xs) AS mxs FROM ev0),
-         |u AS (SELECT user_id, (max(xs) - min(xs)) // 86400 AS lt, max(xs) AS last_xs
-         |  FROM ev0 GROUP BY 1),
+      s"""WITH RECURSIVE u AS ${churnLifetimesSql(1)},
          |cells AS MATERIALIZED (
          |  SELECT l, r, CAST(count(*) AS BIGINT) AS n FROM (
-         |    SELECT CASE WHEN last_xs >= mxs - 86400 THEN lt ELSE (lt // 7) * 7 END AS l,
-         |      CASE WHEN last_xs >= mxs - 86400 THEN $inf ELSE (lt // 7) * 7 + 7 END AS r
-         |    FROM u, mx) o GROUP BY 1, 2),
+         |    SELECT CASE WHEN censored = 1 THEN lt ELSE (lt // 7) * 7 END AS l,
+         |      CASE WHEN censored = 1 THEN $inf ELSE (lt // 7) * 7 + 7 END AS r
+         |    FROM u) o GROUP BY 1, 2),
          |lefts AS MATERIALIZED (SELECT DISTINCT l AS q FROM cells),
          |rights AS MATERIALIZED (SELECT DISTINCT r FROM cells),
          |alle AS MATERIALIZED (SELECT q AS e FROM lefts UNION SELECT r FROM rights),
@@ -1851,16 +1814,7 @@ object StatsQueries {
          |ORDER BY q_day, p_day""".stripMargin
     }) { (s, d) =>
     import graft.operators.Turnbull
-    val e = ev(s, d)
-    val mx = e.agg(max(col("xs")).as("mxs"))
-    val u = e.groupBy(col("user_id"))
-      .agg(Binning.floorDiv(max(col("xs")) - min(col("xs")), 86400L).as("lt"),
-        max(col("xs")).as("last_xs"))
-      .join(broadcast(mx))
-      .select(col("lt"),
-        when(col("last_xs") >= col("mxs") - lit(86400L), 1L).otherwise(0L)
-          .as("censored"))
-    val cells = u
+    val cells = churnLifetimes(ev(s, d), 1L)
       .select(
         when(col("censored") === 1, col("lt"))
           .otherwise(Binning.floorDiv(col("lt"), 7L) * 7).as("l"),
@@ -2326,7 +2280,6 @@ object StatsQueries {
     val u = ev(s, d).groupBy(col("user_id"))
       .agg(count(when(col("event_type") === CorrTypes.head, 1)).as(s"c_${CorrTypes.head}"),
         CorrTypes.tail.map(t => count(when(col("event_type") === t, 1)).as(s"c_$t")): _*)
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val statCols: Seq[Column] =
       CorrTypes.flatMap(t => Seq(
         sum(dec(col(s"c_$t"))).cast("decimal(38,0)").as(s"s_$t"),
@@ -2481,7 +2434,6 @@ object StatsQueries {
       count(when(col("event_type") === "click", 1)).as("cx"),
       count(when(col("event_type") === "purchase", 1)).as("cy"),
       count(when(col("event_type") === "view", 1)).as("cz"))
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val a = u.agg(count(lit(1)).cast("decimal(38,0)").as("n"),
       sum(dec(col("cx"))).cast("decimal(38,0)").as("sx"),
       sum(dec(col("cy"))).cast("decimal(38,0)").as("sy"),
@@ -2785,7 +2737,6 @@ object StatsQueries {
          |    ${fd("(sum_y * sxxy - sxy * sxy) * 1000000",
                "CAST(sum_y AS HUGEINT) * sum_y")} END AS var_micro
          |FROM m ORDER BY user_id, peak_grid""".stripMargin) { (s, d) =>
-      def dec(x: Column) = x.cast("decimal(38,0)")
       val m = peakWindows(s, d)
         .groupBy(col("user_id"), col("peak_grid"))
         .agg(count(lit(1)).cast("long").as("n_pts"),
@@ -4115,14 +4066,9 @@ object StatsQueries {
     */
   val qCindex = GateQuery.sql(
     "q_cindex",
-    s"""WITH f AS (SELECT user_id, min(xs) AS fx, max(xs) AS lx,
-       |    min(CASE WHEN event_type = 'purchase' AND ${centsSql("vd")} >= 9000
-       |      THEN xs END) AS px,
-       |    sum(CASE WHEN event_type IN ('click', 'view') THEN 1 ELSE 0 END) AS act
-       |  FROM $E e GROUP BY user_id),
-       |u AS (SELECT (coalesce(px, lx) - fx) // 86400 AS lt,
-       |    CASE WHEN px IS NULL THEN 0 ELSE 1 END AS ev, act
-       |  FROM f),
+    s"""WITH u AS (SELECT lt, 1 - censored AS ev, act
+       |  FROM ${purchaseLifetimesSql(
+            "sum(CASE WHEN event_type IN ('click', 'view') THEN 1 ELSE 0 END) AS act")} f),
        |cells AS (SELECT lt, ev, act, CAST(count(*) AS BIGINT) AS n
        |  FROM u GROUP BY 1, 2, 3),
        |pairs AS (SELECT
@@ -4139,14 +4085,9 @@ object StatsQueries {
        |    CAST((2 * n_conc + n_tied) * 1000000 // (2 * n_pairs) AS BIGINT)
        |  END AS c_ppm
        |FROM pairs""".stripMargin) { (s, d) =>
-    val f = ev(s, d).groupBy(col("user_id"))
-      .agg(min(col("xs")).as("fx"), max(col("xs")).as("lx"),
-        min(when(col("event_type") === "purchase" &&
-          Exact.cents(col("vd")) >= 9000L, col("xs"))).as("px"),
+    val u = purchaseLifetimes(ev(s, d),
         sum(when(col("event_type").isin("click", "view"), 1).otherwise(0)).as("act"))
-    val u = f.select(
-      Binning.floorDivCol(coalesce(col("px"), col("lx")) - col("fx"), lit(86400L)).as("lt"),
-      when(col("px").isNull, 0).otherwise(1).as("ev"), col("act"))
+      .select(col("lt"), (lit(1L) - col("censored")).as("ev"), col("act"))
     val cells = u.groupBy(col("lt"), col("ev"), col("act"))
       .agg(count(lit(1)).cast("long").as("n"))
     val a = cells.select(col("lt").as("lta"), col("ev").as("eva"),
@@ -4507,7 +4448,6 @@ object StatsQueries {
          |  CAST(${fd("o.num", "o.n_used")} AS BIGINT) AS ate_aipw_micro
          |FROM tot, o, rr""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      def dec(x: Column) = x.cast("decimal(38,0)")
       val u = ev(s, d).groupBy(col("user_id"))
         .agg(count(lit(1)).cast("long").as("x"),
           max(when(col("event_type") === "purchase", 1).otherwise(0)).as("y"))
@@ -4673,7 +4613,6 @@ object StatsQueries {
       count(when(col("ex") === 1 && col("conv") === 0, 1)).cast("long").as("b"),
       count(when(col("ex") === 0 && col("conv") === 1, 1)).cast("long").as("c"),
       count(when(col("ex") === 0 && col("conv") === 0, 1)).cast("long").as("d"))
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val t = c.withColumn("n", col("a") + col("b") + col("c") + col("d"))
       .filter(col("n") > 1)
     val st = t.agg(count(lit(1)).cast("long").as("k"),
@@ -4711,11 +4650,7 @@ object StatsQueries {
     */
   val qNelsonAalen = GateQuery.sql(
     "q_nelson_aalen",
-    s"""WITH u AS (SELECT user_id,
-       |    (max(xs) - min(xs)) // 86400 AS lt,
-       |    CASE WHEN max(xs) >= (SELECT max(xs) FROM $E e2) - 7 * 86400
-       |      THEN 1 ELSE 0 END AS censored
-       |  FROM $E e GROUP BY user_id),
+    s"""WITH u AS ${churnLifetimesSql(7)},
        |t AS (SELECT lt, count(*) AS n_at,
        |    CAST(sum(1 - censored) AS BIGINT) AS d,
        |    CAST(sum(censored) AS BIGINT) AS cens
@@ -4730,15 +4665,7 @@ object StatsQueries {
        |      // (CAST(n_risk AS HUGEINT) * n_risk * n_risk))
        |    OVER (ORDER BY lt ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_var_pico
        |FROM r ORDER BY t_days""".stripMargin) { (s, d) =>
-    val e = ev(s, d)
-    val mx = e.agg(max(col("xs")).as("mxs"))
-    val u = e.groupBy(col("user_id"))
-      .agg(Binning.floorDiv(max(col("xs")) - min(col("xs")), 86400L).as("lt"),
-        max(col("xs")).as("last_xs"))
-      .join(broadcast(mx))
-      .select(col("lt"),
-        when(col("last_xs") >= col("mxs") - lit(7L * 86400L), 1L).otherwise(0L)
-          .as("censored"))
+    val u = churnLifetimes(ev(s, d), 7L)
     val t = u.groupBy(col("lt"))
       .agg(count(lit(1)).as("n_at"),
         Exact.sumUnits(lit(1L) - col("censored")).cast("long").as("d"),
@@ -4747,7 +4674,6 @@ object StatsQueries {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAsc = Window.orderBy(col("lt"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val r = t.withColumn("n_risk", sum(col("n_at")).over(wDesc).cast("long"))
     r.select(col("lt").as("t_days"), col("n_risk"), col("d").as("n_deaths"),
         col("cens").as("n_censored"),
@@ -5180,7 +5106,6 @@ object StatsQueries {
       lag(col("y"), 1).over(Window.partitionBy(col("event_type")).orderBy(col("grid"))))
     val dd = l.filter(col("y1").isNotNull)
       .select(col("event_type"), col("y1").as("x"), (col("y") - col("y1")).as("z"))
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val a = dd.groupBy(col("event_type")).agg(
       count(lit(1)).cast("long").as("n"),
       sum(col("x")).cast("decimal(38,0)").as("sx"),
@@ -5262,7 +5187,6 @@ object StatsQueries {
     val l = g.withColumn("a", lag(col("y"), 1).over(wo))
       .withColumn("b", lag(col("x"), 1).over(wo))
     val dd = l.filter(col("a").isNotNull).select(col("y"), col("a"), col("b"))
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val sAgg = dd.agg(count(lit(1)).cast("long").as("n"),
       sum(col("y")).cast("decimal(38,0)").as("sy"),
       sum(col("a")).cast("decimal(38,0)").as("sa"),
@@ -5430,7 +5354,6 @@ object StatsQueries {
     val m = g.groupBy(col("event_type")).agg(
       Binning.floorDivCol(min(col("grid")) + max(col("grid")), lit(2L)).as("mid"))
     val j = g.join(broadcast(m), "event_type")
-    def dec(x: Column) = x.cast("decimal(38,0)")
     def sums(p: String, f: Column) = Seq(
       count(when(f, 1)).cast("long").as(s"n$p"),
       sum(when(f, col("grid"))).cast("decimal(38,0)").as(s"sx$p"),
@@ -5514,7 +5437,6 @@ object StatsQueries {
     val tt = ct.agg(sum(col("ng")).cast("long").as("n"),
       sum(col("ag")).cast("long").as("a"))
     val j = Curation.withStats(ct, tt)
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val dg = dec(col("ag")) * col("n") - dec(col("ng")) * col("a")
     val term = Exact.floorDivBig(dg * dg * lit(1000000L) * col("n"),
       dec(col("ng")) * col("a") * (col("n") - col("a")))
@@ -5668,16 +5590,7 @@ object StatsQueries {
       val M = "1000000"
       def sfloor(x: String, y: String) =
         s"((($x) - (((($x) % ($y)) + ($y)) % ($y))) // ($y))"
-      s"""WITH f AS (SELECT user_id, min(xs) AS fx, max(xs) AS lx,
-         |    min(CASE WHEN event_type = 'purchase' AND ${centsSql("vd")} >= 9000
-         |      THEN xs END) AS px,
-         |    sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS nclick,
-         |    sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS nview
-         |  FROM $E e GROUP BY user_id),
-         |u AS (SELECT user_id, (coalesce(px, lx) - fx) // 86400 AS lt,
-         |    CASE WHEN px IS NULL THEN 1 ELSE 0 END AS censored,
-         |    CASE WHEN nclick > nview THEN 1 ELSE 0 END AS x
-         |  FROM f),
+      s"""WITH u AS $ClickHeavySql,
          |t AS (SELECT lt, CAST(sum(1 - censored) AS BIGINT) AS d,
          |    CAST(sum((1 - censored) * x) AS BIGINT) AS dx,
          |    CAST(count(*) AS BIGINT) AS n_at, CAST(sum(x) AS BIGINT) AS n_at1
@@ -5717,20 +5630,10 @@ object StatsQueries {
          |FROM s1, nn""".stripMargin
     }) { (s, d) =>
     val M = 1000000L
-    val e = ev(s, d)
     // lifetime, censor flag and covariate from ONE user-keyed
     // aggregate (min ignores nulls, so px is the first big purchase
     // or null = censored)
-    val u = e.groupBy(col("user_id"))
-      .agg(min(col("xs")).as("fx"), max(col("xs")).as("lx"),
-        min(when(col("event_type") === "purchase" &&
-          Exact.cents(col("vd")) >= 9000L, col("xs"))).as("px"),
-        sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("nclick"),
-        sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("nview"))
-      .select(
-        Binning.floorDiv(coalesce(col("px"), col("lx")) - col("fx"), 86400L).as("lt"),
-        when(col("px").isNull, 1L).otherwise(0L).as("censored"),
-        when(col("nclick") > col("nview"), 1L).otherwise(0L).as("x"))
+    val u = clickHeavyLifetimes(ev(s, d))
     val t = u.groupBy(col("lt"))
       .agg(Exact.sumUnits(lit(1L) - col("censored")).cast("long").as("d"),
         Exact.sumUnits((lit(1L) - col("censored")) * col("x")).cast("long").as("dx"),
@@ -5743,7 +5646,6 @@ object StatsQueries {
       .withColumn("n1", sum(col("n_at1")).over(wDesc).cast("long"))
       .filter(col("d") > 0)
       .persist() // read by both Newton steps; freed by the harness
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val s0 = r.agg(
       sum(col("dx") * lit(M) -
         Binning.floorDivCol(col("d") * col("n1") * lit(M), col("nr"))).cast("long").as("u0"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{Binning, Dedup, Exact, MultimodalOps, Packing, Relational, Sampling, TextOps}
-import graft.operators.Exact.roundedRatioSql
+import graft.operators.Exact.{dec, roundedRatioSql}
 import graft.operators.TextOps.{baseHashSql, markerCountSql}
 
 /** Text / dedup gate queries (SURVEY.md §2 #21–#24, #28–#31) over the
@@ -185,7 +185,6 @@ object TextQueries {
       count(lit(1)).cast("long").as("k"))
     val dd = p.agg(count(lit(1)).cast("long").as("nd"),
       sum(when(col("r1") =!= col("r2"), 1L).otherwise(0L)).cast("long").as("ndis"))
-    def dec(c: Column) = c.cast("decimal(38,0)")
     graft.operators.Curation.withStats(dd, st)
       .select(col("nd").as("n_units"), col("k").as("n_categories"),
         col("ndis").as("n_disagree"),
@@ -365,7 +364,6 @@ object TextQueries {
     val sdf = t.groupBy(col("source"))
       .agg(sum(col(s"f_${letters.head}")).cast("long").as(s"f_${letters.head}"),
         letters.tail.map(c => sum(col(s"f_$c")).cast("long").as(s"f_$c")): _*)
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val n = letters.map(c => col(s"f_$c")).reduce(_ + _)
     val ff1 = letters.map(c => dec(col(s"f_$c")) * (col(s"f_$c") - 1)).reduce(_ + _)
     val a = sdf.select(col("source"), n.as("n"), ff1.as("ff1"))
@@ -425,7 +423,6 @@ object TextQueries {
     val a = v.agg(count(lit(1)).cast("long").as("n"), sum(col("r")).cast("long").as("s"),
       sum(col("r") * col("r") + (lit(3L) - col("r")) * (lit(3L) - col("r")) - 3L)
         .cast("long").as("aa"))
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val pe2 = dec(col("s")) * col("s") +
       dec(lit(3L) * col("n") - col("s")) * (lit(3L) * col("n") - col("s"))
     val f = a.select(col("n"), col("s"), col("aa"),
@@ -1879,7 +1876,6 @@ object TextQueries {
       .withColumn("tp", sum(col("p")).over(Window.orderBy(col("s").desc)).cast("long"))
       .withColumn("pos", sum(col("p")).over(Window.partitionBy()).cast("long"))
       .withColumn("neg", sum(col("c") - col("p")).over(Window.partitionBy()).cast("long"))
-    def dec(x: Column) = x.cast("decimal(38,0)")
     val g = w.filter(col("pos") > 0 && col("neg") > 0)
       .select(col("s"), col("tp"), (col("cum_n") - col("tp")).as("fp"),
         col("pos"), col("neg"),
@@ -1952,7 +1948,6 @@ object TextQueries {
       .withColumn("x", sum(col("p")).over(Window.partitionBy()).cast("long"))
     val nr = col("n") - col("nl")
     val xr = col("x") - col("xl")
-    def dec(c0: Column) = c0.cast("decimal(38,0)")
     val g = w.filter(col("nl") < col("n"))
       .select(col("s"), col("nl"), col("xl"), nr.as("nr"), xr.as("xr"),
         col("n"), col("x"),

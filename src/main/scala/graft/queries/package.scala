@@ -1,8 +1,26 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 package object queries {
+
+  /** The exact events view every events gate reads (SURVEY §4):
+    * `user_id` ≈ scan, the µs clock `ts_us`, the `xs` seconds clock
+    * ([[graft.Tables.xs]]) and `value` as `vd DECIMAL(18,2)`. [[E]] is
+    * the DuckDB side, [[ev]] the Spark side; they agree bit for bit. */
+  private[queries] val E: String =
+    s"""(SELECT event_id, user_id, epoch_us(ts) AS ts_us,
+       |   ${graft.Tables.xsSql} AS xs,
+       |   CAST(value AS DECIMAL(18,2)) AS vd, event_type
+       | FROM events)""".stripMargin
+
+  /** Spark side of [[E]]. */
+  private[queries] def ev(s: SparkSession, d: String): DataFrame =
+    graft.Tables.events(s, d).select(
+      col("event_id"), col("user_id"), col("ts_us"), graft.Tables.xs.as("xs"),
+      col("value").cast("decimal(18,2)").as("vd"),
+      col("event_type"))
 
   /** Deterministic total order for a SMALL (gate-sized) result without
     * `orderBy`'s range-partitioner overhead: a global sort first runs a

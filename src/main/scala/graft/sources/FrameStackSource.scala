@@ -137,7 +137,6 @@ abstract class StackFormat extends Serializable {
 }
 
 object FrameStack {
-  val DefaultMaxPartitionBytes: Long = 128L * 1024 * 1024
   /** Files-per-read above which header walks run as a Spark job (one
     * task per file) instead of inline on the driver. */
   val ParallelHeaderThreshold = 16
@@ -157,22 +156,29 @@ object FrameStack {
         .map(m => f(m, sconf.value)).collect().toSeq
     }
 
-  /** Partitions over the inclusive frame runs of one stack, each run
-    * cut into contiguous pieces of at most `maxBytes` data bytes (at
-    * least one frame each), so a million-frame ROI file doesn't
-    * explode into a million tasks while full-chip frames still get
-    * one or few frames per task.
+  /** The partitions of a read over `(path, stack, inclusive frame
+    * runs, n_frames)` per file: each run cut into contiguous pieces of
+    * at most `maxBytes` data bytes (at least one frame each), so a
+    * million-frame ROI file doesn't explode into a million tasks while
+    * full-chip frames still get one or few frames per task. Without
+    * `maxBytes` the cap is Spark's split size for the read's wanted
+    * bytes ([[FileSplits.maxSplitBytes]]), the rule of the SPEC source.
     */
-  def split(path: String, stack: FrameStack, runs: Seq[(Int, Int)], nFrames: Long,
-            maxBytes: Long): Seq[FramePartition] = runs.flatMap { case (first, last) =>
-    FileSplits.runs(Array.tabulate(last - first + 1)(i => stack.frameBytes(first + i)), maxBytes)
-      .map { case (a, b) => FramePartition(path, first + a, nFrames, stack.slice(first + a, first + b)) }
+  def plan(files: Seq[(String, FrameStack, Seq[(Int, Int)], Long)],
+           maxBytes: Option[Long]): Array[InputPartition] = {
+    val runs = for ((path, stack, rs, nFrames) <- files; (first, last) <- rs)
+      yield (path, stack, nFrames, first, Array.tabulate(last - first + 1)(i => stack.frameBytes(first + i)))
+    val cap = maxBytes.getOrElse(
+      FileSplits.maxSplitBytes(SparkSession.active, runs.iterator.map(_._5.sum).sum))
+    (for ((path, stack, nFrames, first, sizes) <- runs; (a, b) <- FileSplits.runs(sizes, cap))
+      yield FramePartition(path, first + a, nFrames, stack.slice(first + a, first + b))).toArray
   }
 }
 
 /** Base provider of the SPE, EDF and TIFF sources. Options: `path` or
-  * `paths`, and `maxPartitionBytes` (default 128 MiB); a format reads
-  * its own extra options in [[format]].
+  * `paths`, and `maxPartitionBytes` (default: Spark's split size for
+  * the read, see [[FrameStack.plan]]); a format reads its own extra
+  * options in [[format]].
   */
 abstract class FrameStackSource extends TableProvider with DataSourceRegister {
   protected def format(options: util.Map[String, String]): StackFormat
@@ -185,13 +191,12 @@ abstract class FrameStackSource extends TableProvider with DataSourceRegister {
       .orElse(Option(properties.get("path")).map(Seq(_)))
       .getOrElse(throw new IllegalArgumentException(s"${shortName()} reader needs a path"))
     new FrameStackTable(shortName(), format(properties), paths,
-      Option(properties.get("maxPartitionBytes")).map(_.toLong)
-        .getOrElse(FrameStack.DefaultMaxPartitionBytes))
+      Option(properties.get("maxPartitionBytes")).map(_.toLong))
   }
 }
 
 class FrameStackTable(source: String, format: StackFormat, paths: Seq[String],
-                      maxPartBytes: Long) extends Table with SupportsRead {
+                      maxPartBytes: Option[Long]) extends Table with SupportsRead {
   override def name(): String = s"$source(${paths.mkString(",")})"
   override def schema(): StructType = format.schema
   override def capabilities(): util.Set[TableCapability] =
@@ -206,7 +211,7 @@ class FrameStackTable(source: String, format: StackFormat, paths: Seq[String],
   * `pixels` never opens a data file; ungrouped COUNT(*) / MIN / MAX
   * (frame) are answered from the header pass alone.
   */
-class FrameScanBuilder(format: StackFormat, paths: Seq[String], maxPartBytes: Long)
+class FrameScanBuilder(format: StackFormat, paths: Seq[String], maxPartBytes: Option[Long])
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates {
@@ -297,9 +302,9 @@ class FrameScanBuilder(format: StackFormat, paths: Seq[String], maxPartBytes: Lo
       override def readSchema(): StructType = required
       override def toBatch: Batch = this
       override def planInputPartitions(): Array[InputPartition] =
-        planned().flatMap { case (path, stack, runs) =>
-          FrameStack.split(path, stack, runs, stack.nFrames(stack.size), maxPartBytes)
-        }.toArray
+        FrameStack.plan(planned().map { case (path, stack, runs) =>
+          (path, stack, runs, stack.nFrames(stack.size))
+        }, maxPartBytes)
       override def createReaderFactory(): PartitionReaderFactory =
         new FrameReaderFactory(new SerializableHadoopConf(
           SparkSession.active.sessionState.newHadoopConf()), required.fieldNames)
@@ -326,7 +331,8 @@ class FrameScanBuilder(format: StackFormat, paths: Seq[String], maxPartBytes: Lo
   * directory, not an ever-growing archive.
   */
 class FrameMicroBatchStream(format: StackFormat, paths: Seq[String], conf: SerializableHadoopConf,
-                            columns: Array[String], maxPartBytes: Long) extends MicroBatchStream {
+                            columns: Array[String], maxPartBytes: Option[Long])
+    extends MicroBatchStream {
   // path -> (frames at the last walk, file length then)
   private val cache = mutable.Map[String, (FrameStack, Long)]()
 
@@ -350,7 +356,7 @@ class FrameMicroBatchStream(format: StackFormat, paths: Seq[String], conf: Seria
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[SpecStreamOffset].files
     val e = end.asInstanceOf[SpecStreamOffset].files
-    e.toSeq.sortBy(_._1).flatMap { case (path, to) =>
+    FrameStack.plan(e.toSeq.sortBy(_._1).flatMap { case (path, to) =>
       val from = s.getOrElse(path, 0L)
       // normally latestOffset just refreshed; after a checkpoint
       // restart the cache is cold and the walk reruns here
@@ -362,9 +368,9 @@ class FrameMicroBatchStream(format: StackFormat, paths: Seq[String], conf: Seria
       // `n_frames` comes from the batch's END offset, not the cache's
       // current count, so a checkpoint-recovered batch reports the
       // same value it first did
-      if (last < from) Nil
-      else FrameStack.split(path, stack, Seq((from.toInt, last.toInt)), stack.nFrames(to), maxPartBytes)
-    }.toArray
+      if (last < from) None
+      else Some((path, stack, Seq((from.toInt, last.toInt)), stack.nFrames(to)))
+    }, maxPartBytes)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new FrameReaderFactory(conf, columns)

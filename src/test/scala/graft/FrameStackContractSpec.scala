@@ -46,7 +46,7 @@ class FrameStackContractSpec extends SparkSpec {
   for (src <- sources) {
     test(s"${src.name}: untranslatable frame filters stay residual") {
       import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, In}
-      val b = new FrameScanBuilder(src.format, Seq(s"/nonexistent.${src.name}"), 1L << 20)
+      val b = new FrameScanBuilder(src.format, Seq(s"/nonexistent.${src.name}"), Some(1L << 20))
       // a null inside In(...) and a non-numeric EqualTo must be LEFT
       // for Spark to evaluate post-scan — and must not be "accepted"
       val bad: Array[Filter] = Array(
@@ -115,14 +115,21 @@ class FrameStackContractSpec extends SparkSpec {
     test(s"${src.name}: maxPartitionBytes splits stacks into contiguous runs") {
       val (w, h) = (4, 4) // 32 B per uint16 frame
       val p = stack(src, "split", 10, w, h)
-      val df = spark.read.format(src.name).option("maxPartitionBytes", (3 * w * h * 2).toString).load(p)
-      assert(df.rdd.getNumPartitions === 4) // 3 + 3 + 3 + 1 frames
-      val picked = df.filter(col("frame").isin(0, 1, 2, 3, 5, 6, 9))
-      assert(picked.rdd.getNumPartitions === 4) // runs 0-3, 5-6 and 9; 0-3 splits 3 + 1
-      val rows = picked.select("frame", "pixels").collect().sortBy(_.getLong(0))
-      val expect = frames(10, w, h)
-      assert(rows.map(_.getLong(0)).toSeq === Seq(0L, 1L, 2L, 3L, 5L, 6L, 9L))
-      rows.foreach(r => assert(r.getSeq[Double](1) === expect(r.getLong(0).toInt).toSeq))
+      val cap = (3 * w * h * 2).toString
+      def check(df: => org.apache.spark.sql.DataFrame): Unit = {
+        assert(df.rdd.getNumPartitions === 4) // 3 + 3 + 3 + 1 frames
+        val picked = df.filter(col("frame").isin(0, 1, 2, 3, 5, 6, 9))
+        assert(picked.rdd.getNumPartitions === 4) // runs 0-3, 5-6 and 9; 0-3 splits 3 + 1
+        val rows = picked.select("frame", "pixels").collect().sortBy(_.getLong(0))
+        val expect = frames(10, w, h)
+        assert(rows.map(_.getLong(0)).toSeq === Seq(0L, 1L, 2L, 3L, 5L, 6L, 9L))
+        rows.foreach(r => assert(r.getSeq[Double](1) === expect(r.getLong(0).toInt).toSeq))
+      }
+      check(spark.read.format(src.name).option("maxPartitionBytes", cap).load(p))
+      // no option: the session's split size, Spark's file-source rule
+      withConf("spark.sql.files.maxPartitionBytes" -> cap)(check(spark.read.format(src.name).load(p)))
+      // the default split size is never below the 4 MB open cost: one task
+      assert(spark.read.format(src.name).load(p).rdd.getNumPartitions === 1)
     }
 
     test(s"${src.name}: a projection without pixels opens no data file") {

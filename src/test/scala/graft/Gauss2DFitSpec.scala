@@ -84,7 +84,9 @@ class Gauss2DFitSpec extends SparkSpec {
       bg = 5.0, h = 100.0, w = 40, hgt = 32)
     val holes = Map(300 -> None, 650 -> Some(Double.NaN))
     val px = vs.indices.map(i => holes.getOrElse(i, Some(vs(i))))
-    val rows = Seq((0L, 40, px), (1L, 40, px)).toDF("frame", "width", "pixels")
+    // frames keyed null, or by a key that does not cast to long, are skipped
+    val rows = Seq(("0", 40, px), ("1", 40, px), (null, 40, px), ("no-key", 40, px))
+      .toDF("frame", "width", "pixels")
     val out = Gauss2DFit.fitFrames(rows, col("frame"), col("width"), col("pixels"))
       .as[Gauss2DFit.Fit2].collect().sortBy(_.g)
     val keep = vs.indices.filterNot(holes.contains)

@@ -88,10 +88,12 @@ class GaussFitSpec extends SparkSpec {
   test("null and NaN y are skipped; a non-finite rss is never converged") {
     val xs = (-50 to 50).map(_ * 0.1)
     val clean = xs.map(gauss(1.0, 5.0, 0.3, 1.2))
-    def withHole(k: Int, hole: Option[Double]) = xs.indices.map { i =>
-      (k.toLong, xs(i), if (i == 40) hole else Some(clean(i)))
+    def withHole(k: String, hole: Option[Double]) = xs.indices.map { i =>
+      (k, xs(i), if (i == 40) hole else Some(clean(i)))
     }
-    val df = (withHole(1, None) ++ withHole(2, Some(Double.NaN))).toDF("g", "x", "y")
+    // rows keyed null, or by a key that does not cast to long, are skipped
+    val df = (withHole("1", None) ++ withHole("2", Some(Double.NaN)) ++
+      withHole(null, None) ++ withHole("no-key", None)).toDF("g", "x", "y")
     val out = GaussFit.fitGroups(df, "g", "x", "y").as[GaussFit.Fit].collect().sortBy(_.g)
     val keep = xs.indices.filter(_ != 40)
     val ref = GaussFit.fitArrays(0L, keep.map(xs).toArray, keep.map(clean).toArray)

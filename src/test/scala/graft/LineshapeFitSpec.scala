@@ -160,10 +160,12 @@ class LineshapeFitSpec extends SparkSpec {
     val (bg, h, c, g) = (1.0, 6.0, 2.5, 0.8)
     val xs = (-120 to 120).map(i => c + i * 0.05)
     val clean = xs.map(x => bg + h / (1 + math.pow((x - c) / g, 2)))
-    def withHole(k: Int, hole: Option[Double]) = xs.indices.map { i =>
-      (k.toLong, xs(i), if (i == 100) hole else Some(clean(i)))
+    def withHole(k: String, hole: Option[Double]) = xs.indices.map { i =>
+      (k, xs(i), if (i == 100) hole else Some(clean(i)))
     }
-    val df = (withHole(1, None) ++ withHole(2, Some(Double.NaN))).toDF("g", "x", "y")
+    // rows keyed null, or by a key that does not cast to long, are skipped
+    val df = (withHole("1", None) ++ withHole("2", Some(Double.NaN)) ++
+      withHole(null, None) ++ withHole("no-key", None)).toDF("g", "x", "y")
     val out = LineshapeFit.fitGroups(df, Lorentzian, "g", "x", "y").as[LineshapeFit.ShapeFit]
       .collect().sortBy(_.g)
     val keep = xs.indices.filter(_ != 100)

@@ -11,6 +11,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = () // keep the shared session alive
 
+  /** `body` with session confs set, restored afterwards. */
+  protected def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   /** Synthetic events table dir: (event_id, user_id, event_type,
     * value), ts = epoch + event_id seconds (so (ts_us, event_id)
     * order == event_id order), props "{}". Gates read

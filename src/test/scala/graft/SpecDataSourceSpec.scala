@@ -59,14 +59,6 @@ class SpecDataSourceSpec extends SparkSpec {
     }
   }
 
-  /** `body` with session confs set, restored afterwards. */
-  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
-    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
   /** A spec file whose blocks are `(scan number, points)`; each point's
     * `det` encodes the file tag, block position and point index. */
   private def specFile(dir: java.io.File, name: String, tag: Int, scans: Seq[(Int, Int)]): String = {
