@@ -212,7 +212,8 @@ case class BoilerplateStatsExpr(child: Expression, k: Int,
       }
       i += 1
     }
-    val md = java.security.MessageDigest.getInstance("MD5")
+    val md = TextExpressions.md5()
+    md.reset()
     val dig = md.digest(kept.toString.getBytes("UTF-8"))
     val hex = new Array[Char](32)
     var b = 0

@@ -44,7 +44,7 @@ case class BootWeightsExpr(child: Expression, nDigests: Int, thresholdsPpm: Arra
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   protected override def nullSafeEval(input: Any): Any = {
-    val md = java.security.MessageDigest.getInstance("MD5")
+    val md = TextExpressions.md5()
     val idStr = String.valueOf(input)
     val out = new Array[Long](nDigests * 4)
     var b4 = 0

@@ -1,11 +1,13 @@
 package graft.expressions
 
+import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
+
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -47,23 +49,40 @@ trait KernelCodegen extends UnaryExpression {
   */
 object TextExpressions {
 
+  private val md5Local: ThreadLocal[MessageDigest] =
+    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
+
+  /** This thread's MD5 digest, shared by every per-row kernel so no
+    * row fetches a provider instance. Callers `reset()` it before use. */
+  def md5(): MessageDigest = md5Local.get()
+
   /** md5-prefix base_hash of a token — first 4 digest bytes as an
     * unsigned 32-bit int (== conv(substr(md5(s),1,8),16,10)). */
   @inline private[expressions] def baseHash(md: MessageDigest, token: String): Long = {
     md.reset()
-    val d = md.digest(token.getBytes("UTF-8"))
+    val d = md.digest(token.getBytes(StandardCharsets.UTF_8))
     ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
   }
 
-  /** First 15 hex chars of md5 as a long
-    * (== conv(substr(md5(s),1,15),16,10)). */
-  @inline private[expressions] def shingleKey(md: MessageDigest, s: String): Long = {
+  /** Tokens of a row's text as UTF-8 byte arrays, each encoded once. */
+  private[expressions] def tokenBytes(text: Any): Array[Array[Byte]] =
+    text.asInstanceOf[UTF8String].toString.split(" ", -1).map(_.getBytes(StandardCharsets.UTF_8))
+
+  /** Shingle key of tokens `i until i + k` joined by single spaces: the
+    * first 15 hex chars of its md5 as a long
+    * (== conv(substr(md5(s),1,15),16,10)). The token bytes and 0x20
+    * separators go to the digest piecewise, which hashes exactly the
+    * bytes of the joined string; `buf` (16 bytes) receives the digest. */
+  private[expressions] def shingleKey(md: MessageDigest, toks: Array[Array[Byte]], i: Int, k: Int,
+                                      buf: Array[Byte]): Long = {
     md.reset()
-    val d = md.digest(s.getBytes("UTF-8"))
+    var j = 0
+    while (j < k) { if (j > 0) md.update(0x20.toByte); md.update(toks(i + j)); j += 1 }
+    md.digest(buf, 0, 16)
     var v = 0L
-    var i = 0
-    while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    (v << 4) | ((d(7) & 0xf0L) >> 4)
+    j = 0
+    while (j < 7) { v = (v << 8) | (buf(j) & 0xffL); j += 1 }
+    (v << 4) | ((buf(7) & 0xf0L) >> 4)
   }
 
   def simHash32(text: Column): Column = GraftColumnBridge.column(
@@ -162,7 +181,7 @@ case class SimHash32Expr(child: Expression) extends UnaryExpression with KernelC
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   protected override def nullSafeEval(input: Any): Any = {
-    val md = MessageDigest.getInstance("MD5")
+    val md = TextExpressions.md5()
     val tokens = input.asInstanceOf[UTF8String].toString.split(" ", -1)
     val votes = new Array[Int](32)
     var t = 0
@@ -190,7 +209,7 @@ case class FingerprintExpr(child: Expression) extends UnaryExpression with Kerne
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   protected override def nullSafeEval(input: Any): Any = {
-    val md = MessageDigest.getInstance("MD5")
+    val md = TextExpressions.md5()
     val tokens = input.asInstanceOf[UTF8String].toString.split(" ", -1)
     var h = 0L
     var t = 0
@@ -201,6 +220,38 @@ case class FingerprintExpr(child: Expression) extends UnaryExpression with Kerne
     h
   }
   override protected def withNewChildInternal(newChild: Expression): FingerprintExpr =
+    copy(child = newChild)
+}
+
+/** Elements of a word array that hold an ASCII letter — value-identical
+  * to `size(filter(ws, w => w.rlike("[a-zA-Z]")))`: a null element
+  * never counts, a null array gives null. UTF-8 multi-byte sequences
+  * use only bytes >= 0x80, so a byte scan sees exactly the ASCII
+  * letters. */
+case class AlphaWordCountExpr(child: Expression) extends UnaryExpression with KernelCodegen {
+  override def dataType: DataType = LongType
+  override def nullIntolerant: Boolean = true
+  protected override def nullSafeEval(input: Any): Any = {
+    val ws = input.asInstanceOf[ArrayData]
+    var n = 0L
+    var i = 0
+    while (i < ws.numElements()) {
+      if (!ws.isNullAt(i)) {
+        val w = ws.getUTF8String(i)
+        var letter = false
+        var j = 0
+        while (!letter && j < w.numBytes()) {
+          val lower = w.getByte(j) | 0x20 // folds A-Z onto a-z; bytes >= 0x80 stay negative
+          letter = lower >= 'a' && lower <= 'z'
+          j += 1
+        }
+        if (letter) n += 1
+      }
+      i += 1
+    }
+    n
+  }
+  override protected def withNewChildInternal(newChild: Expression): AlphaWordCountExpr =
     copy(child = newChild)
 }
 
@@ -215,34 +266,29 @@ case class MinHashSigExpr(child: Expression, k: Int, numPerms: Int)
     extends UnaryExpression with KernelCodegen {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
-  @transient private lazy val consts: Array[(Long, Long)] =
-    (0 until numPerms).map(TextOps.permConsts).toArray
+  @transient private lazy val permA: Array[Long] = Array.tabulate(numPerms)(TextOps.permConsts(_)._1)
+  @transient private lazy val permB: Array[Long] = Array.tabulate(numPerms)(TextOps.permConsts(_)._2)
   protected override def nullSafeEval(input: Any): Any = {
-    val md = MessageDigest.getInstance("MD5")
-    val tokens = input.asInstanceOf[UTF8String].toString.split(" ", -1)
-    if (tokens.length < k) return new GenericArrayData(Array.empty[Any])
-    val seen = new mutable.HashSet[Long]
+    val toks = TextExpressions.tokenBytes(input)
+    if (toks.length < k) return new GenericArrayData(Array.empty[Any])
+    val md = TextExpressions.md5()
+    val buf = new Array[Byte](16)
+    val a = permA
+    val b = permB
     val mins = Array.fill(numPerms)(Long.MaxValue)
-    val sb = new java.lang.StringBuilder
+    // a repeated shingle cannot lower a minimum, so no distinct pass
     var i = 0
-    while (i + k <= tokens.length) {
-      sb.setLength(0)
-      var j = 0
-      while (j < k) { if (j > 0) sb.append(' '); sb.append(tokens(i + j)); j += 1 }
-      val key = TextExpressions.shingleKey(md, sb.toString)
-      if (seen.add(key)) {
-        val kr = key % TextOps.PermPrime
-        var p = 0
-        while (p < numPerms) {
-          val (a, b) = consts(p)
-          val h = (a * kr + b) % TextOps.PermPrime
-          if (h < mins(p)) mins(p) = h
-          p += 1
-        }
+    while (i + k <= toks.length) {
+      val kr = TextExpressions.shingleKey(md, toks, i, k, buf) % TextOps.PermPrime
+      var p = 0
+      while (p < numPerms) {
+        val h = (a(p) * kr + b(p)) % TextOps.PermPrime
+        if (h < mins(p)) mins(p) = h
+        p += 1
       }
       i += 1
     }
-    new GenericArrayData(mins.map(v => v: Any))
+    UnsafeArrayData.fromPrimitiveArray(mins)
   }
   override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
     copy(child = newChild)
@@ -290,17 +336,14 @@ case class ShingleKeysExpr(child: Expression, k: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
   protected override def nullSafeEval(input: Any): Any = {
-    val tokens = input.asInstanceOf[UTF8String].toString.split(" ", -1)
-    if (tokens.length < k) return new GenericArrayData(Array.empty[Any])
-    val md = MessageDigest.getInstance("MD5")
+    val toks = TextExpressions.tokenBytes(input)
+    if (toks.length < k) return new GenericArrayData(Array.empty[Any])
+    val md = TextExpressions.md5()
+    val buf = new Array[Byte](16)
     val seen = new mutable.LinkedHashSet[Long]
-    val sb = new java.lang.StringBuilder
     var i = 0
-    while (i + k <= tokens.length) {
-      sb.setLength(0)
-      var j = 0
-      while (j < k) { if (j > 0) sb.append(' '); sb.append(tokens(i + j)); j += 1 }
-      seen += TextExpressions.shingleKey(md, sb.toString)
+    while (i + k <= toks.length) {
+      seen += TextExpressions.shingleKey(md, toks, i, k, buf)
       i += 1
     }
     new GenericArrayData(seen.toArray.map(v => v: Any))
@@ -325,7 +368,7 @@ case class BigramBucketsExpr(child: Expression, buckets: Int)
   protected override def nullSafeEval(input: Any): Any = {
     val tokens = input.asInstanceOf[UTF8String].toString.split(" ", -1)
     if (tokens.length < 2) return new GenericArrayData(Array.empty[Any])
-    val md = MessageDigest.getInstance("MD5")
+    val md = TextExpressions.md5()
     val out = new Array[Any](tokens.length - 1)
     var i = 0
     while (i < tokens.length - 1) {
@@ -349,20 +392,17 @@ case class WindowKeysExpr(child: Expression, l: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
   protected override def nullSafeEval(input: Any): Any = {
-    val tokens = input.asInstanceOf[UTF8String].toString.split(" ", -1)
-    if (tokens.length < l) return new GenericArrayData(Array.empty[Any])
-    val md = MessageDigest.getInstance("MD5")
-    val sb = new java.lang.StringBuilder
-    val out = new Array[Any](tokens.length - l + 1)
+    val toks = TextExpressions.tokenBytes(input)
+    if (toks.length < l) return new GenericArrayData(Array.empty[Any])
+    val md = TextExpressions.md5()
+    val buf = new Array[Byte](16)
+    val out = new Array[Long](toks.length - l + 1)
     var i = 0
-    while (i + l <= tokens.length) {
-      sb.setLength(0)
-      var j = 0
-      while (j < l) { if (j > 0) sb.append(' '); sb.append(tokens(i + j)); j += 1 }
-      out(i) = TextExpressions.shingleKey(md, sb.toString)
+    while (i + l <= toks.length) {
+      out(i) = TextExpressions.shingleKey(md, toks, i, l, buf)
       i += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
   override protected def withNewChildInternal(newChild: Expression): WindowKeysExpr =
     copy(child = newChild)
@@ -462,7 +502,7 @@ case class CharNgramBucketsExpr(child: Expression, n: Int, buckets: Int)
     var off = 0
     while (i < m) { starts(i) = off; off = s.offsetByCodePoints(off, 1); i += 1 }
     starts(m) = s.length
-    val md = MessageDigest.getInstance("MD5")
+    val md = TextExpressions.md5()
     val out = new Array[Any](m - n + 1)
     i = 0
     while (i <= m - n) {

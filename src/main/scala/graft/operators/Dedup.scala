@@ -387,12 +387,14 @@ object Dedup {
     * (near-verbatim benchmark rephrasings).
     *
     * Same candidate discipline as [[minhashPairs]]: docs meet only
-    * through shared LSH band keys — never corpus × eval. The eval
-    * side is tiny by definition, so its band keys AND signatures
-    * broadcast; the corpus side computes signatures per-row (one
-    * pass, no shuffle) and map-side-joins the broadcast bands. The
-    * only shuffle is the (doc, eval) pair dedup over actual band
-    * hits, which is bounded by true near-dup mass, not corpus size.
+    * through shared LSH band keys — never corpus × eval. The corpus
+    * side computes signatures per-row (one pass, no shuffle). The
+    * eval side's band keys and signatures join through
+    * [[Curation.modelJoin]]: broadcast while their size estimate fits
+    * `autoBroadcastJoinThreshold` (the usual case, a held-out set is
+    * small), a shuffle join past it, so a large eval set never has to
+    * fit the driver. The (doc, eval) pair dedup over actual band hits
+    * is bounded by true near-dup mass, not corpus size.
     *
     * @return (doc_id, eval_id, n_match, est_sim) for candidate pairs
     *         agreeing on >= minMatch of numPerms signature components
@@ -417,7 +419,7 @@ object Dedup {
         col("bd.band").as("band"), col("bd.bh").as("bh"))
     // a pair sharing several bands hits once per band: dedup on the
     // pair key; the signatures ride along (functions of the keys)
-    val cand = corpusBands.join(broadcast(evBands), Seq("band", "bh"))
+    val cand = Curation.modelJoin(corpusBands, evBands, Seq("band", "bh"), "inner")
       .groupBy(col("doc_id"), col("eval_id"))
       .agg(first(col("sc")).as("sc"), first(col("se")).as("se"))
     val matches = aggregate(

@@ -1,17 +1,27 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
+
+import graft.expressions.{AlphaWordCountExpr, TextExpressions}
 
 /** Text primitives for the LLM-data-pipeline operators: tokenization,
   * cross-engine deterministic hashing, shingling, SimHash and rolling
   * fingerprints.
   *
-  * Everything here is built from codegen'd Spark expressions (`md5`,
-  * `conv`, `split`, higher-order array functions) — no UDFs — so the
-  * hot paths stay inside whole-stage codegen and the exact same
+  * No UDFs: every helper is a Spark expression, and the exact same
   * integer results are reproducible in any engine (SURVEY.md §4
-  * `base_hash` scheme, verified against DuckDB 1.0).
+  * `base_hash` scheme, verified against DuckDB 1.0). Spark evaluates
+  * the lambda of a higher-order array function (`transform`,
+  * `aggregate`, `filter`) interpreted, once per element, so the
+  * per-row hot helpers are native kernels from
+  * `graft.expressions.TextExpressions`: [[fingerprint]] and
+  * [[alphaWordCount]] (and `TextExpressions.minHashSig` for
+  * signatures). [[shingles]], [[shinglesFast]], [[tokenHashes]],
+  * [[simHashFromHashes]], [[bulletLineCount]], [[ellipsisLineCount]]
+  * and [[markerCount]] stay higher-order functions: some are the
+  * references the native kernels are checked against
+  * (`ExpressionParitySpec`), and the rest cost little per row.
   */
 object TextOps {
 
@@ -129,9 +139,7 @@ object TextOps {
     * Per-row, no shuffle.
     */
   val FpMod = 1000000007L
-  def fingerprint(text: Column): Column =
-    aggregate(transform(tokens(text), t => baseHash(t)), lit(0L),
-      (h, x) => pmod(h * lit(31L) + x, lit(FpMod)))
+  def fingerprint(text: Column): Column = TextExpressions.fingerprint(text)
 
   /** DuckDB SQL mirror of [[fingerprint]] over a text column. DuckDB's
     * `list_reduce` seeds with the first element, so prepend the 0 seed
@@ -196,9 +204,10 @@ object TextOps {
   def ellipsisLineCountSql(ls: String): String =
     s"len(list_filter($ls, l -> l LIKE '%...'))"
 
-  /** Words containing at least one ASCII-alphabetic character. */
+  /** Words containing at least one ASCII-alphabetic character; a null
+    * word never counts. */
   def alphaWordCount(ws: Column): Column =
-    size(filter(ws, w => w.rlike("[a-zA-Z]"))).cast("long")
+    GraftColumnBridge.column(AlphaWordCountExpr(GraftColumnBridge.expression(ws)))
 
   /** DuckDB SQL mirror of [[alphaWordCount]] over a word list. */
   def alphaWordCountSql(ws: String): String =

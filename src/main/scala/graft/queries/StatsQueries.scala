@@ -32,16 +32,18 @@ object StatsQueries {
     * `last_xs` = the last event's `xs`, and `censored` = 1 when that
     * last event lies within `horizonDays` of the corpus's last event
     * (the user may still be active, so `lt` is only a lower bound).
+    * `extra` per-user aggregates ride the same aggregate and follow
+    * `censored` under their own names.
     * [[churnLifetimesSql]] is the DuckDB side. */
-  private def churnLifetimes(e: DataFrame, horizonDays: Long): DataFrame = {
+  private def churnLifetimes(e: DataFrame, horizonDays: Long, extra: Column*): DataFrame = {
     val mx = e.agg(max(col("xs")).as("mxs"))
-    e.groupBy(col("user_id"))
+    val perUser = e.groupBy(col("user_id"))
       .agg(Binning.floorDiv(max(col("xs")) - min(col("xs")), 86400L).as("lt"),
-        max(col("xs")).as("last_xs"))
-      .join(broadcast(mx))
-      .select(col("user_id"), col("lt"), col("last_xs"),
+        max(col("xs")).as("last_xs") +: extra: _*)
+    perUser.join(broadcast(mx))
+      .select(Seq(col("user_id"), col("lt"), col("last_xs"),
         when(col("last_xs") >= col("mxs") - lit(horizonDays * 86400L), 1L).otherwise(0L)
-          .as("censored"))
+          .as("censored")) ++ perUser.columns.drop(3).map(col): _*)
   }
 
   /** DuckDB side of [[churnLifetimes]]. */
@@ -1475,10 +1477,10 @@ object StatsQueries {
        |FROM dk JOIN sl ON dk.lt = sl.lt
        |GROUP BY dk.cause ORDER BY dk.cause""".stripMargin) { (s, d) =>
     val e = ev(s, d)
-    val last = e.groupBy(col("user_id"))
-      .agg(max_by(col("event_type"), struct(col("ts_us"), col("event_id"))).as("cause"))
-    val u = churnLifetimes(e, 1L)
-      .join(last, "user_id")
+    // the oracle joins `last` on user_id, which drops a null user
+    val u = churnLifetimes(e, 1L,
+        max_by(col("event_type"), struct(col("ts_us"), col("event_id"))).as("cause"))
+      .filter(col("user_id").isNotNull)
       .select(col("lt"), col("censored"), col("cause"))
       .persist() // feeds the all-cause grid AND the per-cause deaths
     val t = u.groupBy(col("lt"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.expressions.{TextExpressions, VectorExpressions}
 import graft.operators.{TextOps, VectorOps}
@@ -24,26 +25,107 @@ class ExpressionParitySpec extends SparkSpec {
     assert(diff == 0)
   }
 
+  /** The rolling fingerprint as higher-order functions: the reference
+    * the native `TextOps.fingerprint` kernel must equal. */
+  private def fingerprintHof(text: Column): Column =
+    aggregate(transform(TextOps.tokens(text), t => TextOps.baseHash(t)), lit(0L),
+      (h, x) => pmod(h * lit(31L) + x, lit(TextOps.FpMod)))
+
+  /** Words holding an ASCII letter as a filter lambda: the reference
+    * of the native `TextOps.alphaWordCount` kernel. */
+  private def alphaWordCountHof(ws: Column): Column =
+    size(filter(ws, w => w.rlike("[a-zA-Z]"))).cast("long")
+
+  /** MinHash signatures the long way: explode the portable shingle
+    * keys and take min(TextOps.permHash(i, key)) per doc. Docs with
+    * fewer than k tokens have no row. */
+  private def minHashRef(df: DataFrame, k: Int, n: Int): Map[Long, Seq[Long]] =
+    df.select(col("doc_id"), explode(TextOps.shingles(col("text"), k)).as("h"))
+      .groupBy("doc_id")
+      .agg(array((0 until n).map(i => min(TextOps.permHash(i, col("h")))): _*).as("sig"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+
+  private def minHashFast(df: DataFrame, k: Int, n: Int): Map[Long, Seq[Long]] =
+    df.select(col("doc_id"), TextExpressions.minHashSig(col("text"), k, n))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+
+  /** Rows where `TextOps.fingerprint` or `TextExpressions.fingerprint`
+    * differs from the HOF reference. */
+  private def fingerprintDiffs(rel: DataFrame): Long =
+    rel.select(
+        TextOps.fingerprint(col("text")).as("a"),
+        TextExpressions.fingerprint(col("text")).as("b"),
+        fingerprintHof(col("text")).as("c"))
+      .filter(col("a") =!= col("c") || col("b") =!= col("c")).count()
+
   test("FingerprintExpr == HOF fingerprint on real documents") {
+    assert(fingerprintDiffs(docs) == 0)
+  }
+
+  test("FingerprintExpr == HOF fingerprint on edge documents") {
+    val edges = Seq("", " ", "a  b", " lead", "trail ", "\u00e9 \u00df \u65e5\u672c", "a b c", "c b a")
+      .toDF("text")
+    assert(fingerprintDiffs(edges) == 0)
+  }
+
+  test("native alphaWordCount == HOF filter on real documents and edge tokens") {
     val diff = docs.select(
-        TextExpressions.fingerprint(col("text")).as("a"),
-        TextOps.fingerprint(col("text")).as("b"))
+        TextOps.alphaWordCount(TextOps.tokens(col("text"))).as("a"),
+        alphaWordCountHof(TextOps.tokens(col("text"))).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(diff == 0)
+    // empty tokens from double spaces, words of only é/ß, digits and
+    // '#', letters next to them, a null element and a null array
+    val edges = Seq[(Long, Seq[String])](
+      (0L, "a  b  ".split(" ", -1).toSeq),
+      (1L, Seq("\u00e9", "\u00df", "\u00e9\u00df", "\u00c9t\u00e9")),
+      (2L, Seq("123", "#", "##", "4#", "#a", "z9", "@", "[", "`", "{")),
+      (3L, Seq("x", null, "Q")),
+      (4L, Seq.empty[String]),
+      (5L, null)).toDF("id", "ws")
+    val got = edges.select(col("id"), TextOps.alphaWordCount(col("ws")).as("a"),
+        alphaWordCountHof(col("ws")).as("b"))
+      .collect().map(r => r.getLong(0) -> (Option(r.get(1)), Option(r.get(2)))).toMap
+    got.values.foreach { case (a, b) => assert(a == b) }
+    assert(got.map { case (id, (a, _)) => id -> a } == Map(
+      0L -> Some(2L), 1L -> Some(1L), 2L -> Some(2L), 3L -> Some(2L), 4L -> Some(0L), 5L -> None))
   }
 
   test("MinHashSigExpr == explode+min over portable shingles") {
-    // reference: min over TextOps.permHash(i, shingle-key) per doc
-    val sh = docs.select(col("doc_id"), explode(TextOps.shingles(col("text"), 3)).as("h"))
-    val ref = sh.groupBy("doc_id")
-      .agg((0 until 16).map(i => min(TextOps.permHash(i, col("h"))).as(s"s$i")).head,
-        (0 until 16).map(i => min(TextOps.permHash(i, col("h"))).as(s"s$i")).tail: _*)
-      .select(col("doc_id"), array((0 until 16).map(i => col(s"s$i")): _*).as("sig"))
-    val fast = docs.select(col("doc_id"),
-      TextExpressions.minHashSig(col("text"), 3, 16).as("sig"))
-    val joined = ref.join(fast.withColumnRenamed("sig", "sig2"), "doc_id")
-    assert(joined.filter(not(col("sig") === col("sig2"))).count() == 0)
-    assert(ref.count() == fast.count())
+    val ref = minHashRef(docs, 3, 16)
+    val fast = minHashFast(docs, 3, 16)
+    assert(ref.nonEmpty && fast == ref)
+  }
+
+  test("MinHashSigExpr == explode+min on edge documents") {
+    // a repeated shingle, multi-byte UTF-8 tokens, exactly k and k-1
+    // tokens, leading/trailing/double spaces (empty tokens)
+    val edge = Seq(
+      "a b a b a b a b", "x y z x y z x y z",
+      "\u00e9t\u00e9 \u00df \u65e5\u672c\u8a9e \u00fc \u00e9t\u00e9 \u00df \u65e5\u672c\u8a9e",
+      "one two three", "one two", " lead a b", "trail a b ", "a  b c", "  ")
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    for (k <- Seq(3, 5)) {
+      val ref = minHashRef(edge, k, 16)
+      val fast = minHashFast(edge, k, 16)
+      // docs under k tokens: no reference row, an empty signature
+      assert(fast.filter(_._2.nonEmpty) == ref)
+      assert(fast.values.forall(s => s.isEmpty || s.size == 16))
+    }
+  }
+
+  test("text kernels plan without interpreted higher-order functions") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayFilter, ArrayTransform}
+    def hofs(df: DataFrame) = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(
+      _.collect { case e @ (_: ArrayAggregate | _: ArrayTransform | _: ArrayFilter) => e }))
+    val native = docs.select(
+      TextOps.fingerprint(col("text")),
+      TextOps.alphaWordCount(TextOps.tokens(col("text"))),
+      TextExpressions.minHashSig(col("text"), 5, 64))
+    assert(hofs(native).isEmpty, native.queryExecution.optimizedPlan)
+    // the check sees the lambdas of the references
+    assert(hofs(docs.select(fingerprintHof(col("text")),
+      alphaWordCountHof(TextOps.tokens(col("text"))))).size == 3)
   }
 
   test("RepetitionStatsExpr == explode+count aggregate chain, incl. edge docs") {

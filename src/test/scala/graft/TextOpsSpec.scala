@@ -137,12 +137,23 @@ class TextOpsSpec extends SparkSpec {
     val corpus = Seq(
       (1L, nearCopy),
       (2L, (0 until 30).map(i => s"u$i").mkString(" "))).toDF("id", "text")
-    val out = Dedup.fuzzyContamination(corpus, eval_, col("id"), col("text"),
-      k = 3, numPerms = 16, bands = 4, minMatch = 6).collect()
+    def fuzzy() = Dedup.fuzzyContamination(corpus, eval_, col("id"), col("text"),
+      k = 3, numPerms = 16, bands = 4, minMatch = 6)
+    val out = fuzzy().collect()
     assert(out.map(_.getLong(0)).toSet == Set(1L))
     val r = out.head
     assert(r.getLong(1) == 100L)
     assert(r.getLong(r.fieldIndex("n_match")) >= 6L)
+    // the eval bands join through Curation.modelJoin: broadcast while
+    // small, a shuffle join past autoBroadcastJoinThreshold, same rows
+    assert(fuzzy().queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val df = fuzzy()
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"), plan)
+      assert(!plan.contains("BroadcastHashJoin"), plan)
+      assert(df.collect().toSet == out.toSet)
+    }
   }
 
   test("bloomContamination equals the exact audit and prefilters map-side") {
